@@ -23,7 +23,8 @@ Mapping of that primitive per store:
 
 The OCC protocol above the seam is backend-agnostic: a ``False`` from
 ``put_if_absent`` means another writer won that generation; the store
-re-reads fresh state and retries (store.py:_mutate). The race tests in
+re-reads fresh state and retries (store.py:PotStore._commit, the one
+commit loop every write goes through). The race tests in
 tests/test_kv_multiprocess.py parameterize over backends to pin that
 the protocol — not the local-FS primitive — carries the guarantee.
 """

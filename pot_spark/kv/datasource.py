@@ -140,21 +140,7 @@ class PotReaderNoPushdown(DataSourceReader):
             if gen is not None
             else store._latest_manifest(path)
         )
-        self._files: list[str] = []
-        if manifest is not None:
-            if manifest.files is not None:
-                for rel in manifest.files.values():
-                    d = store._snapshot_path(path, rel)
-                    try:
-                        self._files.extend(store._parquet_parts(d))
-                    except FileNotFoundError:
-                        pass  # empty bucket dir (marker-only)
-            else:
-                snap = store._snapshot_path(path, manifest.snapshot)
-                if store._fs.isdir(snap):
-                    self._files.extend(store._parquet_parts(snap))
-                else:
-                    self._files.append(snap)
+        self._files = [] if manifest is None else store._parts(path, manifest)
         self._keys: list[str] | None = None  # pushed key-equality filter
 
     def partitions(self) -> list[_FilePartition]:

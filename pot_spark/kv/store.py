@@ -27,27 +27,36 @@ Semantics mirror the reference exactly (citations against
 Storage model (the Spark-first replacement for one whole-rewritten
 data.json object per pot, server.go:212-214, 396-400):
 
-    <root>/<path>/_pot/commits/<generation>.json   -- manifest, O_EXCL
-    <root>/<path>/_pot/snap-<generation>-<nonce>/  -- parquet snapshot
+    <root>/<path>/_pot/commits/<generation>.json   -- manifest, put-if-absent
+    <root>/<path>/_pot/snap-<generation>-<nonce>/  -- parquet snapshot dir
 
-The commit record is the commit point: writers stage a full snapshot,
-then publish with a put-if-absent manifest create. Losers re-read fresh
-state and retry (optimistic concurrency; the Delta-Lake-style protocol
-replaces the reference's GCS generation preconditions, server.go:670-702).
-The primitive is pluggable (kv/backend.py): LocalFSBackend (staged write
-+ fsync + os.link) by default, or a conditional-put object-store backend
-(GCS `if_generation_match=0` / S3+ABS `If-None-Match: *`) — the same
+Every write — upsert, remove, bulk DataFrame upsert, restore, clone,
+compact — goes through ONE optimistic commit loop (`_commit`): under the
+per-path lock it reads the head manifest, lets the caller's stage
+callable write a snapshot under a fresh name, and publishes generation
+head+1 with a put-if-absent manifest create. A loser deletes its stage,
+re-reads fresh state and retries; a winner re-stages its snapshot if a
+cross-process vacuum reclaimed it before the publish. This is the
+Delta-Lake-style protocol that replaces the reference's GCS generation
+preconditions (server.go:670-702). The primitive is pluggable
+(kv/backend.py): LocalFSBackend (staged write + fsync + os.link) by
+default, or a conditional-put object-store backend (GCS
+`if_generation_match=0` / S3+ABS `If-None-Match: *`) — the same
 primitive the reference uses for its .potlock. Generation numbers are
 the manifest versions (server.go:405).
 
-Data plane: per-doc dict APIs write/read snapshots via pyarrow (a pot
-mutation is a metadata-scale operation; spinning a Spark job per PUT
-would add nothing), while `create_df`/`get_df` move bulk data through
-Spark DataFrames — both produce the identical (key, doc) parquet layout,
-so a pot written by either path is readable by both. At 100 TB a pot is
-a table: bulk upserts go through `create_df` (left_anti + union, one
-shuffle on key), and `get_typed` projects the JSON documents to a typed
-DataFrame for the relational layer.
+Data plane: a manifest names either one snapshot dir or, on the
+bucketed layout, one dir per key-hash bucket (possibly inherited from
+earlier generations). `_parts` resolves either form to the parquet
+files to read, and every reader — the per-doc dict APIs (pyarrow; a pot
+mutation is a metadata-scale operation, a Spark job per PUT would add
+nothing), `get_df` and the "pot" DataSource — reads exactly that list.
+Both writers produce the identical (key, doc) parquet layout, so a pot
+written by either path is readable by both. At 100 TB a pot is a table:
+bulk upserts go through `create_df` (left_anti + union, one shuffle on
+key) or `create_df_bucketed` (only touched buckets rewritten), and
+`get_typed` projects the JSON documents to a typed DataFrame for the
+relational layer.
 """
 
 from __future__ import annotations
@@ -57,6 +66,7 @@ import logging
 import threading
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterable, Optional
 
@@ -171,6 +181,8 @@ class StoreMetrics:
 
 @dataclass
 class _Manifest:
+    """One commit record; `encode`/`decode` are its only wire codec."""
+
     generation: int
     committed_at: float
     snapshot: str
@@ -179,6 +191,57 @@ class _Manifest:
     # untouched by a commit keep pointing at earlier snapshots' files
     # (Delta-style file reuse -> O(delta) mutations, not O(table))
     files: Optional[dict[str, str]] = None
+
+    def encode(self) -> bytes:
+        record = {
+            "generation": self.generation,
+            "committed_at": self.committed_at,
+            "snapshot": self.snapshot,
+            "n_keys": self.n_keys,
+        }
+        if self.files is not None:
+            record["files"] = self.files
+        return json.dumps(record).encode()
+
+    @classmethod
+    def decode(cls, data: bytes) -> "_Manifest":
+        m = json.loads(data)
+        return cls(
+            generation=m["generation"],
+            committed_at=m["committed_at"],
+            snapshot=m["snapshot"],
+            n_keys=m["n_keys"],
+            files=m.get("files"),
+        )
+
+    def snapshot_dirs(self) -> set[str]:
+        """The top-level snapshot dirs this manifest references (bucket
+        entries look like "<snapdir>/__b=<k>")."""
+        dirs = {self.snapshot}
+        if self.files is not None:
+            dirs.update(rel.split("/", 1)[0] for rel in self.files.values())
+        return dirs
+
+
+@dataclass
+class _Stage:
+    """What one attempt of the commit loop publishes: the manifest's
+    snapshot fields, and how to rewrite the staged data if a
+    cross-process vacuum reclaims it before the publish lands (None when
+    the attempt staged nothing, e.g. a metadata-only restore)."""
+
+    snapshot: str
+    n_keys: int
+    files: Optional[dict[str, str]] = None
+    restage: Optional[Callable[[], None]] = None
+
+
+def _manifest_name(generation: int) -> str:
+    return f"{generation:020d}.json"
+
+
+def _bucket_of(n_buckets: int):
+    return F.pmod(F.hash("key"), F.lit(n_buckets)).cast("int")
 
 
 def derive_key(doc: dict[str, Any]) -> str:
@@ -279,23 +342,29 @@ class PotStore:
 
     # -- manifest I/O --------------------------------------------------------
 
-    def _latest_manifest(self, path: str) -> Optional[_Manifest]:
+    def _commits(self, path: str) -> tuple[str, list[str]]:
+        """(commits dir, its manifest names oldest first); a pot that
+        never committed has none."""
         commits = self._fs.join(self._pot_dir(path), _COMMITS)
         try:
-            names = [n for n in self._fs.listdir(commits) if n.endswith(".json")]
+            names = self._fs.listdir(commits)
+        except FileNotFoundError:
+            return commits, []
+        return commits, sorted(n for n in names if n.endswith(".json"))
+
+    def _read_manifest(self, commits: str, name: str) -> _Manifest:
+        return _Manifest.decode(self._fs.read_bytes(self._fs.join(commits, name)))
+
+    def _latest_manifest(self, path: str) -> Optional[_Manifest]:
+        commits, names = self._commits(path)
+        return self._read_manifest(commits, names[-1]) if names else None
+
+    def _manifest_at(self, path: str, generation: int) -> Optional[_Manifest]:
+        commits = self._fs.join(self._pot_dir(path), _COMMITS)
+        try:
+            return self._read_manifest(commits, _manifest_name(generation))
         except FileNotFoundError:
             return None
-        if not names:
-            return None
-        latest = max(names)
-        m = json.loads(self._fs.read_bytes(self._fs.join(commits, latest)))
-        return _Manifest(
-            generation=m["generation"],
-            committed_at=m["committed_at"],
-            snapshot=m["snapshot"],
-            n_keys=m["n_keys"],
-            files=m.get("files"),
-        )
 
     def _try_commit(self, path: str, manifest: _Manifest) -> bool:
         """Put-if-absent publish of a FULLY WRITTEN manifest — the commit
@@ -309,104 +378,68 @@ class PotStore:
         object-store backends use the conditional put the reference
         itself relies on (GCS if_generation_match=0, server.go:670-702).
         """
-        commits = self._fs.join(self._pot_dir(path), _COMMITS)
-        target = self._fs.join(commits, f"{manifest.generation:020d}.json")
-        record = {
-            "generation": manifest.generation,
-            "committed_at": manifest.committed_at,
-            "snapshot": manifest.snapshot,
-            "n_keys": manifest.n_keys,
-        }
-        if manifest.files is not None:
-            record["files"] = manifest.files
-        return self.backend.put_if_absent(target, json.dumps(record).encode())
+        target = self._fs.join(
+            self._pot_dir(path), _COMMITS, _manifest_name(manifest.generation)
+        )
+        return self.backend.put_if_absent(target, manifest.encode())
 
     # -- snapshot I/O (pyarrow fast path; layout identical to Spark's) ------
 
     def _snapshot_path(self, path: str, name: str) -> str:
         return self._fs.join(self._pot_dir(path), name)
 
-    def _parquet_parts(self, d: str) -> list[str]:
-        return sorted(
-            self._fs.join(d, n)
-            for n in self._fs.listdir(d)
-            if n.endswith(".parquet")
-        )
+    def _parts(
+        self,
+        path: str,
+        manifest: _Manifest,
+        buckets: Optional[Iterable[Any]] = None,
+    ) -> list[str]:
+        """The parquet files holding `manifest`'s content (only the given
+        buckets' files when `buckets` is set on a bucketed manifest) —
+        the one resolver every reader uses, one listdir per dir.
 
-    def _vacuum_guard(self, manifest: _Manifest, path: str) -> None:
-        """Raise a CLEAR error when a retained manifest's snapshot data
-        was reclaimed by vacuum — a raw FileNotFoundError out of a
-        parquet read reads as corruption, not lifecycle (`restore` has
-        always had this guard; time travel and the change feed need the
-        same one)."""
-        dirs = (
-            {rel.split("/", 1)[0] for rel in manifest.files.values()}
-            if manifest.files is not None
-            else {manifest.snapshot}
-        )
-        for d in dirs:
-            if not self._fs.exists(self._snapshot_path(path, d)):
-                raise ValueError(
-                    f"generation {manifest.generation} of {path!r} was vacuumed"
-                )
+        A missing snapshot dir means vacuum reclaimed it: raise a CLEAR
+        lifecycle error, since a raw FileNotFoundError out of a parquet
+        read reads as corruption. A missing bucket subdir of a present
+        snapshot is an empty bucket (stores without empty dirs keep
+        nothing for it)."""
+        if manifest.files is None:
+            rels = [manifest.snapshot]
+        else:
+            keys = manifest.files if buckets is None else map(str, buckets)
+            rels = [manifest.files[b] for b in keys]
+        parts: list[str] = []
+        for rel in rels:
+            d = self._snapshot_path(path, rel)
+            try:
+                names = self._fs.listdir(d)
+            except FileNotFoundError:
+                if manifest.files is None or not self._fs.isdir(
+                    self._snapshot_path(path, rel.rsplit("/", 1)[0])
+                ):
+                    raise ValueError(
+                        f"generation {manifest.generation} of {path!r} was vacuumed"
+                    ) from None
+                continue
+            # Spark snapshots carry _SUCCESS/.crc sidecars; read only parts
+            parts.extend(
+                sorted(self._fs.join(d, n) for n in names if n.endswith(".parquet"))
+            )
+        return parts
+
+    def _read_table(self, parts: list[str]) -> pa.Table:
+        tables = [self._fs.read_parquet(p, _ARROW_SCHEMA) for p in parts]
+        return pa.concat_tables(tables) if tables else _ARROW_SCHEMA.empty_table()
 
     def _read_content(self, manifest: Optional[_Manifest], path: str) -> dict[str, Any]:
         if manifest is None:
             return {}
-        self._vacuum_guard(manifest, path)
-        if manifest.files is not None:
-            parts: list[str] = []
-            for rel in manifest.files.values():
-                try:
-                    parts.extend(
-                        self._parquet_parts(self._snapshot_path(path, rel))
-                    )
-                except FileNotFoundError:
-                    # an EMPTY bucket dir on an object store has only its
-                    # marker: no parquet parts to read
-                    pass
-            table = (
-                pa.concat_tables(
-                    [self._fs.read_parquet(p, _ARROW_SCHEMA) for p in parts]
-                )
-                if parts
-                else _ARROW_SCHEMA.empty_table()
-            )
-            keys = table.column("key").to_pylist()
-            docs = table.column("doc").to_pylist()
-            return {k: json.loads(d) for k, d in zip(keys, docs)}
-        snap = self._snapshot_path(path, manifest.snapshot)
-        if self._fs.isdir(snap):
-            # Spark snapshots carry _SUCCESS markers; read only the parts
-            parts = self._parquet_parts(snap)
-            table = pa.concat_tables(
-                [self._fs.read_parquet(p, _ARROW_SCHEMA) for p in parts]
-            ) if parts else _ARROW_SCHEMA.empty_table()
-        else:
-            table = self._fs.read_parquet(snap, _ARROW_SCHEMA)
+        table = self._read_table(self._parts(path, manifest))
         keys = table.column("key").to_pylist()
         docs = table.column("doc").to_pylist()
         return {k: json.loads(d) for k, d in zip(keys, docs)}
 
-    def _write_snapshot(self, path: str, generation: int, content: dict[str, Any]) -> str:
-        if getattr(self.backend, "read_only", False):
-            # fail BEFORE staging: a read-only replica that merely
-            # refused at the commit point would still have littered the
-            # source namespace with a snapshot dir + parquet
-            raise RuntimeError(
-                f"read-only store: refusing to write snapshot for {path!r}"
-            )
-        name = f"snap-{generation:020d}-{uuid.uuid4().hex[:8]}"
-        self._write_snapshot_named(path, name, content)
-        return name
-
-    def _write_snapshot_named(
-        self, path: str, name: str, content: dict[str, Any]
-    ) -> None:
-        """Stage `content` at an EXPLICIT snapshot name. Split from
-        _write_snapshot so the post-publish restage repair
-        (_restage_if_vacuumed) can rewrite the exact name a winning
-        manifest already references."""
+    def _write_snapshot(self, path: str, name: str, content: dict[str, Any]) -> None:
         snap_dir = self._snapshot_path(path, name)
         self._fs.makedirs(snap_dir)
         keys = sorted(content)
@@ -482,21 +515,6 @@ class PotStore:
             self.generation_cache[path] = manifest.generation
         return self._read_content(manifest, path)
 
-    def _manifest_at(self, path: str, generation: int) -> Optional[_Manifest]:
-        commits = self._fs.join(self._pot_dir(path), _COMMITS)
-        target = self._fs.join(commits, f"{generation:020d}.json")
-        try:
-            m = json.loads(self._fs.read_bytes(target))
-        except FileNotFoundError:
-            return None
-        return _Manifest(
-            generation=m["generation"],
-            committed_at=m["committed_at"],
-            snapshot=m["snapshot"],
-            n_keys=m["n_keys"],
-            files=m.get("files"),
-        )
-
     def get_at(self, path: str, generation: int) -> dict[str, Any]:
         """Time travel: read the pot as of a past generation (extension
         beyond the reference, whose GCS generations identify but cannot
@@ -507,17 +525,11 @@ class PotStore:
 
     def list_generations(self, path: str) -> list[tuple[int, float]]:
         """All retained (generation, committed_at) pairs, oldest first."""
-        commits = self._fs.join(self._pot_dir(path), _COMMITS)
-        try:
-            names = sorted(
-                n for n in self._fs.listdir(commits) if n.endswith(".json")
-            )
-        except FileNotFoundError:
-            return []
+        commits, names = self._commits(path)
         out = []
         for n in names:
-            m = json.loads(self._fs.read_bytes(self._fs.join(commits, n)))
-            out.append((m["generation"], m["committed_at"]))
+            m = self._read_manifest(commits, n)
+            out.append((m.generation, m.committed_at))
         return out
 
     def create(
@@ -606,7 +618,68 @@ class PotStore:
             dirnames[:] = [d for d in dirnames if d != _POT_DIRNAME]
         return sorted(found)
 
-    # -- mutation core (read -> merge -> stage -> put-if-absent commit) -----
+    # -- the commit loop (lock -> read head -> stage -> put-if-absent) ------
+
+    @contextmanager
+    def _span(self, name: str):
+        """Time the block as one `name` span; a raising block records none."""
+        t = time.perf_counter()
+        yield
+        self.metrics.observe_span(name, time.perf_counter() - t)
+
+    def _commit(
+        self, path: str, stage: Callable[[Optional[_Manifest], str], _Stage]
+    ) -> _Manifest:
+        """The one optimistic-concurrency commit loop every write of a pot
+        goes through. Under the per-path lock, each attempt reads the
+        head manifest, asks ``stage(head, name)`` to stage the next
+        generation's snapshot under the fresh dir name ``name`` (or to
+        reference existing snapshots, writing nothing), and publishes
+        the manifest put-if-absent. A lost race deletes that attempt's
+        stage, re-reads the head and retries; a won one repairs a stage
+        a cross-process vacuum reclaimed before the publish. Stage
+        callables raise to abort (norewrite, a missing restore target)."""
+        if getattr(self.backend, "read_only", False):
+            # fail BEFORE staging: a read-only replica that merely
+            # refused at the commit point would still have littered the
+            # source namespace with a snapshot dir + parquet
+            raise RuntimeError(f"read-only store: refusing to write {path!r}")
+        t_lock = time.perf_counter()
+        with self._local_lock(path):
+            lock_wait = time.perf_counter() - t_lock
+            self.metrics.bump(lock_wait_s=lock_wait, lock_acquisitions=1)
+            self.metrics.observe_span("local_lock", lock_wait)
+            for _ in range(_MAX_COMMIT_RETRIES):
+                head = self._latest_manifest(path)
+                generation = (head.generation if head else 0) + 1
+                name = f"snap-{generation:020d}-{uuid.uuid4().hex[:8]}"
+                staged = stage(head, name)
+                committed = _Manifest(
+                    generation=generation,
+                    committed_at=time.time(),
+                    snapshot=staged.snapshot,
+                    n_keys=staged.n_keys,
+                    files=staged.files,
+                )
+                with self._span("commit"):
+                    won = self._try_commit(path, committed)
+                if won:
+                    if staged.restage is not None:
+                        self._restage_if_vacuumed(path, committed, staged.restage)
+                    self.generation_cache[path] = generation
+                    return committed
+                # lost the race: discard this attempt's stage, re-read, retry
+                self._fs.rmtree(self._snapshot_path(path, name))
+        raise CommitConflict(f"commit contention on {path!r} exceeded retries")
+
+    def _commit_mutation(
+        self, path: str, stage: Callable[[Optional[_Manifest], str], _Stage]
+    ) -> _Manifest:
+        """A data mutation: one `_commit`, counted in `writes` and timed
+        as the reference's whole-call `create` span (server.go:273-313)."""
+        self.metrics.bump(writes=1)
+        with self._span("create"):
+            return self._commit(path, stage)
 
     def _mutate(
         self,
@@ -620,95 +693,58 @@ class PotStore:
         replace: bool = False,
         require_generation: Optional[int] = None,
     ) -> CreateResponse:
-        lock = self._local_lock(path)
-        t_total = time.perf_counter()
-        with lock:
-            lock_wait = time.perf_counter() - t_total
-            self.metrics.bump(
-                lock_wait_s=lock_wait, lock_acquisitions=1, writes=1
-            )
-            self.metrics.observe_span("local_lock", lock_wait)
-            for _ in range(_MAX_COMMIT_RETRIES):
-                t_phase = time.perf_counter()
-                manifest = self._latest_manifest(path)
-                content = self._read_content(manifest, path)
-                self.metrics.observe_span("read", time.perf_counter() - t_phase)
+        """Dict-plane read -> merge -> stage of a whole snapshot."""
 
-                if require_generation is not None and (
-                    manifest is None or manifest.generation != require_generation
-                ):
-                    raise NoRewriteViolated(
-                        "conditional mutation lost: pot is at generation "
-                        f"{manifest.generation if manifest else 0}, "
-                        f"required {require_generation}"
-                    )
-
-                if new_docs and manifest is not None:
-                    allow = self._allow_rewrite(
-                        manifest, norewrite, norewrite_duration, last_known_generation
-                    )
-                    for k in new_docs:
-                        if k in content and not allow:
-                            # fail before any write: all-or-nothing
-                            raise NoRewriteViolated(f"no-rewrite violated: {k}")
-
-                merged = {} if replace else dict(content)
-                for k in remove_keys:
-                    merged.pop(k, None)
-                merged.update(new_docs)
-
-                next_gen = (manifest.generation if manifest else 0) + 1
-                t_phase = time.perf_counter()
-                snapshot = self._write_snapshot(path, next_gen, merged)
-                self.metrics.observe_span("write", time.perf_counter() - t_phase)
-                committed = _Manifest(
-                    generation=next_gen,
-                    committed_at=time.time(),
-                    snapshot=snapshot,
-                    n_keys=len(merged),
+        def stage(head: Optional[_Manifest], name: str) -> _Stage:
+            with self._span("read"):
+                content = self._read_content(head, path)
+            if require_generation is not None and (
+                head is None or head.generation != require_generation
+            ):
+                raise NoRewriteViolated(
+                    "conditional mutation lost: pot is at generation "
+                    f"{head.generation if head else 0}, "
+                    f"required {require_generation}"
                 )
-                t_phase = time.perf_counter()
-                won = self._try_commit(path, committed)
-                self.metrics.observe_span("commit", time.perf_counter() - t_phase)
-                if won:
-                    self._restage_if_vacuumed(
-                        path,
-                        committed,
-                        lambda: self._write_snapshot_named(path, snapshot, merged),
-                    )
-                    self.generation_cache[path] = next_gen
-                    self.metrics.observe_span(
-                        "create", time.perf_counter() - t_total
-                    )
-                    return CreateResponse(content=new_docs, generation=next_gen)
-                # lost the race: discard the staged snapshot, re-read, retry
-                self._fs.rmtree(self._snapshot_path(path, snapshot))
-        raise CommitConflict(f"commit contention on {path!r} exceeded retries")
+            if new_docs and head is not None and not self._allow_rewrite(
+                head, norewrite, norewrite_duration, last_known_generation
+            ):
+                for k in new_docs:
+                    if k in content:
+                        # fail before any write: all-or-nothing
+                        raise NoRewriteViolated(f"no-rewrite violated: {k}")
+            merged = {} if replace else dict(content)
+            for k in remove_keys:
+                merged.pop(k, None)
+            merged.update(new_docs)
+
+            def write() -> None:
+                self._write_snapshot(path, name, merged)
+
+            with self._span("write"):
+                write()
+            return _Stage(name, len(merged), restage=write)
+
+        committed = self._commit_mutation(path, stage)
+        return CreateResponse(content=new_docs, generation=committed.generation)
 
     # -- Spark data plane ----------------------------------------------------
 
-    def _spark_read_parquet(self, dirs: list[str]) -> DataFrame:
-        """Read snapshot dirs as a DataFrame. When the data-plane fs
-        reports Spark-readable URLs (local paths, or a connector-backed
+    def _spark_read_parquet(self, parts: list[str]) -> DataFrame:
+        """Read snapshot parquet files as a DataFrame. When the data-plane
+        fs reports Spark-readable URLs (local paths, or a connector-backed
         gs://... prefix) this is a plain distributed parquet scan — the
         100 TB path. A connector-less object-store fs streams the parts
         through the fs client on the driver instead (the reference's
         own SDK posture, server.go:468-491: it too streams whole
         objects through the driver-side SDK)."""
-        assert self.spark is not None
-        urls = [self._fs.spark_url(d) for d in dirs]
+        assert self.spark is not None, "PotStore needs a SparkSession for DataFrame APIs"
+        if not parts:
+            return self.spark.createDataFrame([], schema=DOC_SCHEMA)
+        urls = [self._fs.spark_url(p) for p in parts]
         if all(u is not None for u in urls):
             return self.spark.read.schema(DOC_SCHEMA).parquet(*urls)
-        tables = []
-        for d in dirs:
-            try:
-                parts = self._parquet_parts(d)
-            except FileNotFoundError:
-                parts = []
-            tables.extend(self._fs.read_parquet(p, _ARROW_SCHEMA) for p in parts)
-        table = (
-            pa.concat_tables(tables) if tables else _ARROW_SCHEMA.empty_table()
-        )
+        table = self._read_table(parts)
         return self.spark.createDataFrame(table.to_pandas(), schema=DOC_SCHEMA)
 
     def _spark_write_parquet(
@@ -738,6 +774,20 @@ class PotStore:
         finally:
             _shutil.rmtree(tmp, ignore_errors=True)
 
+    def _write_bucketed(
+        self, df: DataFrame, snap_dir: str, n_buckets: int, buckets: Iterable[int]
+    ) -> None:
+        """The one bucketed writer: hash DataFrame[key, doc] into
+        n_buckets and write ``snap_dir/__b=<k>/`` with each bucket routed
+        to one task (one file per bucket dir, not one per task — the
+        small-file hygiene the compactor otherwise pays). Every bucket in
+        ``buckets`` gets a dir even when it holds no rows, so the
+        manifest entry pointing at it never dangles."""
+        df = df.withColumn("__b", _bucket_of(n_buckets))
+        self._spark_write_parquet(df.repartition("__b"), snap_dir, partition_by="__b")
+        for b in buckets:
+            self._fs.makedirs(self._fs.join(snap_dir, f"__b={b}"))
+
     def get_df(self, path: str) -> DataFrame:
         """The pot as a DataFrame[key string, doc string]; missing pot =>
         empty DataFrame with the same schema."""
@@ -749,17 +799,11 @@ class PotStore:
         return self._df_of(path, self._manifest_at(path, generation))
 
     def _df_of(self, path: str, manifest: Optional[_Manifest]) -> DataFrame:
-        assert self.spark is not None, "PotStore needs a SparkSession for DataFrame APIs"
-        if manifest is None:
-            return self.spark.createDataFrame([], schema=DOC_SCHEMA)
-        # fail at plan time with the lifecycle error, not at action time
-        # with a parquet path error
-        self._vacuum_guard(manifest, path)
-        if manifest.files is not None:
-            dirs = [self._snapshot_path(path, rel) for rel in manifest.files.values()]
-            return self._spark_read_parquet(dirs)
-        snap = self._snapshot_path(path, manifest.snapshot)
-        return self._spark_read_parquet([snap])
+        # resolving the parts here fails at plan time with the lifecycle
+        # error, not at action time with a parquet path error
+        return self._spark_read_parquet(
+            [] if manifest is None else self._parts(path, manifest)
+        )
 
     def changes_df(
         self,
@@ -778,7 +822,6 @@ class PotStore:
         PRUNED before any read: a key always hashes to the same bucket,
         so an untouched bucket cannot contribute a change — the diff cost
         is O(changed buckets), mirroring the O(delta) write path."""
-        assert self.spark is not None, "PotStore needs a SparkSession for DataFrame APIs"
         m_old = self._manifest_at(path, from_generation)
         m_new = (
             self._latest_manifest(path)
@@ -793,11 +836,8 @@ class PotStore:
             and set(m_old.files) == set(m_new.files)
         ):
             changed = [b for b in m_new.files if m_old.files[b] != m_new.files[b]]
-            old_dirs = [self._snapshot_path(path, m_old.files[b]) for b in changed]
-            new_dirs = [self._snapshot_path(path, m_new.files[b]) for b in changed]
-            empty = self.spark.createDataFrame([], schema=DOC_SCHEMA)
-            old_df = self._spark_read_parquet(old_dirs) if old_dirs else empty
-            new_df = self._spark_read_parquet(new_dirs) if new_dirs else empty
+            old_df = self._spark_read_parquet(self._parts(path, m_old, changed))
+            new_df = self._spark_read_parquet(self._parts(path, m_new, changed))
         else:
             old_df = self._df_of(path, m_old)
             new_df = self._df_of(path, m_new)
@@ -868,56 +908,28 @@ class PotStore:
         care WHICH duplicate wins must pre-aggregate deterministically."""
         assert self.spark is not None, "PotStore needs a SparkSession for DataFrame APIs"
         new_df = new_df.dropDuplicates(["key"])
-        lock = self._local_lock(path)
-        t_lock = time.perf_counter()
-        with lock:
-            lock_wait = time.perf_counter() - t_lock
-            self.metrics.bump(
-                lock_wait_s=lock_wait, lock_acquisitions=1, writes=1
-            )
-            self.metrics.observe_span("local_lock", lock_wait)
-            for _ in range(_MAX_COMMIT_RETRIES):
-                manifest = self._latest_manifest(path)
-                old = self.get_df(path)
-                if norewrite and manifest is not None:
-                    allow = self._allow_rewrite(
-                        manifest, norewrite, norewrite_duration, generation
+
+        def stage(head: Optional[_Manifest], name: str) -> _Stage:
+            old = self._df_of(path, head)
+            if head is not None and not self._allow_rewrite(
+                head, norewrite, norewrite_duration, generation
+            ):
+                conflict = new_df.join(old, "key", "left_semi").limit(1).collect()
+                if conflict:
+                    raise NoRewriteViolated(
+                        f"no-rewrite violated: {conflict[0]['key']}"
                     )
-                    if not allow:
-                        conflict = (
-                            new_df.join(old, "key", "left_semi").limit(1).collect()
-                        )
-                        if conflict:
-                            raise NoRewriteViolated(
-                                f"no-rewrite violated: {conflict[0]['key']}"
-                            )
-                merged = old.join(new_df, "key", "left_anti").unionByName(new_df)
-                next_gen = (manifest.generation if manifest else 0) + 1
-                name = f"snap-{next_gen:020d}-{uuid.uuid4().hex[:8]}"
-                snap_dir = self._snapshot_path(path, name)
-                t_phase = time.perf_counter()
+            merged = old.join(new_df, "key", "left_anti").unionByName(new_df)
+            snap_dir = self._snapshot_path(path, name)
+
+            def write() -> None:
                 self._spark_write_parquet(merged, snap_dir)
-                self.metrics.observe_span("write", time.perf_counter() - t_phase)
-                committed = _Manifest(
-                    generation=next_gen,
-                    committed_at=time.time(),
-                    snapshot=name,
-                    n_keys=-1,
-                )
-                t_phase = time.perf_counter()
-                won = self._try_commit(path, committed)
-                self.metrics.observe_span("commit", time.perf_counter() - t_phase)
-                if won:
-                    self._restage_if_vacuumed(
-                        path,
-                        committed,
-                        lambda: self._spark_write_parquet(merged, snap_dir),
-                    )
-                    self.generation_cache[path] = next_gen
-                    self.metrics.observe_span("create", time.perf_counter() - t_lock)
-                    return next_gen
-                self._fs.rmtree(snap_dir)
-        raise CommitConflict(f"commit contention on {path!r} exceeded retries")
+
+            with self._span("write"):
+                write()
+            return _Stage(name, -1, restage=write)
+
+        return self._commit_mutation(path, stage).generation
 
     def create_df_bucketed(
         self, path: str, new_df: DataFrame, *, n_buckets: int = 16
@@ -939,100 +951,34 @@ class PotStore:
         """
         assert self.spark is not None, "PotStore needs a SparkSession for DataFrame APIs"
         new_df = new_df.dropDuplicates(["key"])
-        bucket_of = F.pmod(F.hash("key"), F.lit(n_buckets)).cast("int")
-        lock = self._local_lock(path)
-        t_lock = time.perf_counter()
-        with lock:
-            lock_wait = time.perf_counter() - t_lock
-            self.metrics.bump(
-                lock_wait_s=lock_wait, lock_acquisitions=1, writes=1
-            )
-            self.metrics.observe_span("local_lock", lock_wait)
-            for _ in range(_MAX_COMMIT_RETRIES):
-                manifest = self._latest_manifest(path)
-                prev = (
-                    manifest.files
-                    if manifest is not None
-                    and manifest.files is not None
-                    and len(manifest.files) == n_buckets
-                    else None
-                )
-                delta = new_df.withColumn("__b", bucket_of)
-                if prev is None:
-                    # first bucketed commit (or layout change): re-bucket all
-                    affected = list(range(n_buckets))
-                    old = self.get_df(path) if manifest is not None else None
-                else:
-                    affected = sorted(
-                        r["__b"] for r in delta.select("__b").distinct().collect()
-                    )
-                    dirs = [
-                        self._snapshot_path(path, prev[str(b)]) for b in affected
-                    ]
-                    old = self._spark_read_parquet(dirs) if dirs else None
-                merged = delta.select("key", "doc", "__b")
-                if old is not None:
-                    merged = (
-                        old.join(new_df, "key", "left_anti")
-                        .withColumn("__b", bucket_of)
-                        .unionByName(merged)
-                    )
-                next_gen = (manifest.generation if manifest else 0) + 1
-                name = f"snap-{next_gen:020d}-{uuid.uuid4().hex[:8]}"
-                snap_dir = self._snapshot_path(path, name)
-                # route each bucket to one task: file count per bucket dir stays
-                # 1, not n_tasks (small-file hygiene the compactor otherwise pays)
-                t_phase = time.perf_counter()
-                self._spark_write_parquet(
-                    merged.repartition("__b"), snap_dir, partition_by="__b"
-                )
-                self.metrics.observe_span("write", time.perf_counter() - t_phase)
-                files = {
-                    str(b): (
-                        f"{name}/__b={b}"
-                        if b in affected
-                        and self._fs.isdir(self._fs.join(snap_dir, f"__b={b}"))
-                        else (prev or {}).get(str(b), f"{name}/__b={b}")
-                    )
-                    for b in range(n_buckets)
-                }
-                # an affected bucket can end up empty (all its keys were
-                # new-key-free and anti-joined away is impossible here, but
-                # an empty delta bucket after re-bucket-all is): give it an
-                # empty dir so readers never dangle
-                for b in range(n_buckets):
-                    d = self._snapshot_path(path, files[str(b)])
-                    if not self._fs.isdir(d):
-                        self._fs.makedirs(d)
-                committed = _Manifest(
-                    generation=next_gen,
-                    committed_at=time.time(),
-                    snapshot=name,
-                    n_keys=-1,
-                    files=files,
-                )
-                t_phase = time.perf_counter()
-                won = self._try_commit(path, committed)
-                self.metrics.observe_span("commit", time.perf_counter() - t_phase)
-                if won:
 
-                    def _restage_bucketed(
-                        merged=merged, snap_dir=snap_dir, files=files
-                    ) -> None:
-                        self._spark_write_parquet(
-                            merged.repartition("__b"), snap_dir, partition_by="__b"
-                        )
-                        for b in range(n_buckets):
-                            d = self._snapshot_path(path, files[str(b)])
-                            if not self._fs.isdir(d):
-                                self._fs.makedirs(d)
+        def stage(head: Optional[_Manifest], name: str) -> _Stage:
+            if head is not None and head.files is not None and len(head.files) == n_buckets:
+                affected = sorted(
+                    r["__b"]
+                    for r in new_df.select(_bucket_of(n_buckets).alias("__b"))
+                    .distinct()
+                    .collect()
+                )
+                old = self._spark_read_parquet(self._parts(path, head, affected))
+                files = dict(head.files)
+            else:
+                # first bucketed commit (or layout change): re-bucket all
+                affected = list(range(n_buckets))
+                old = self._df_of(path, head)
+                files = {}
+            files.update({str(b): f"{name}/__b={b}" for b in affected})
+            merged = old.join(new_df, "key", "left_anti").unionByName(new_df)
+            snap_dir = self._snapshot_path(path, name)
 
-                    self._restage_if_vacuumed(path, committed, _restage_bucketed)
-                    self.generation_cache[path] = next_gen
-                    self.metrics.observe_span("create", time.perf_counter() - t_lock)
-                    return next_gen
-                self._fs.rmtree(snap_dir)
-        raise CommitConflict(f"commit contention on {path!r} exceeded retries")
+            def write() -> None:
+                self._write_bucketed(merged, snap_dir, n_buckets, affected)
+
+            with self._span("write"):
+                write()
+            return _Stage(name, -1, files, write)
+
+        return self._commit_mutation(path, stage).generation
 
     # -- maintenance ---------------------------------------------------------
 
@@ -1073,33 +1019,17 @@ class PotStore:
         republish them (server.go:405). Raises ValueError if the target
         generation (or its already-vacuumed snapshot) is gone; returns
         the new generation number."""
-        lock = self._local_lock(path)
-        t_lock = time.perf_counter()
-        with lock:
-            lock_wait = time.perf_counter() - t_lock
-            self.metrics.bump(lock_wait_s=lock_wait, lock_acquisitions=1)
-            self.metrics.observe_span("local_lock", lock_wait)
+
+        def stage(head: Optional[_Manifest], name: str) -> _Stage:
             target = self._manifest_at(path, generation)
             if target is None:
                 raise ValueError(f"generation {generation} not found at {path!r}")
-            # covers the plain snapshot AND every bucket dir a bucketed
-            # manifest carries from older generations
-            self._vacuum_guard(target, path)
-            for _ in range(_MAX_COMMIT_RETRIES):
-                manifest = self._latest_manifest(path)
-                if manifest is None:
-                    raise ValueError(f"pot {path!r} no longer exists")
-                committed = _Manifest(
-                    generation=manifest.generation + 1,
-                    committed_at=time.time(),
-                    snapshot=target.snapshot,
-                    n_keys=target.n_keys,
-                    files=target.files,
-                )
-                if self._try_commit(path, committed):
-                    self.generation_cache[path] = committed.generation
-                    return committed.generation
-        raise CommitConflict(f"commit contention on {path!r} exceeded retries")
+            # the vacuum check covers the plain snapshot AND every bucket
+            # dir a bucketed manifest carries from older generations
+            self._parts(path, target)
+            return _Stage(target.snapshot, target.n_keys, target.files)
+
+        return self._commit(path, stage).generation
 
     def clone(self, src: str, dst: str, deep: bool = False) -> int:
         """Delta-style CLONE of a pot to a new path. Shallow (default):
@@ -1119,66 +1049,46 @@ class PotStore:
         src_m = self._latest_manifest(src)
         if src_m is None:
             raise ValueError(f"pot {src!r} does not exist")
-        lock = self._local_lock(dst)
-        t_lock = time.perf_counter()
-        with lock:
-            lock_wait = time.perf_counter() - t_lock
-            self.metrics.bump(lock_wait_s=lock_wait, lock_acquisitions=1)
-            self.metrics.observe_span("local_lock", lock_wait)
-            dst_dir = self._pot_dir(dst)
-            self._fs.makedirs(dst_dir)
-            for _ in range(_MAX_COMMIT_RETRIES):
-                cur = self._latest_manifest(dst)
-                next_gen = 1 if cur is None else cur.generation + 1
-                if deep:
-                    name = f"snap-{next_gen:020d}-{uuid.uuid4().hex[:8]}"
-                    snap_dir = self._snapshot_path(dst, name)
-                    files: Optional[dict[str, str]] = None
-                    if src_m.files is not None:
-                        self._fs.makedirs(snap_dir)
-                        files = {}
-                        for b, rel in src_m.files.items():
-                            bucket_dst = self._fs.join(snap_dir, f"__b={b}")
-                            try:
-                                self._fs.copytree(
-                                    self._snapshot_path(src, rel), bucket_dst
-                                )
-                            except FileNotFoundError:
-                                # empty bucket dir (marker-only on an
-                                # object store): clone it as empty
-                                self._fs.makedirs(bucket_dst)
-                            files[b] = f"{name}/__b={b}"
-                    else:
-                        self._fs.copytree(
-                            self._snapshot_path(src, src_m.snapshot), snap_dir
-                        )
-                else:
-                    # relative reference into src's pot dir: the commit is
-                    # pure metadata, nothing is read or copied
-                    name = self._fs.relpath(
-                        self._snapshot_path(src, src_m.snapshot), dst_dir
-                    )
-                    files = (
-                        {
-                            b: self._fs.relpath(
-                                self._snapshot_path(src, rel), dst_dir
-                            )
-                            for b, rel in src_m.files.items()
-                        }
-                        if src_m.files is not None
-                        else None
-                    )
-                committed = _Manifest(
-                    generation=next_gen,
-                    committed_at=time.time(),
-                    snapshot=name,
-                    n_keys=src_m.n_keys,
-                    files=files,
+        dst_dir = self._pot_dir(dst)
+
+        def stage(head: Optional[_Manifest], name: str) -> _Stage:
+            if not deep:
+                # relative references into src's pot dir: the commit is
+                # pure metadata, nothing is read or copied
+                def ref(rel: str) -> str:
+                    return self._fs.relpath(self._snapshot_path(src, rel), dst_dir)
+
+                files = (
+                    None
+                    if src_m.files is None
+                    else {b: ref(rel) for b, rel in src_m.files.items()}
                 )
-                if self._try_commit(dst, committed):
-                    self.generation_cache[dst] = committed.generation
-                    return committed.generation
-        raise CommitConflict(f"commit contention on {dst!r} exceeded retries")
+                return _Stage(ref(src_m.snapshot), src_m.n_keys, files)
+            snap_dir = self._snapshot_path(dst, name)
+
+            def copy() -> None:
+                if src_m.files is None:
+                    self._fs.copytree(self._snapshot_path(src, src_m.snapshot), snap_dir)
+                    return
+                self._fs.makedirs(snap_dir)
+                for b, rel in src_m.files.items():
+                    bucket_dst = self._fs.join(snap_dir, f"__b={b}")
+                    try:
+                        self._fs.copytree(self._snapshot_path(src, rel), bucket_dst)
+                    except FileNotFoundError:
+                        # empty bucket dir (marker-only on an object
+                        # store): clone it as empty
+                        self._fs.makedirs(bucket_dst)
+
+            copy()
+            files = (
+                None
+                if src_m.files is None
+                else {b: f"{name}/__b={b}" for b in src_m.files}
+            )
+            return _Stage(name, src_m.n_keys, files, copy)
+
+        return self._commit(dst, stage).generation
 
     def vacuum(self, path: str, grace_s: float = 86400.0) -> int:
         """Remove snapshots not referenced by the latest manifest (loser
@@ -1214,36 +1124,20 @@ class PotStore:
         Snapshots referenced by RETAINED HISTORY manifests (superseded
         committed versions) carry no in-flight risk — their commit is
         final — and are reclaimed immediately regardless of age."""
-        lock = self._local_lock(path)
-        with lock:
-            manifest = self._latest_manifest(path)
-            pot_dir = self._pot_dir(path)
-            if manifest is None or not self._fs.isdir(pot_dir):
+        with self._local_lock(path):
+            commits, names = self._commits(path)
+            if not names:
                 return 0
-            live = {manifest.snapshot}
-            if manifest.files is not None:
-                # bucket paths look like "<snapdir>/__b=<k>"; keep the snapdirs
-                live.update(rel.split("/", 1)[0] for rel in manifest.files.values())
+            live = self._read_manifest(commits, names[-1]).snapshot_dirs()
             # every snapshot any retained commit manifest references:
             # these are finished writes (safe to reclaim when superseded)
-            committed_refs: set[str] = set()
-            commits = self._fs.join(pot_dir, _COMMITS)
-            try:
-                commit_names = self._fs.listdir(commits)
-            except FileNotFoundError:
-                commit_names = []
-            for cname in commit_names:
-                if not cname.endswith(".json"):
-                    continue
+            committed_refs = set(live)
+            for cname in names[:-1]:
                 try:
-                    m = json.loads(
-                        self._fs.read_bytes(self._fs.join(commits, cname))
-                    )
-                except (OSError, ValueError):
+                    committed_refs |= self._read_manifest(commits, cname).snapshot_dirs()
+                except (OSError, ValueError, KeyError):
                     continue
-                committed_refs.add(m.get("snapshot", ""))
-                for rel in (m.get("files") or {}).values():
-                    committed_refs.add(rel.split("/", 1)[0])
+            pot_dir = self._pot_dir(path)
             now = time.time()
             removed = 0
             for name in self._fs.listdir(pot_dir):
@@ -1288,106 +1182,60 @@ class PotStore:
         Content is byte-identical before/after; the commit uses the same
         put-if-absent manifest publish, so concurrent writers just win or
         lose the generation race as usual. Returns the new generation (or
-        the current one unchanged if the pot is missing/empty)."""
-        lock = self._local_lock(path)
-        t_lock = time.perf_counter()
-        with lock:
-            lock_wait = time.perf_counter() - t_lock
-            self.metrics.bump(lock_wait_s=lock_wait, lock_acquisitions=1)
-            self.metrics.observe_span("local_lock", lock_wait)
-            for _ in range(_MAX_COMMIT_RETRIES):
-                manifest = self._latest_manifest(path)
-                if manifest is None:
-                    return 0
-                next_gen = manifest.generation + 1
-                name = f"snap-{next_gen:020d}-{uuid.uuid4().hex[:8]}"
-                snap_dir = self._snapshot_path(path, name)
-                files: Optional[dict[str, str]] = None
-                if self.spark is not None and manifest.files is not None:
-                    # preserve the bucket layout: every bucket rewritten
-                    # under the single new snapshot dir
-                    n_buckets = len(manifest.files)
-                    df = self.get_df(path).withColumn(
-                        "__b", F.pmod(F.hash("key"), F.lit(n_buckets)).cast("int")
-                    )
-                    self._spark_write_parquet(
-                        df.repartition("__b"), snap_dir, partition_by="__b"
-                    )
-                    for b in range(n_buckets):
-                        d = self._fs.join(snap_dir, f"__b={b}")
-                        if not self._fs.isdir(d):
-                            self._fs.makedirs(d)
-                    files = {str(b): f"{name}/__b={b}" for b in range(n_buckets)}
-                elif self.spark is not None:
-                    self._spark_write_parquet(
-                        self.get_df(path).coalesce(1), snap_dir
-                    )
-                else:
-                    name = self._write_snapshot(
-                        path, next_gen, self._read_content(manifest, path)
-                    )
-                    snap_dir = self._snapshot_path(path, name)
-                committed = _Manifest(
-                    generation=next_gen,
-                    committed_at=time.time(),
-                    snapshot=name,
-                    n_keys=manifest.n_keys,
-                    files=files,
-                )
-                if self._try_commit(path, committed):
+        0 if the pot is missing)."""
+        if self._latest_manifest(path) is None:
+            return 0  # a pot never loses its manifests once it has one
 
-                    def _restage_compact(
-                        manifest=manifest,
-                        name=name,
-                        snap_dir=snap_dir,
-                        files=files,
-                    ) -> None:
-                        # re-derive from the OLD manifest (the head has
-                        # already moved to the snapshot being restaged)
-                        if self.spark is not None and files is not None:
-                            n_b = len(files)
-                            df = self._df_of(path, manifest).withColumn(
-                                "__b",
-                                F.pmod(F.hash("key"), F.lit(n_b)).cast("int"),
-                            )
-                            self._spark_write_parquet(
-                                df.repartition("__b"), snap_dir, partition_by="__b"
-                            )
-                            for b in range(n_b):
-                                d = self._fs.join(snap_dir, f"__b={b}")
-                                if not self._fs.isdir(d):
-                                    self._fs.makedirs(d)
-                        elif self.spark is not None:
-                            self._spark_write_parquet(
-                                self._df_of(path, manifest).coalesce(1), snap_dir
-                            )
-                        else:
-                            self._write_snapshot_named(
-                                path, name, self._read_content(manifest, path)
-                            )
+        def stage(head: Optional[_Manifest], name: str) -> _Stage:
+            snap_dir = self._snapshot_path(path, name)
+            files: Optional[dict[str, str]] = None
+            if self.spark is None:
+                content = self._read_content(head, path)
 
-                    # the restage re-derives from the OLD manifest, whose
-                    # superseded-history snapshot vacuum reclaims with NO
-                    # grace — a second vacuum landing between the probe
-                    # and the restage read makes the repair itself raise.
-                    # The commit has already won, so the repair must not
-                    # throw out of it: leave the committed HEAD and log;
-                    # readers get the explicit "was vacuumed" error until
-                    # the next commit (round-12 advice item).
-                    try:
-                        self._restage_if_vacuumed(
-                            path, committed, _restage_compact
-                        )
-                    except (ValueError, FileNotFoundError, OSError) as e:
-                        _LOG.error(
-                            "compact(%r): committed generation %d but the "
-                            "post-publish restage repair could not re-derive "
-                            "the snapshot (old history vacuumed): %s",
-                            path,
-                            next_gen,
-                            e,
-                        )
-                    self.generation_cache[path] = next_gen
-                    return next_gen
-                self._fs.rmtree(snap_dir)
-        raise CommitConflict(f"commit contention on {path!r} exceeded retries")
+                def write() -> None:
+                    self._write_snapshot(path, name, content)
+
+            elif head.files is not None:
+                # preserve the bucket layout: every bucket rewritten
+                # under the single new snapshot dir
+                n_buckets = len(head.files)
+                files = {str(b): f"{name}/__b={b}" for b in range(n_buckets)}
+
+                def write() -> None:
+                    self._write_bucketed(
+                        self._df_of(path, head), snap_dir, n_buckets, range(n_buckets)
+                    )
+
+            else:
+
+                def write() -> None:
+                    self._spark_write_parquet(
+                        self._df_of(path, head).coalesce(1), snap_dir
+                    )
+
+            write()
+
+            def restage() -> None:
+                # a Spark restage re-derives from the OLD head, whose
+                # superseded-history snapshot vacuum reclaims with NO
+                # grace — a second vacuum landing between the probe and
+                # the restage read makes the repair itself raise. The
+                # commit has already won, so the repair must not throw
+                # out of it: leave the committed HEAD and log; readers
+                # get the explicit "was vacuumed" error until the next
+                # commit (round-12 advice item).
+                try:
+                    write()
+                except (ValueError, FileNotFoundError, OSError) as e:
+                    _LOG.error(
+                        "compact(%r): committed generation %d but the "
+                        "post-publish restage repair could not re-derive "
+                        "the snapshot (old history vacuumed): %s",
+                        path,
+                        head.generation + 1,
+                        e,
+                    )
+
+            return _Stage(name, head.n_keys, files, restage)
+
+        return self._commit(path, stage).generation

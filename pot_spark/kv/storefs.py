@@ -133,6 +133,20 @@ class LocalStoreFS:
         shutil.copytree(local_dir, dst)
 
 
+def _read_parquet_buffer(data: bytes, schema: pa.Schema) -> pa.Table:
+    """Decode one in-memory parquet object on the calling thread only.
+    pyarrow's defaults hand the read to its CPU pool (use_threads) and
+    its background I/O pool (pre_buffer); either pool still running at
+    interpreter exit aborts the process with SIGABRT ("terminate called
+    without an active exception"). Measured on 4 vCPUs, a process that
+    reads one 32-row buffer and exits aborted 31/60 times with the
+    defaults, 3/60 with only use_threads=False, 60/200 with only
+    pre_buffer=False, and 0/200 with both off."""
+    return pq.read_table(
+        io.BytesIO(data), schema=schema, use_threads=False, pre_buffer=False
+    )
+
+
 def _iter_local_files(local_dir: str) -> Iterator[tuple[str, str]]:
     """(absolute file, path relative to local_dir) for every data file a
     Spark parquet write leaves behind — skipping _SUCCESS markers and
@@ -286,9 +300,7 @@ class ObjectStoreFS(_PosixPathMixin):
         self.client.delete(self._norm(p))  # missing key: silent no-op
 
     def read_parquet(self, p: str, schema: pa.Schema) -> pa.Table:
-        return pq.read_table(
-            io.BytesIO(self.client.download(self._norm(p))), schema=schema
-        )
+        return _read_parquet_buffer(self.client.download(self._norm(p)), schema)
 
     def write_parquet(self, table: pa.Table, p: str) -> None:
         buf = io.BytesIO()
@@ -418,7 +430,7 @@ class FsspecStoreFS(_PosixPathMixin):
 
     def read_parquet(self, p: str, schema: pa.Schema) -> pa.Table:
         with self.fs.open(self._norm(p), "rb") as f:
-            return pq.read_table(io.BytesIO(f.read()), schema=schema)
+            return _read_parquet_buffer(f.read(), schema)
 
     def write_parquet(self, table: pa.Table, p: str) -> None:
         buf = io.BytesIO()

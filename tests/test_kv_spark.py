@@ -377,3 +377,38 @@ def test_create_df_bucketed_restages_snapshot_reclaimed_before_publish(
     monkeypatch.setattr(store, "_try_commit", orig)
     got = {r["key"]: json.loads(r["doc"]) for r in store.get_df("rsb").collect()}
     assert got == {"a": {"v": 1}, "b": {"v": 2}, "c": {"v": 3}}
+
+
+# -- one commit loop: the Spark-plane entry points survive a lost race ------
+
+
+@pytest.mark.parametrize(
+    "op", ["create_df", "create_df_bucketed", "compact_bucketed", "clone_deep_bucketed"]
+)
+def test_lost_race_commits_exactly_once(spark, store, monkeypatch, op):
+    from tests.test_kv_store import assert_commits_once_after_lost_race
+
+    base = {"a": {"v": 1}, "b": {"v": 2}, "c": {"v": 3}}
+    store.create_df_bucketed("src", _doc_df(spark, base), n_buckets=4)
+    delta = {"b": {"v": 20}, "d": {"v": 4}}
+    path, run, want = {
+        "create_df": (
+            "src",
+            lambda: store.create_df("src", _doc_df(spark, delta)),
+            {**base, **delta},
+        ),
+        "create_df_bucketed": (
+            "src",
+            lambda: store.create_df_bucketed("src", _doc_df(spark, delta), n_buckets=4),
+            {**base, **delta},
+        ),
+        "compact_bucketed": ("src", lambda: store.compact("src"), base),
+        "clone_deep_bucketed": (
+            "dst",
+            lambda: store.clone("src", "dst", deep=True),
+            base,
+        ),
+    }[op]
+    assert_commits_once_after_lost_race(store, monkeypatch, path, run)
+    got = {r["key"]: json.loads(r["doc"]) for r in store.get_df(path).collect()}
+    assert got == want

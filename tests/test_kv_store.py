@@ -821,3 +821,65 @@ def test_compact_restages_snapshot_reclaimed_before_publish(store, monkeypatch):
     store.compact("rc/p")
     monkeypatch.setattr(store, "_try_commit", orig)
     assert set(store.get("rc/p")) == {"a", "b"}
+
+
+# -- one commit loop: every entry point survives a lost publish race --------
+
+
+def assert_commits_once_after_lost_race(store, monkeypatch, path, op) -> None:
+    """Make the next manifest publish lose once (another writer "won"
+    the generation without moving the head), run ``op`` and check the
+    commit loop's contract: the generation advanced by exactly one, the
+    generation cache holds it, and the losing attempt's staged snapshot
+    dir is gone — every ``snap-*`` dir left is referenced by a retained
+    manifest."""
+    import os
+
+    before = store._latest_manifest(path)
+    expected = (before.generation if before else 0) + 1
+    orig = store._try_commit
+    lost = []
+
+    def lose_first(p, manifest):
+        if not lost:
+            lost.append(manifest.generation)
+            return False
+        return orig(p, manifest)
+
+    monkeypatch.setattr(store, "_try_commit", lose_first)
+    gen = op()
+    monkeypatch.setattr(store, "_try_commit", orig)
+
+    assert lost == [expected]
+    assert gen == expected == store._latest_manifest(path).generation
+    assert store.generation_cache[path] == gen
+    referenced = set()
+    for g, _ in store.list_generations(path):
+        m = store._manifest_at(path, g)
+        referenced.add(m.snapshot)
+        referenced.update(rel.split("/", 1)[0] for rel in (m.files or {}).values())
+    pot_dir = store._pot_dir(path)
+    staged = {n for n in os.listdir(pot_dir) if n.startswith("snap-")}
+    assert staged <= referenced, f"unreferenced stages: {staged - referenced}"
+
+
+_LOST_RACE_OPS = {
+    "create": ("src", lambda s: s.create("src", {"id": "c", "v": 3}).generation),
+    "restore": ("src", lambda s: s.restore("src", 1)),
+    "clone_shallow": ("dst", lambda s: s.clone("src", "dst")),
+    "clone_deep": ("dst", lambda s: s.clone("src", "dst", deep=True)),
+    "compact": ("src", lambda s: s.compact("src")),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_LOST_RACE_OPS))
+def test_lost_race_commits_exactly_once(store, monkeypatch, op):
+    store.create("src", {"id": "a", "v": 1})
+    store.create("src", {"id": "b", "v": 2})
+    before = store.get("src")
+    path, run = _LOST_RACE_OPS[op]
+    assert_commits_once_after_lost_race(store, monkeypatch, path, lambda: run(store))
+    if op == "restore":
+        assert store.get(path) == {"a": {"id": "a", "v": 1}}
+    elif op != "create":
+        assert store.get(path) == before

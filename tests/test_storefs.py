@@ -580,3 +580,33 @@ def test_bucket_root_exists_probe_is_bounded(bucket_store_parts):
     # the bounded page really is bounded at the client level too
     assert len(real_list(prefix="", max_results=1)) == 1
     assert len(real_list(prefix="")) >= 5
+
+
+def test_bucket_rooted_request_counts_per_op(bucket_store_parts):
+    """Pin the object-store round trips of the two hot dict-plane ops on
+    a 32-doc bucket-rooted pot, so a later change cannot quietly add a
+    probe back. get = list commits + fetch manifest + list snapshot +
+    fetch parquet (4, 2 lists). create = those 4 + snapshot dir probe
+    and marker + parquet upload + conditional manifest put + the
+    post-publish vacuum check (9, 4 lists)."""
+    client = bucket_store_parts
+    store = _bucket_store(client)
+    store.create_batch("p", {f"k{i:02d}": {"v": i} for i in range(32)})
+
+    calls: dict[str, int] = {}
+    for method in ("upload", "download", "list", "delete", "mtime"):
+        real = getattr(client, method)
+
+        def counted(*a, _real=real, _method=method, **kw):
+            calls[_method] = calls.get(_method, 0) + 1
+            return _real(*a, **kw)
+
+        setattr(client, method, counted)
+
+    for i in range(3):
+        calls.clear()
+        assert len(store.get("p")) == 32 + i
+        assert (sum(calls.values()), calls.get("list")) == (4, 2), calls
+        calls.clear()
+        store.create("p", {"id": f"new{i}"})
+        assert (sum(calls.values()), calls.get("list")) == (9, 4), calls
