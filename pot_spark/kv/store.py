@@ -51,12 +51,17 @@ earlier generations). `_parts` resolves either form to the parquet
 files to read, and every reader — the per-doc dict APIs (pyarrow; a pot
 mutation is a metadata-scale operation, a Spark job per PUT would add
 nothing), `get_df` and the "pot" DataSource — reads exactly that list.
-Both writers produce the identical (key, doc) parquet layout, so a pot
-written by either path is readable by both. At 100 TB a pot is a table:
-bulk upserts go through `create_df` (left_anti + union, one shuffle on
-key) or `create_df_bucketed` (only touched buckets rewritten), and
-`get_typed` projects the JSON documents to a typed DataFrame for the
-relational layer.
+A dict-plane mutation merges on Arrow: it reads the head as a (key, doc)
+table, drops the touched keys with one `is_in` filter, appends the
+request's rows (the only docs it JSON-encodes) and writes one key-sorted
+part through `_write_snapshot`. Untouched docs ride along as their stored
+JSON text and are never decoded, so a write costs parquet I/O plus the
+delta's codec work. Both writers produce the identical (key, doc)
+parquet layout, so a pot written by either path is readable by both. At
+100 TB a pot is a table: bulk upserts go through `create_df` (left_anti
++ union, one shuffle on key) or `create_df_bucketed` (only touched
+buckets rewritten), and `get_typed` projects the JSON documents to a
+typed DataFrame for the relational layer.
 """
 
 from __future__ import annotations
@@ -71,6 +76,7 @@ from dataclasses import dataclass, field
 from typing import Any, Callable, Iterable, Optional
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -439,18 +445,14 @@ class PotStore:
         docs = table.column("doc").to_pylist()
         return {k: json.loads(d) for k, d in zip(keys, docs)}
 
-    def _write_snapshot(self, path: str, name: str, content: dict[str, Any]) -> None:
+    def _write_snapshot(self, path: str, name: str, table: pa.Table) -> None:
+        """The one dict-plane snapshot writer: ``table`` (key, doc) as a
+        single key-sorted part. Doc text is written as given."""
         snap_dir = self._snapshot_path(path, name)
         self._fs.makedirs(snap_dir)
-        keys = sorted(content)
-        table = pa.Table.from_pydict(
-            {
-                "key": keys,
-                "doc": [json.dumps(content[k], sort_keys=True) for k in keys],
-            },
-            schema=_ARROW_SCHEMA,
+        self._fs.write_parquet(
+            table.sort_by("key"), self._fs.join(snap_dir, "part-00000.parquet")
         )
-        self._fs.write_parquet(table, self._fs.join(snap_dir, "part-00000.parquet"))
 
     def _restage_if_vacuumed(
         self, path: str, committed: "_Manifest", restage: Callable[[], None]
@@ -693,11 +695,33 @@ class PotStore:
         replace: bool = False,
         require_generation: Optional[int] = None,
     ) -> CreateResponse:
-        """Dict-plane read -> merge -> stage of a whole snapshot."""
+        """Dict-plane read -> merge -> stage of a whole snapshot, on Arrow.
+
+        Only the request's own docs are encoded (``json.dumps`` with
+        sorted keys); every untouched row is carried as its stored JSON
+        text, byte for byte, so a write costs parquet I/O plus the delta's
+        codec work, not a decode and re-encode of the whole pot. Two
+        consequences: doc text another writer stored in non-canonical
+        form (``create_df``) stays as written, and an unparseable doc
+        under an untouched key no longer fails an unrelated upsert
+        (``get`` still raises on it)."""
+        keys = list(new_docs)
+        added = pa.table(
+            {
+                "key": keys,
+                "doc": [json.dumps(new_docs[k], sort_keys=True) for k in keys],
+            },
+            schema=_ARROW_SCHEMA,
+        )
+        dropped = pa.array([*remove_keys, *keys], pa.string())
 
         def stage(head: Optional[_Manifest], name: str) -> _Stage:
             with self._span("read"):
-                content = self._read_content(head, path)
+                table = (
+                    _ARROW_SCHEMA.empty_table()
+                    if head is None
+                    else self._read_table(self._parts(path, head))
+                )
             if require_generation is not None and (
                 head is None or head.generation != require_generation
             ):
@@ -706,24 +730,29 @@ class PotStore:
                     f"{head.generation if head else 0}, "
                     f"required {require_generation}"
                 )
-            if new_docs and head is not None and not self._allow_rewrite(
+            if keys and head is not None and not self._allow_rewrite(
                 head, norewrite, norewrite_duration, last_known_generation
             ):
-                for k in new_docs:
-                    if k in content:
-                        # fail before any write: all-or-nothing
-                        raise NoRewriteViolated(f"no-rewrite violated: {k}")
-            merged = {} if replace else dict(content)
-            for k in remove_keys:
-                merged.pop(k, None)
-            merged.update(new_docs)
+                # fail before any write on the first taken key in request
+                # order: all-or-nothing
+                taken = pc.is_in(added["key"], value_set=table["key"])
+                first = pc.index(taken, True).as_py()
+                if first >= 0:
+                    raise NoRewriteViolated(f"no-rewrite violated: {keys[first]}")
+            if replace:
+                merged = added
+            else:
+                kept = table.filter(
+                    pc.invert(pc.is_in(table["key"], value_set=dropped))
+                )
+                merged = pa.concat_tables([kept, added])
 
             def write() -> None:
                 self._write_snapshot(path, name, merged)
 
             with self._span("write"):
                 write()
-            return _Stage(name, len(merged), restage=write)
+            return _Stage(name, merged.num_rows, restage=write)
 
         committed = self._commit_mutation(path, stage)
         return CreateResponse(content=new_docs, generation=committed.generation)
@@ -990,9 +1019,9 @@ class PotStore:
         (new_doc None for deletes) — what an incremental consumer replays
         instead of re-reading the whole pot. Extension beyond the
         reference, whose generations can't be diffed (server.go:405).
-        Dict-plane implementation diffs the two snapshots; on the
-        bucketed layout a scale implementation prunes to buckets whose
-        file entries differ between the manifests before reading."""
+        Reads and decodes both snapshots whole, bucketed or not;
+        `changes_df` is the scale path, and it prunes a bucketed pot to
+        the buckets whose file entries differ before reading."""
         old = self._read_content(self._manifest_at(path, from_generation), path)
         if to_generation is None:
             new = self.get(path)
@@ -1190,10 +1219,10 @@ class PotStore:
             snap_dir = self._snapshot_path(path, name)
             files: Optional[dict[str, str]] = None
             if self.spark is None:
-                content = self._read_content(head, path)
+                table = self._read_table(self._parts(path, head))
 
                 def write() -> None:
-                    self._write_snapshot(path, name, content)
+                    self._write_snapshot(path, name, table)
 
             elif head.files is not None:
                 # preserve the bucket layout: every bucket rewritten

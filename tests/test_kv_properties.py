@@ -43,11 +43,12 @@ _op = st.one_of(
 )
 
 
-def _replay_model(store: PotStore, ops, path: str = "p/q") -> None:
+def _replay_model(store: PotStore, ops, path: str = "p/q", check=None) -> None:
     """Drive any op sequence against ``store`` and a plain dict replaying
     the reference's rules; assert state, time travel, and the change
     feed agree after every mutation (shared by the local, HTTP, and
-    bucket-rooted model tests)."""
+    bucket-rooted model tests). ``check(store, path)``, when given, runs
+    after every op too."""
     model: dict = {}
     history = []  # (generation, state) after each mutation
     gen = 0
@@ -74,6 +75,8 @@ def _replay_model(store: PotStore, ops, path: str = "p/q") -> None:
                 model.pop(k, None)
             gen += 1
         assert store.get(path) == model
+        if check is not None:
+            check(store, path)
         history.append((gen, dict(model)))
     # time travel reproduces every intermediate state, including
     # states rolled back over by restore
@@ -95,12 +98,23 @@ def _replay_model(store: PotStore, ops, path: str = "p/q") -> None:
             assert s0[k] == model[k]
 
 
+def _assert_head_snapshot_layout(store: PotStore, path: str) -> None:
+    """The invariants the Arrow merge in ``_mutate`` must keep: the head
+    snapshot holds one row per key in strictly increasing key order, and
+    the manifest's ``n_keys`` is its row count."""
+    head = store._latest_manifest(path)
+    table = store._read_table(store._parts(path, head))
+    keys = table.column("key").to_pylist()
+    assert all(a < b for a, b in zip(keys, keys[1:])), keys
+    assert head.n_keys == table.num_rows
+
+
 @settings(max_examples=60, deadline=None)
 @given(ops=st.lists(_op, max_size=12))
 def test_store_matches_dict_model(ops):
     root = tempfile.mkdtemp(prefix="pot_prop_")
     try:
-        _replay_model(PotStore(None, root), ops)
+        _replay_model(PotStore(None, root), ops, check=_assert_head_snapshot_layout)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

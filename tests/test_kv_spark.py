@@ -303,6 +303,43 @@ def test_create_df_collapses_duplicate_keys_in_batch(spark, store):
     assert set(store.get("dup")) == {"a", "b"}
 
 
+def test_dict_upsert_carries_untouched_doc_text(spark, store):
+    """A dict-plane upsert carries every untouched row as its stored
+    text: a DataFrame-written doc in non-canonical form (unsorted keys,
+    no spaces) stays byte-identical, through the no-Spark compact too."""
+    raw = '{"b":1,"a":2}'
+    store.create_df(
+        "bt", spark.createDataFrame([("x", raw)], schema="key string, doc string")
+    )
+    store.create("bt", {"id": "y", "v": 1})
+    want = {"x": {"a": 2, "b": 1}, "y": {"id": "y", "v": 1}}
+
+    def stored_text() -> dict[str, str]:
+        return {r["key"]: r["doc"] for r in store.get_df("bt").collect()}
+
+    assert stored_text()["x"] == raw
+    assert store.get("bt") == want
+    assert PotStore(None, store.root).compact("bt") == 3
+    assert stored_text()["x"] == raw
+    assert store.get("bt") == want
+
+
+def test_dict_upsert_ignores_unparseable_untouched_doc(spark, store):
+    """An unparseable doc under an untouched key does not fail an
+    unrelated upsert (its text is carried, never decoded); get() still
+    raises on it."""
+    store.create_df(
+        "bad", spark.createDataFrame([("x", "{not json")], schema="key string, doc string")
+    )
+    assert store.create("bad", {"id": "y"}).generation == 2
+    assert {r["key"]: r["doc"] for r in store.get_df("bad").collect()} == {
+        "x": "{not json",
+        "y": '{"id": "y"}',
+    }
+    with pytest.raises(json.JSONDecodeError):
+        store.get("bad")
+
+
 def test_vacuumed_generation_raises_clean_error(spark, store):
     """After vacuum, time travel to a reclaimed generation must raise the
     lifecycle error (not FileNotFoundError out of a parquet read), on

@@ -537,6 +537,32 @@ def test_compact_dict_only_store(store):
     }
 
 
+def test_create_codec_work_does_not_scale_with_untouched_docs(tmp_path, monkeypatch):
+    """A single-doc upsert encodes only its own doc and decodes none of
+    the stored ones: it makes the same number of json.loads/json.dumps
+    calls on a 10-doc pot as on a 1,000-doc pot."""
+    import pot_spark.kv.store as store_mod
+
+    def codec_calls(n_docs: int) -> dict[str, int]:
+        store = PotStore(spark=None, root=str(tmp_path / f"n{n_docs}"))
+        store.create_batch("p", {f"k{i:05d}": {"v": i} for i in range(n_docs)})
+        calls = {"loads": 0, "dumps": 0}
+        with monkeypatch.context() as m:
+            for fn in calls:
+                def counted(*args, _fn=fn, _real=getattr(json, fn), **kwargs):
+                    calls[_fn] += 1
+                    return _real(*args, **kwargs)
+
+                m.setattr(store_mod.json, fn, counted)
+            store.create("p", {"id": "new", "v": -1})
+        assert len(store.get("p")) == n_docs + 1
+        return calls
+
+    small = codec_calls(10)
+    assert small["dumps"] >= 1  # the wrappers did see the write
+    assert codec_calls(1000) == small
+
+
 def test_restore_rolls_back_metadata_only(store):
     store.create("r/p", {"id": "a", "v": 1})
     store.create("r/p", {"id": "b", "v": 2})
