@@ -11,8 +11,4 @@ Layers:
   window operators.
 """
 
-from pot_spark.kv.store import PotStore
-from pot_spark.session import get_spark
-
-__all__ = ["get_spark", "PotStore"]
 __version__ = "0.1.0"

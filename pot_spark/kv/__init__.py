@@ -6,9 +6,19 @@ an atomic put-if-absent commit manifest, replacing GCS object generations
 (reference /root/reference/server.go:272-548, 617-702).
 """
 
-from pot_spark.kv.client import PotClient
+import importlib
+
 from pot_spark.kv.errors import CommitConflict, NoRewriteViolated
-from pot_spark.kv.store import CreateResponse, PotStore
+
+# PEP 562 lazy re-exports: store.py (and client.py through it) imports
+# pyspark and pyarrow, so an eager import here would make every
+# pot_spark.kv submodule pay for the engine — the GCS emulator process
+# included, which never touches a pot.
+_LAZY = {
+    "PotStore": "pot_spark.kv.store",
+    "CreateResponse": "pot_spark.kv.store",
+    "PotClient": "pot_spark.kv.client",
+}
 
 __all__ = [
     "PotStore",
@@ -17,3 +27,9 @@ __all__ = [
     "NoRewriteViolated",
     "CommitConflict",
 ]
+
+
+def __getattr__(name: str):
+    if name in _LAZY:
+        return getattr(importlib.import_module(_LAZY[name]), name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

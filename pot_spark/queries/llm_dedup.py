@@ -14,8 +14,11 @@ up to and including the banding join is replayable by the DuckDB oracle.
 
 from __future__ import annotations
 
+import functools
 import logging
+import operator
 import os
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -130,6 +133,89 @@ def _shingle_df(
     )
     return docs.select(
         *cols, F.explode(_shingles(F.col("toks"))).alias("shingle")
+    )
+
+
+def _identity(df: DataFrame) -> DataFrame:
+    return df
+
+
+class _ShingleIndex(NamedTuple):
+    """The (lang, shingle) inverted index of the set-similarity family.
+
+    ``idx`` is the (doc_id, lang, shingle) stream, restricted to WHOLE
+    (lang, shingle) groups when ``df_cap`` is set: a shingle survives
+    the cap with every one of its rows or not at all. The concentration
+    probe depends on that (see _concentration), which is why the probe
+    takes this tuple and never a loose DataFrame. ``df_tbl`` is the
+    uncapped per-(lang, shingle) df rollup — the rarest-first order key
+    and the stage-1 pricing input; ``cnt`` holds each doc's exact
+    shingle count n (never capped: scores divide by the true set
+    size)."""
+
+    idx: DataFrame
+    df_tbl: DataFrame
+    cnt: DataFrame
+    df_cap: int | None
+
+
+def _shingle_index(
+    spark: SparkSession,
+    sf_dir: str,
+    df_cap: int | None = None,
+    ckpt: Callable[[DataFrame], DataFrame] = _identity,
+) -> _ShingleIndex:
+    """Build the family's index once; ``ckpt`` materializes the shingle
+    stream (its five consumers would otherwise each re-explode the
+    corpus). df is keyed by (lang, shingle) — the grouping df_cap
+    filters on and the only grouping pairs can form within."""
+    sh = ckpt(_shingle_df(spark, sf_dir, with_lang=True))
+    df_tbl = sh.groupBy("lang", "shingle").agg(F.count("*").alias("df"))
+    idx = sh
+    if df_cap is not None:
+        # the ONE df_cap restriction: a left semi against the capped df
+        # rollup keeps whole shingle groups; the rollup partial-
+        # aggregates map-side and shares the (lang, shingle) partitioning
+        # the pair join needs anyway
+        rare = df_tbl.filter(F.col("df") <= df_cap).select("lang", "shingle")
+        idx = sh.join(rare, ["lang", "shingle"], "left_semi")
+    cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    return _ShingleIndex(idx, df_tbl, cnt, df_cap)
+
+
+def _verify(sh: DataFrame, cand: DataFrame, a: str, b: str) -> DataFrame:
+    """Exact intersection count ``i`` of every candidate pair (a, b),
+    grouped by a, b and whatever else ``cand`` carries (set sizes).
+
+    Scale-safe: no unbounded relation is ever broadcast (a giant dup
+    cluster can explode the candidate set past any broadcast limit).
+    Both shingle sides are pre-restricted to candidate docs via LEFT
+    SEMI joins on the distinct doc-id lists — AQE turns those into
+    broadcast joins when the observed candidate count is small, keeping
+    the full shingle table unshuffled, and degrades to a plain shuffle
+    when it is not — so the verify scales with candidates, not the
+    corpus. The join is on shingle alone: docs are single-lang, so for
+    every candidate pair it equals the (lang, shingle) join."""
+    sa_c = sh.select(F.col("doc_id").alias(a), "shingle").join(
+        cand.select(a).distinct(), a, "left_semi"
+    )
+    sb_c = sh.select(F.col("doc_id").alias(b), "shingle").join(
+        cand.select(b).distinct(), b, "left_semi"
+    )
+    carried = [c for c in cand.columns if c not in (a, b)]
+    return (
+        sa_c.join(cand, a)
+        .join(sb_c, [b, "shingle"])
+        .groupBy(a, b, *carried)
+        .agg(F.count("*").alias("i"))
+    )
+
+
+def _jaccard_at(pairs: DataFrame, t: float) -> DataFrame:
+    """Pairs of (doc_a, doc_b, i, na, nb) with Jaccard >= t, scored."""
+    jac = F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
+    return pairs.filter(jac >= t).select(
+        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
     )
 
 
@@ -253,13 +339,13 @@ _NEAR_PAIRS_SQL = f"""
 @query("q_dedup_near", oracle=_NEAR_PAIRS_SQL)
 def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs: MinHash-LSH banding for candidates, exact shingle
-    Jaccard >= 0.5 for verification; the candidate-pair set is broadcast
-    into the verify join, so verification touches candidate pairs only —
-    never all pairs. Both verify inputs are pre-restricted to candidate
-    docs before any shuffle: that costs ~1s of lost pipeline overlap at
-    sf0.1 (the checkpoint barrier) but means the verify shuffle scales
-    with candidates, not the corpus — at 10^12 shingle rows the
-    unrestricted join would shuffle the whole shingle table."""
+    Jaccard >= 0.5 for verification (_verify), so verification touches
+    candidate pairs only — never all pairs. Both verify inputs are
+    pre-restricted to candidate docs before any shuffle: that costs ~1s
+    of lost pipeline overlap at sf0.1 (the checkpoint barrier) but means
+    the verify shuffle scales with candidates, not the corpus — at
+    10^12 shingle rows the unrestricted join would shuffle the whole
+    shingle table."""
     sh = _shingle_df(spark, sf_dir)
     # carries na/nb set sizes; checkpointed (not persist()ed) because the
     # verify stage references it three times (pair attrs + two doc-id
@@ -267,29 +353,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # times — and unlike a persist with no unpersist scope, a checkpoint
     # holds no cached relation for the session's lifetime
     pairs = reliable_checkpoint(_band_pairs(spark, sf_dir, sh))
-    sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    # Scale-safe verify: no unbounded relation is ever broadcast (a
-    # pathological corpus with a giant dup cluster can explode the
-    # candidate set past any broadcast limit). Both shingle sides are
-    # pre-restricted to candidate docs via LEFT SEMI joins on the tiny
-    # distinct doc-id lists — AQE turns those into broadcast joins at
-    # runtime when the observed candidate count is small (the common
-    # case, keeping the full shingle table unshuffled), and degrades to
-    # a plain shuffle when it is not. The intersection count then joins
-    # candidate-restricted shingles only.
-    sa_c = sa.join(pairs.select("doc_a").distinct(), "doc_a", "left_semi")
-    sb_c = sb.join(pairs.select("doc_b").distinct(), "doc_b", "left_semi")
-    inter = (
-        sa_c.join(pairs, "doc_a")
-        .join(sb_c, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count("*").alias("i"))
-    )
-    jac = F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
-    return inter.filter(jac >= 0.5).select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
-    )
+    return _jaccard_at(_verify(sh, pairs, "doc_a", "doc_b"), 0.5)
 
 
 # near-duplicate ADMISSION GATE threshold: a doc is rejected when a
@@ -427,138 +491,40 @@ def q_ngram_jaccard(
     checkpoint: bool = True,
     strategy: str = "auto",
 ) -> DataFrame:
-    """Blocked pairwise n-gram Jaccard: pairs form only through shared
-    (lang, shingle) keys — an inverted-index join, not a cross product.
+    """Blocked pairwise n-gram Jaccard >= 0.3: pairs form only through
+    shared (lang, shingle) keys — an inverted-index join, not a cross
+    product — through the family pipeline (_pair_intersections: direct,
+    prefix or banded, chosen by ``strategy="auto"``).
 
-    Scale posture — ADAPTIVE between two EXACT plans, same selector as
-    q_containment_dedup / q_prefix_filter_join (round 6 closes the last
-    Σ df² default in the family):
+    What is this op's own:
 
-    - ``direct``: the inverted-index self-join with immediate map-side
-      combine. Candidate volume is Σ df², which wins decisively on
-      head-free (cluster-driven) data where candidate materialization
-      costs more than it saves, but dies under a web-scale Zipf head
-      (one boilerplate shingle with df = 10⁸ ⇒ 10¹⁶ candidate rows
-      regardless of true duplication).
-    - ``prefix``: AllPairs/ppjoin prefix filtering at t = 0.3. If
-      J(A,B) = i/(na+nb−i) >= t then (since nb >= i) i >= t·na, so each
-      doc's first n − ceil(t·n) + 1 shingles in a fixed rarest-first
-      order must contribute a shared shingle between BOTH prefixes —
-      candidates form only prefix×prefix, and the Zipf head contributes
-      ~nothing (hot shingles never make rarest-first prefixes).
-      Survivors get the candidate-restricted exact verify. Prefix
-      lengths use exact integer ceil(3n/10) = (3n+9) div 10 — the float
-      form ceil(0.3*n) overshoots whenever 0.3*n rounds up past an
-      integer, silently shortening the prefix below the lemma's bound.
-
-    ``strategy="auto"`` (default) probes Σ df² / Σ df on the (possibly
-    capped) per-(lang, shingle) df rollup — one 1-row aggregate — and
-    picks direct while the expansion stays under the shared budget.
-    Both branches are exact over the SAME index, so forcing either
-    yields identical results (the oracle checks whichever runs).
-
-    ``df_cap``: production pipelines df-cap the index — drop
-    (lang, shingle) keys with df > cap BEFORE the pair join, bounding
-    candidate volume at Σ min(df, cap)² and removing the head outright.
-    The trade-off is RECALL: (1) a pair sharing only hot shingles never
-    becomes a candidate; (2) surviving pairs' intersections count
-    capped shingles only, so the Jaccard underestimates and
-    near-threshold pairs can drop. The prefix lemma stays valid on the
-    capped index: i_capped >= t·na >= t·na_capped, and the prefix
-    length uses the exact per-doc n (n >= n_capped, and
-    n − ceil(t·n) + 1 is nondecreasing in n, so the prefix is only ever
-    LONGER than the capped bound requires). The default (None) keeps
-    the exact semantics the DuckDB oracle checks.
-
-    ``banded`` (auto-selected only when the priced pair volume exceeds
-    the absolute budget AND the sampled concentration probe reads
-    dense — round 11's measured scale-killer, where EVERY exact plan
-    is quadratic: direct 63 s and prefix 130 s at true-sf1 vs 2.6 s at
-    sf0.1): MinHash-LSH banding (r=2, b=_NGRAM_BANDS) generates the
-    candidates, the SAME exact verify scores them, so reported pairs
-    are never false positives. Recall contract at Jaccard s is
-    1−(1−s²)^32: 0.95 at the 0.3 threshold, 0.995 at 0.37, ~1 above
-    0.45 — the documented trade for bounded candidates (measured 341 k
-    candidate pairs vs 16.1 M prefix / 28.6 M direct at sf1)."""
-    ckpt = reliable_checkpoint if checkpoint else (lambda df: df)
-    sh = ckpt(_shingle_df(spark, sf_dir, with_lang=True))
-    cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    df_tbl = sh.groupBy("lang", "shingle").agg(F.count("*").alias("df"))
-    idx = sh
-    if df_cap is not None:
-        # left-semi restricts the index to the rare tail; the df rollup
-        # partial-aggregates map-side and shares the (lang, shingle)
-        # partitioning the pair join needs anyway
-        rare = df_tbl.filter(F.col("df") <= df_cap).select("lang", "shingle")
-        idx = sh.join(rare, ["lang", "shingle"], "left_semi")
-
-    strategy = _resolve_strategy(strategy, df_tbl, df_cap, idx)
-
-    if strategy == "direct":
-        sa = idx.select(F.col("doc_id").alias("doc_a"), "lang", "shingle")
-        sb = idx.select(F.col("doc_id").alias("doc_b"), "lang", "shingle")
-        inter = (
-            sa.join(sb, ["lang", "shingle"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("i"))
-        )
-    else:
-        if strategy == "banded":
-            cand = _banded_jaccard_candidates(
-                idx, _NGRAM_BANDS, "doc_a", "doc_b"
-            )
-        else:
-            # rarest-first order: per-(lang, shingle) df is the sort
-            # key — no global sort; pairs only form within a lang,
-            # where the order is consistent across any two docs that
-            # could pair
-            w = Window.partitionBy("doc_id").orderBy("df", "shingle")
-            # ceil(0.3*n) exactly: (3n + 9) div 10
-            i_min = F.expr("(3 * n + 9) div 10")
-            prefix = (
-                idx.join(df_tbl, ["lang", "shingle"])
-                .withColumn("rk", F.row_number().over(w))
-                .join(cnt, "doc_id")
-                .filter(F.col("rk") <= F.col("n") - i_min + 1)
-                .select("doc_id", "lang", "shingle")
-            )
-            pa = prefix.select(
-                F.col("doc_id").alias("doc_a"), "lang", "shingle"
-            )
-            pb = prefix.select(
-                F.col("doc_id").alias("doc_b"), "lang", "shingle"
-            )
-            cand = (
-                pa.join(pb, ["lang", "shingle"])
-                .filter(F.col("doc_a") < F.col("doc_b"))
-                .select("doc_a", "doc_b")
-                .distinct()
-            )
-        cand = ckpt(cand)
-        # exact verify, candidate-restricted on both sides (scales with
-        # candidates, not the corpus); docs are single-lang, so the
-        # shingle-only verify join equals the (lang, shingle) join for
-        # every same-lang candidate pair
-        sa = idx.select(F.col("doc_id").alias("doc_a"), "shingle")
-        sb = idx.select(F.col("doc_id").alias("doc_b"), "shingle")
-        sa_c = sa.join(cand.select("doc_a").distinct(), "doc_a", "left_semi")
-        sb_c = sb.join(cand.select("doc_b").distinct(), "doc_b", "left_semi")
-        inter = (
-            sa_c.join(cand, "doc_a")
-            .join(sb_c, ["doc_b", "shingle"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("i"))
-        )
-    ca = cnt.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    cb = cnt.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    jac = F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
-    return (
-        inter.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .filter(jac >= 0.3)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    - the prefix lemma at t = 0.3: if J(A,B) = i/(na+nb−i) >= t then
+      (since nb >= i) i >= t·na, so each doc's first n − ceil(t·n) + 1
+      rarest-first shingles must meet the other doc's PREFIX —
+      candidates form prefix×prefix. ceil(3n/10) is the exact integer
+      (3n+9) div 10: the float ceil(0.3*n) overshoots whenever 0.3*n
+      rounds up past an integer, silently shortening the prefix below
+      the lemma's bound;
+    - ``df_cap``, the production recipe: drop (lang, shingle) keys with
+      df > cap BEFORE the pair join, bounding candidate volume at
+      Σ min(df, cap)² and removing the head outright. The trade-off is
+      RECALL: (1) a pair sharing only hot shingles never becomes a
+      candidate; (2) surviving pairs' intersections count capped
+      shingles only, so the Jaccard underestimates and near-threshold
+      pairs can drop. The default (None) keeps the exact semantics the
+      DuckDB oracle checks;
+    - the banded recall contract (r=2, b=_NGRAM_BANDS): 1−(1−s²)^32 is
+      0.95 at the 0.3 threshold, 0.995 at 0.37, ~1 above 0.45 — the
+      trade for bounded candidates (measured 341 k candidate pairs vs
+      16.1 M prefix / 28.6 M direct at true-sf1, where direct took 63 s
+      and prefix 130 s vs 2.6 s at sf0.1)."""
+    ckpt = reliable_checkpoint if checkpoint else _identity
+    spec = _PairSpec(
+        "doc_a", "doc_b", operator.lt, "(3 * n + 9) div 10", prefix_both=True,
+        banded=functools.partial(_banded_jaccard_candidates, n_bands=_NGRAM_BANDS),
     )
+    ix = _shingle_index(spark, sf_dir, df_cap, ckpt)
+    return _jaccard_at(_pair_intersections(ix, strategy, spec, ckpt), 0.3)
 
 
 _SIMHASH_BITS = 60  # 4 bands x 15 bits: 32768 buckets per band
@@ -1066,16 +1032,9 @@ def q_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a", "doc_b", agree_expr.cast("bigint").alias("sig_agree")
         )
     )
-    sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    sa_c = sa.join(pairs.select("doc_a").distinct(), "doc_a", "left_semi")
-    sb_c = sb.join(pairs.select("doc_b").distinct(), "doc_b", "left_semi")
-    inter = (
-        sa_c.join(pairs.select("doc_a", "doc_b", "na", "nb"), "doc_a")
-        .join(sb_c, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count("*").cast("bigint").alias("n_inter"))
-    )
+    inter = _verify(
+        sh, pairs.select("doc_a", "doc_b", "na", "nb"), "doc_a", "doc_b"
+    ).withColumnRenamed("i", "n_inter")
     return inter.join(agree, ["doc_a", "doc_b"]).select(
         "doc_a", "doc_b", "sig_agree", "n_inter", "na", "nb"
     )
@@ -1191,44 +1150,44 @@ def _concentration_sample_pred() -> Column:
     return F.substring(F.md5(F.encode(F.col("shingle"), "UTF-8")), 1, 1) == "0"
 
 
-def _sampled_combine_x1000(idx: DataFrame) -> tuple[int, int]:
-    """Measured candidate CONCENTRATION (q_dedup_candidate_profile's
-    combine_x1000) on the deterministic 1/16 shingle sample of ``idx``:
-    priced pairs Σ df·(df−1)/2 over the sampled df rollup, divided by
-    the sample's ACTUAL distinct pair count, ×1000 integer-exact. ~1000
-    means dense (map-side combine will not fire; the direct join's
-    candidate volume is all real work); >= _CLUSTERED_COMBINE_X1000
-    means clustered (combine absorbs it). -1 when the sample has no
-    pairs (treated as clustered: nothing to combine either way).
+def _concentration(ix: _ShingleIndex) -> DataFrame:
+    """Measured candidate CONCENTRATION as a lazy 1-row DataFrame
+    (combine_x1000, tail_combine_x1000) on the deterministic 1/16
+    shingle sample of ``ix.idx``: priced pairs Σ df·(df−1)/2 over the
+    sampled df rollup, divided by the sample's ACTUAL distinct pair
+    count, ×1000 integer-exact. ~1000 means dense (map-side combine will
+    not fire; the direct join's candidate volume is all real work);
+    >= _CLUSTERED_COMBINE_X1000 means clustered (combine absorbs it).
+    -1 when the sample has no pairs (treated as clustered: nothing to
+    combine either way). The chooser collects it
+    (_sampled_combine_x1000); q_dedup_strategy_report cross-joins it.
 
-    Returns BOTH the full verdict and the r13 HEAD-EXCLUDED tail
-    verdict (the mixed-regime disambiguator) from ONE flagged
-    self-join — the r13 finding-11 fusion: a pair's tail membership is
-    an OR over its generating shingles' (full df <= _HEAD_PROBE_DF_CAP)
-    flag, so carrying the per-shingle flag through the join and
-    max()-ing it per distinct (lang, a, b) group counts tail pairs
-    exactly. Integer-identical to running the probe twice (full idx,
-    then idx semi-joined to the tail), at roughly half the cost in the
-    dense regime where stage 3 fires. BOTH sides of the self-join must
-    be the SAME flagged relation — a flag on one side only breaks
-    exchange reuse (measured 6x slower).
+    tail_combine_x1000 is the r13 HEAD-EXCLUDED verdict (the mixed-regime
+    disambiguator) from the SAME flagged self-join: a pair's tail
+    membership is an OR over its generating shingles' (df <=
+    _HEAD_PROBE_DF_CAP) flag, so carrying the per-shingle flag through
+    the join and max()-ing it per distinct (lang, a, b) group counts
+    tail pairs exactly — integer-identical to probing twice (full index,
+    then the index semi-joined to the tail) at roughly half the cost.
+    BOTH sides of the self-join must be the SAME flagged relation — a
+    flag on one side only breaks exchange reuse (measured 6x slower).
 
-    r14: the tail flag derives from the SAMPLED rollup itself, not a
-    join against the full df table — the 1/16 sample selects whole
-    SHINGLES (content-keyed md5 predicate), so every occurrence of a
-    sampled shingle is in the sample and df_s(s) == full df(s) exactly;
-    likewise under df_cap, which semi-joins whole shingle groups, so a
-    shingle surviving the cap keeps all its rows. The old form rebuilt
-    the full-corpus (lang, shingle) string-keyed rollup 2-3x inside the
-    probe (r14 sf1 stage profile: ~40% of the whole query's executor
-    time went to this probe); the fused form touches only sampled rows
-    past the sample filter, and prices full+tail in ONE aggregate.
+    The tail flag reads the SAMPLED rollup, which is exact only because
+    the index holds whole (lang, shingle) groups: the content-keyed
+    sample keeps every occurrence of a sampled shingle, and
+    _shingle_index applies df_cap as a whole-group semi join, so
+    df_s(s) == df(s) for every sampled shingle (tests/test_plans.py
+    pins it). That is why this takes the index tuple, never a loose
+    DataFrame: a row-subsetted index (e.g. a per-doc sample) would read
+    head shingles as tail.
+    Touching only sampled rows replaced a full-corpus rollup rebuilt 2-3x
+    inside the probe (r14 sf1: ~40% of the query's executor time).
 
     Cost: the sampled self-join is ~1/256 of the full pair volume —
-    affordable precisely because this probe only runs once the priced
-    volume already exceeded _DENSE_DIRECT_PAIR_BUDGET, where choosing
-    the wrong plan costs orders of magnitude more than measuring."""
-    samp = idx.filter(_concentration_sample_pred())
+    affordable because the chooser runs it only once the priced volume
+    exceeds _DENSE_DIRECT_PAIR_BUDGET, where choosing the wrong plan
+    costs orders of magnitude more than measuring."""
+    samp = ix.idx.filter(_concentration_sample_pred())
     df_s = samp.groupBy("lang", "shingle").agg(F.count("*").alias("df"))
     flagged = df_s.select(
         "lang",
@@ -1267,41 +1226,35 @@ def _sampled_combine_x1000(idx: DataFrame) -> tuple[int, int]:
             F.coalesce(F.sum("t"), F.lit(0)).cast("bigint").alias("actual_t"),
         )
     )
-    row = priced_both.crossJoin(both).collect()[0]
-    combine = (
-        (row["priced"] * 1000) // row["actual"] if row["actual"] else -1
+    return priced_both.crossJoin(both).select(
+        *[
+            F.expr(
+                f"CASE WHEN actual{s} = 0 THEN CAST(-1 AS BIGINT)"
+                f" ELSE CAST(priced{s} * 1000 DIV actual{s} AS BIGINT) END"
+            ).alias(f"{name}combine_x1000")
+            for s, name in (("", ""), ("_t", "tail_"))
+        ]
     )
-    tail_combine = (
-        (row["priced_t"] * 1000) // row["actual_t"] if row["actual_t"] else -1
-    )
-    return combine, tail_combine
 
 
-# Per-session memoization of the stage-2 probe (r12 verdict item 8):
-# at sf1 one probe run is ~15 s, and the three adaptive ops each price
-# past the budget on the same session's data — but they build DIFFERENT
-# indexes (shingle sets / df caps differ), so the cache key is the
-# probe input's Catalyst semantic hash. Staleness caveat (documented,
-# accepted): the probe is a PLANNING statistic — if the underlying
-# files change under an identical plan within one session, a cached
-# verdict may lag one query; the chosen plan is still correct (exact
-# plans everywhere; banded keeps its recall contract either way).
+# Per-session memoization of the concentration probe (r12 verdict item
+# 8): at sf1 one probe run is ~15 s, and the three adaptive ops each
+# price past the budget on the same session's data — but they build
+# DIFFERENT indexes (shingle sets / df caps differ), so the cache key is
+# the probe index's Catalyst semantic hash plus the head cap the tail
+# verdict depends on. Staleness caveat (documented, accepted): the
+# probe is a PLANNING statistic — if the underlying files change under
+# an identical plan within one session, a cached verdict may lag one
+# query; the chosen plan is still correct (exact plans everywhere;
+# banded keeps its recall contract either way).
 _PROBE_CACHE: dict[tuple[int, int], tuple[int, int]] = {}
 
 
-def _sampled_combine_x1000_cached(idx: DataFrame) -> tuple[int, int]:
-    # the key must cover everything the fused verdicts depend on: the
-    # probe index and the head cap itself (the old two-probe form keyed
-    # the cap implicitly via the tail_idx plan; the fused form must
-    # carry it explicitly). The full df rollup left the key when the
-    # tail flag moved onto the sampled rollup (r14: df_s == full df for
-    # sampled shingles — see _sampled_combine_x1000).
-    try:
-        key = (idx.semanticHash(), _HEAD_PROBE_DF_CAP)
-    except Exception:  # noqa: BLE001 — hash unavailable: probe uncached
-        return _sampled_combine_x1000(idx)
+def _sampled_combine_x1000(ix: _ShingleIndex) -> tuple[int, int]:
+    """(combine_x1000, tail_combine_x1000) of _concentration, memoized."""
+    key = (ix.idx.semanticHash(), _HEAD_PROBE_DF_CAP)
     if key not in _PROBE_CACHE:
-        _PROBE_CACHE[key] = _sampled_combine_x1000(idx)
+        _PROBE_CACHE[key] = tuple(_concentration(ix).collect()[0])
     return _PROBE_CACHE[key]
 
 
@@ -1317,11 +1270,9 @@ def _xmh(j: int, col: Column | None = None) -> Column:
     return F.xxhash64(F.lit(j), s)
 
 
-def _banded_jaccard_candidates(
-    idx: DataFrame, n_bands: int, a_name: str, b_name: str
-) -> DataFrame:
-    """Dense-regime candidate pairs via MinHash-LSH banding over the
-    (possibly df-capped) index: per-doc signatures of 2·n_bands
+def _banded_jaccard_candidates(idx: DataFrame, n_bands: int) -> DataFrame:
+    """Dense-regime (doc_a, doc_b) candidates via MinHash-LSH banding
+    over the (possibly df-capped) index: per-doc signatures of 2·n_bands
     xxhash64 minhashes, banded r=2, candidates = distinct doc pairs
     sharing any band key within a lang (docs are single-lang; the lang
     column rides the signature rollup so cross-lang hash coincidences
@@ -1350,9 +1301,7 @@ def _banded_jaccard_candidates(
             & (F.col("a.lang") == F.col("b.lang"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(
-            F.col("a.doc_id").alias(a_name), F.col("b.doc_id").alias(b_name)
-        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
 
@@ -1408,74 +1357,74 @@ def _bottomk_containment_candidates(idx: DataFrame) -> DataFrame:
     )
 
 
-def _auto_strategy(
-    df_tbl: DataFrame, df_cap: int | None, idx: DataFrame | None = None
-) -> str:
+def _auto_strategy(ix: _ShingleIndex) -> str:
     """Pick 'direct' / 'prefix' / 'banded' from the measured index.
 
-    Stage 1 (always): one 1-row aggregate over the (possibly capped
-    view of the) df rollup — the exact candidate volume Σ df² a direct
-    self-join would generate, per index row Σ df. Reads only the df
-    counts, so the choice is partition-layout deterministic.
+    Stage 1 (always): one 1-row aggregate over the (df_cap-filtered) df
+    rollup — the exact candidate volume Σ df² a direct self-join would
+    generate, per index row Σ df. Reads only the df counts, so the
+    choice is partition-layout deterministic. Σ df² is summed in DOUBLE,
+    not int64: a web-scale Zipf head (df ≈ 10⁸ ⇒ df² = 10¹⁶) overflows a
+    wrapped int64 sum after ~10³ such shingles, and with ANSI off Spark
+    wraps SILENTLY — a negative sum_df2 would pick the direct plan
+    exactly when the prefix plan is needed. Double keeps the
+    order-of-magnitude accuracy the comparison needs, and
+    _direct_affordable routes any non-finite/negative result to
+    'prefix'.
 
     Stage 2 (only when the priced DISTINCT-pair volume (Σ df² − Σ df)/2
-    exceeds _DENSE_DIRECT_PAIR_BUDGET and an ``idx`` was provided): the
-    sampled concentration probe — round 11's true-sf1 tier measured the
-    failure Σ df² cannot see (a saturated vocabulary prices as
-    affordable per index row while its candidate set is ~all-distinct
-    pairs, so map-side combine never fires and the direct plan goes
-    super-linear: 25-43x for 10x data, SCALE_SF1.json). A dense verdict
-    routes to the BANDED tier (bounded candidates, documented recall);
-    a clustered verdict keeps the exact plans, which the combine/prefix
-    machinery handles.
+    exceeds _DENSE_DIRECT_PAIR_BUDGET): the sampled concentration probe
+    on the very index the chosen plan will join — round 11's true-sf1
+    tier measured the failure Σ df² cannot see (a saturated vocabulary
+    prices as affordable per index row while its candidate set is
+    ~all-distinct pairs, so map-side combine never fires and the direct
+    plan goes super-linear: 25-43x for 10x data, SCALE_SF1.json).
 
-    Σ df² is summed in DOUBLE, not int64: a web-scale Zipf head (df ≈
-    10⁸ ⇒ df² = 10¹⁶) overflows a wrapped int64 sum after ~10³ such
-    shingles, and with ANSI off Spark wraps SILENTLY — a negative
-    sum_df2 would pass the budget test and pick the direct plan exactly
-    when the prefix plan is needed. Double loses low-order precision at
-    that magnitude but the comparison only needs order-of-magnitude
-    accuracy; the shared _direct_affordable guard still routes any
-    non-finite/negative probe result to 'prefix'.
-
-    Stage 3 (r13, only on a dense stage-2 verdict): the MIXED-REGIME
-    disambiguator — the probe re-runs on the HEAD-EXCLUDED index
-    (shingles with full df <= _HEAD_PROBE_DF_CAP). A corpus that is
-    Zipf-headed but tail-clustered probes dense at stage 2 purely
-    because hot shingles pair everything with everything; the PREFIX
-    plan neutralizes exactly those shingles (they never make
-    rarest-first prefixes), so when the head-excluded tail reads
-    clustered the chooser keeps the EXACT prefix plan instead of
-    spending the banded tier's recall contract. Only a corpus whose
-    density survives head exclusion (truly saturated vocabulary) takes
-    the banded tier. Both probe passes are memoized per session
-    (semantic-hash keyed — the three adaptive ops build different
-    indexes and never share a cache row within one query)."""
-    src = df_tbl if df_cap is None else df_tbl.filter(F.col("df") <= df_cap)
+    Stage 3 (r13, on a dense stage-2 verdict, same fused probe): the
+    HEAD-EXCLUDED verdict. A Zipf-headed but tail-clustered corpus
+    probes dense purely because hot shingles pair everything with
+    everything; the prefix plan neutralizes exactly those shingles
+    (they never make rarest-first prefixes), so when the tail reads
+    clustered the chooser keeps the EXACT prefix plan. Only a corpus
+    whose density survives head exclusion takes the BANDED tier — and
+    never silently: it logs a WARNING naming the recall contract, and
+    FORCE_EXACT_ENV=1 (set by the parity sweep and the oracle runner)
+    reroutes it to 'prefix' so hash-parity runs always compare
+    exact-vs-exact (round-12 advice item)."""
+    src = ix.df_tbl
+    if ix.df_cap is not None:
+        src = src.filter(F.col("df") <= ix.df_cap)
     row = src.agg(
         F.sum(F.col("df").cast("double") * F.col("df")).alias("sum_df2"),
         F.sum("df").alias("n_rows"),
     ).collect()[0]
     sum_df2 = row["sum_df2"] or 0.0
     n_rows = row["n_rows"] or 0
-    pairs_priced = max(sum_df2 - n_rows, 0.0) / 2.0
-    if idx is not None and pairs_priced > _DENSE_DIRECT_PAIR_BUDGET:
-        # callers pass the index ALREADY restricted to their df_cap, so
-        # the probe measures exactly the index the chosen plan will
-        # join. One fused pass returns the stage-2 AND stage-3 verdicts
-        # (finding 11): in the dense regime — exactly where the probe is
-        # the expensive pre-flight — this halves its cost vs the former
-        # full-then-tail probe pair; in the clustered regime the fused
-        # tail stats ride the same self-join for one extra flag column.
-        combine, tail_combine = _sampled_combine_x1000_cached(idx)
+    if max(sum_df2 - n_rows, 0.0) / 2.0 > _DENSE_DIRECT_PAIR_BUDGET:
+        combine, tail_combine = _sampled_combine_x1000(ix)
         if 0 <= combine < _CLUSTERED_COMBINE_X1000:
-            if 0 <= tail_combine < _CLUSTERED_COMBINE_X1000:
+            if not 0 <= tail_combine < _CLUSTERED_COMBINE_X1000:
+                _LOG.warning(
+                    "adaptive dedup: dense verdict is head-driven "
+                    "(tail combine_x1000=%d) — keeping the exact prefix plan",
+                    tail_combine,
+                )
+            elif _force_exact():
+                _LOG.warning(
+                    "adaptive dedup: dense verdict chose the banded tier "
+                    "but %s is set — forcing the exact 'prefix' plan for "
+                    "oracle parity",
+                    FORCE_EXACT_ENV,
+                )
+            else:
+                _LOG.warning(
+                    "adaptive dedup: measured candidate concentration is "
+                    "dense — switching to the BANDED candidate tier "
+                    "(exact verify, recall contract 0.95@t=0.3 / "
+                    "0.995@t=0.7; set %s=1 to force exact plans)",
+                    FORCE_EXACT_ENV,
+                )
                 return "banded"
-            _LOG.warning(
-                "adaptive dedup: dense verdict is head-driven "
-                "(tail combine_x1000=%d) — keeping the exact prefix plan",
-                tail_combine,
-            )
             return "prefix"
     return "direct" if _direct_affordable(sum_df2, n_rows) else "prefix"
 
@@ -1493,13 +1442,7 @@ def choose_dedup_strategy(
     this for the decision. All consume the same profile and the same
     budget rules, so they cannot diverge (round-7 advice item; the
     concentration wiring closes round 11's open scale item)."""
-    sh = _shingle_df(spark, sf_dir, with_lang=True)
-    df_tbl = sh.groupBy("lang", "shingle").agg(F.count("*").alias("df"))
-    idx = sh
-    if df_cap is not None:
-        rare = df_tbl.filter(F.col("df") <= df_cap).select("lang", "shingle")
-        idx = sh.join(rare, ["lang", "shingle"], "left_semi")
-    return _resolve_strategy("auto", df_tbl, df_cap, idx)
+    return _resolve_strategy("auto", _shingle_index(spark, sf_dir, df_cap))
 
 
 _LOG = logging.getLogger("pot_spark.dedup")
@@ -1516,47 +1459,111 @@ def _force_exact() -> bool:
     return os.environ.get(FORCE_EXACT_ENV, "").strip() not in ("", "0", "false")
 
 
-def _resolve_strategy(
-    strategy: str,
-    df_tbl: DataFrame,
-    df_cap: int | None = None,
-    idx: DataFrame | None = None,
-) -> str:
-    """Resolve 'auto' via the df + concentration probes and reject
-    typos: an unrecognized strategy string must error, not silently
-    fall through an if/else into whichever branch is written last.
-
-    The auto->banded transition is APPROXIMATE (documented recall
-    0.95@t=0.3 / 0.995@t=0.7), so it is never silent: it logs a
-    WARNING naming the contract, and FORCE_EXACT_ENV=1 (set by the
-    parity sweep and the oracle runner) reroutes it to the exact
-    'prefix' plan so hash-parity runs always compare exact-vs-exact
-    (round-12 advice item)."""
+def _resolve_strategy(strategy: str, ix: _ShingleIndex) -> str:
+    """Resolve 'auto' via the probes on ``ix`` and reject typos: an
+    unrecognized strategy string must error, not silently fall through
+    an if/else into whichever branch is written last."""
     if strategy == "auto":
-        strategy = _auto_strategy(df_tbl, df_cap, idx)
-        if strategy == "banded":
-            if _force_exact():
-                _LOG.warning(
-                    "adaptive dedup: dense verdict chose the banded tier "
-                    "but %s is set — forcing the exact 'prefix' plan for "
-                    "oracle parity",
-                    FORCE_EXACT_ENV,
-                )
-                strategy = "prefix"
-            else:
-                _LOG.warning(
-                    "adaptive dedup: measured candidate concentration is "
-                    "dense — switching to the BANDED candidate tier "
-                    "(exact verify, recall contract 0.95@t=0.3 / "
-                    "0.995@t=0.7; set %s=1 to force exact plans)",
-                    FORCE_EXACT_ENV,
-                )
+        strategy = _auto_strategy(ix)
     if strategy not in ("direct", "prefix", "banded"):
         raise ValueError(
             "strategy must be 'auto', 'direct', 'prefix' or 'banded', "
             f"got {strategy!r}"
         )
     return strategy
+
+
+class _PairSpec(NamedTuple):
+    """What differs between the set-similarity ops inside the pipeline."""
+
+    a: str  # output doc-id names of the pair (a, b)
+    b: str
+    # pair predicate on (a, b): operator.lt for the symmetric Jaccard
+    # ops (each unordered pair once), operator.ne for directed containment
+    pair: Callable[[Column, Column], Column]
+    i_min_sql: str  # exact-integer ceil(t·n) of the op's threshold
+    prefix_both: bool  # prefix×prefix (Jaccard) or prefix×full (containment)
+    banded: Callable[[DataFrame], DataFrame]  # dense-regime candidates of idx
+
+
+def _pair_intersections(
+    ix: _ShingleIndex,
+    strategy: str,
+    spec: _PairSpec,
+    ckpt: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The family's candidate→verify pipeline (the filter-and-verify
+    split of PAPERS.md "Highly Efficient String Similarity Search and
+    Join over Compressed Indexes"): the (a, b) doc pairs sharing a
+    (lang, shingle) of ``ix.idx`` — all of them, or only the candidates
+    that can still reach the op's threshold — with their exact
+    intersection count ``i`` and both docs' exact set sizes
+    ``na``/``nb``. The op scores and filters. Three plans, chosen
+    by _resolve_strategy ('auto' measures the index; a forced branch
+    is taken as given):
+
+    - ``direct``: the inverted-index self-join with immediate map-side
+      combine. Candidate volume is Σ df², which wins decisively on
+      head-free (cluster-driven) data where candidate materialization
+      costs more than it saves (measured 14 s vs 82 s at the 10× smoke),
+      but dies under a web-scale Zipf head (one boilerplate shingle with
+      df = 10⁸ ⇒ 10¹⁶ candidate rows regardless of true duplication).
+    - ``prefix``: the PREFIX LEMMA. If i >= ceil(t·n_a), at most
+      n_a − ceil(t·n_a) of a's shingles miss b, so a's first
+      n_a − ceil(t·n_a) + 1 shingles in ANY fixed order must meet b.
+      Ordering rarest-first (per-(lang, shingle) df is the sort key —
+      no global sort; pairs only form within a lang, where the order is
+      consistent across any two docs that could pair) means the Zipf
+      head contributes ~nothing: hot shingles never make rarest-first
+      prefixes. Candidates form prefix×prefix for the symmetric ops and
+      prefix×full for containment (the lemma bounds only the contained
+      side's misses). Under df_cap the lemma still holds relative to
+      the capped intersection: the prefix length uses the exact n
+      (n >= n_capped, and n − ceil(t·n) + 1 is nondecreasing in n), so
+      the prefix is only ever LONGER than the capped bound requires.
+    - ``banded``: the op's dense-regime sketch candidates (``spec.banded``)
+      — for when the priced volume is past the absolute budget and the
+      concentration probe reads dense, the regime where both exact plans
+      measured quadratic at true-sf1. Recall < 1 by a documented
+      per-op contract; the exact verify means no false positives.
+
+    Both exact plans are exact over the SAME index, so forcing either
+    yields identical results (the oracle checks whichever runs). The
+    prefix and banded candidates are ``ckpt``-materialized and scored by
+    the candidate-restricted exact _verify."""
+    strategy = _resolve_strategy(strategy, ix)
+    a, b = spec.a, spec.b
+
+    def joined(left: DataFrame, right: DataFrame) -> DataFrame:
+        return (
+            left.select(F.col("doc_id").alias(a), "lang", "shingle")
+            .join(
+                right.select(F.col("doc_id").alias(b), "lang", "shingle"),
+                ["lang", "shingle"],
+            )
+            .filter(spec.pair(F.col(a), F.col(b)))
+        )
+
+    if strategy == "direct":
+        inter = joined(ix.idx, ix.idx).groupBy(a, b).agg(F.count("*").alias("i"))
+    else:
+        if strategy == "banded":
+            cand = spec.banded(ix.idx)
+        else:
+            w = Window.partitionBy("doc_id").orderBy("df", "shingle")
+            prefix = (
+                ix.idx.join(ix.df_tbl, ["lang", "shingle"])
+                .withColumn("rk", F.row_number().over(w))
+                .join(ix.cnt, "doc_id")
+                .filter(F.col("rk") <= F.col("n") - F.expr(spec.i_min_sql) + 1)
+                .select("doc_id", "lang", "shingle")
+            )
+            right = prefix if spec.prefix_both else ix.idx
+            cand = joined(prefix, right).select(a, b).distinct()
+        inter = _verify(ix.idx, ckpt(cand), a, b)
+    na = ix.cnt.select(F.col("doc_id").alias(a), F.col("n").alias("na"))
+    nb = ix.cnt.select(F.col("doc_id").alias(b), F.col("n").alias("nb"))
+    return inter.join(na, a).join(nb, b)
 
 
 @query(
@@ -1595,144 +1602,48 @@ def q_containment_dedup(
     short doc lives inside a much longer one and symmetric Jaccard
     (|A∩B|/|A∪B|) stays far below any dedup threshold. Direction is
     pinned deterministically: only the smaller-into-larger containment is
-    emitted (tie on size -> lower doc_id is the contained side).
+    emitted (tie on size -> lower doc_id is the contained side). Pairs
+    come from the family pipeline (_pair_intersections: direct, prefix
+    or banded, chosen by ``strategy="auto"``).
 
-    Scale posture — ADAPTIVE between two EXACT plans, chosen from the
-    measured shingle-frequency distribution (one 1-row aggregate over
-    the df rollup, the cost-based-optimizer move):
+    What is this op's own:
 
-    - ``direct``: the inverted-index self-join with immediate partial
-      aggregation. Candidate volume is Σ df², but when the measured
-      Σ df² / |index| is small (no Zipf head — duplication lives in
-      bounded clusters) this plan wins decisively: intersection counts
-      flow straight into map-side combine with no candidate
-      materialization (measured 14 s vs 82 s at the 10× smoke, whose
-      duplication is all clusters, no head).
-    - ``prefix``: the CONTAINMENT PREFIX LEMMA plan. If |A∩B| >=
-      ceil(t*|A|), then at most |A| - ceil(t*|A|) of A's shingles miss
-      B, so A's first |A| - ceil(t*|A|) + 1 shingles in ANY fixed
-      global order must intersect B. Ordering rarest-first means
-      candidates form only through a contained-side PREFIX shingle
-      joined against the containing side's full index — the Zipf head
-      contributes ~nothing (hot shingles don't make rarest-first
-      prefixes), so candidate volume is Σ prefix_df(s)·df(s) instead of
-      Σ df². One-sided by necessity: the lemma bounds A's misses, not
-      B's. Survivors get the candidate-restricted exact verify. This is
-      the plan that survives a web-scale corpus where one boilerplate
-      shingle has df = 10^8 and Σ df² = 10^16 kills the direct join
-      regardless of true duplication.
-
-    ``strategy="auto"`` (default) measures Σ df² and Σ df on the
-    (possibly capped) index and picks direct while
-    Σ df² <= budget · Σ df; "direct"/"prefix" force a branch. The
-    choice depends only on exact integer counts — partition-layout
-    deterministic, and both branches return identical results (the
-    oracle checks whichever runs).
-
-    Prefix lengths use EXACT integer arithmetic (ceil(4n/5) as
-    (4n+4) div 5): the float ceil(0.8*n) overshoots whenever 0.8*n
-    rounds up past an integer (0.8*5 -> 4.0000000000000002 -> ceil 5),
-    silently shortening the prefix below the lemma's bound.
-
-    ``df_cap``: optional index cap on top (shingles with df > cap never
-    enter the index). The lemma still holds relative to the capped
-    intersection — capped-A misses at most n_capped - i_capped <=
-    n - ceil(t*n) capped shingles, so the exact-length prefix over the
-    capped index keeps every capped-surviving pair — but scores
-    underestimate (i counts capped shingles; |A| stays exact), the
-    documented recall trade.
+    - directed pairs (doc_sub != doc_sup) and the ONE-SIDED containment
+      prefix lemma: if |A∩B| >= ceil(t*|A|), A's first
+      |A| - ceil(t*|A|) + 1 rarest-first shingles must intersect B, so
+      candidates form through a contained-side PREFIX shingle joined
+      against the containing side's FULL index (the lemma bounds A's
+      misses, not B's); candidate volume is Σ prefix_df(s)·df(s)
+      instead of Σ df². ceil(4n/5) is the exact integer (4n+4) div 5:
+      the float ceil(0.8*n) overshoots whenever 0.8*n rounds up past
+      an integer (0.8*5 -> 4.0000000000000002 -> ceil 5), silently
+      shortening the prefix below the lemma's bound;
+    - ``df_cap``: optional index cap (shingles with df > cap never
+      enter the index); scores then underestimate (i counts capped
+      shingles; |A| stays exact), the documented recall trade;
+    - the banded recall contract: bottom-k sketch candidates
+      (_bottomk_containment_candidates — the ASYMMETRIC sketch, because
+      symmetric LSH is blind to small-doc-inside-large-doc pairs);
+      P[miss | C = 0.8] = P[Binom(8, 0.8) < 3] ≈ 1.2e-3 (measured 99 k
+      candidates vs 8.7 M prefix at true-sf1, where direct took 122 s
+      and prefix 84 s vs 2.8 s at sf0.1).
 
     ``checkpoint=False`` keeps the whole plan lazy (no materialized
     shingle/candidate barriers) so tests can assert the prefix
-    restriction in a single explain; production keeps the default.
-
-    ``banded`` (auto-selected only past the absolute pair budget when
-    the sampled concentration probe reads dense — the regime where both
-    exact plans measured quadratic at true-sf1: direct 122 s / prefix
-    84 s vs 2.8 s at sf0.1): bottom-k sketch candidates
-    (_bottomk_containment_candidates — the ASYMMETRIC sketch, because
-    symmetric LSH is blind to small-doc-inside-large-doc pairs) scored
-    by the SAME exact verify, so no false positives. Recall contract:
-    P[miss | C = 0.8] = P[Binom(8, 0.8) < 3] ≈ 1.2e-3 (measured 99 k
-    candidates vs 8.7 M prefix at sf1)."""
-    ckpt = reliable_checkpoint if checkpoint else (lambda df: df)
-    sh = ckpt(_shingle_df(spark, sf_dir, with_lang=True))
-    cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    idx = sh
-    # df keyed by (lang, shingle) — the SAME grouping df_cap filters on,
-    # so the strategy probe sees exactly the capped index's df
-    # distribution (a globally-hot shingle that is under-cap per lang
-    # stays in both the index and the probe). Pairs only form within a
-    # lang anyway, so per-lang df is also the right rarest-first key.
-    df_tbl = sh.groupBy("lang", "shingle").agg(F.count("*").alias("df"))
-    if df_cap is not None:
-        rare = df_tbl.filter(F.col("df") <= df_cap).select("lang", "shingle")
-        idx = sh.join(rare, ["lang", "shingle"], "left_semi")
-
-    strategy = _resolve_strategy(strategy, df_tbl, df_cap, idx)
-
-    if strategy == "direct":
-        sa = idx.select(F.col("doc_id").alias("doc_sub"), "lang", "shingle")
-        sb = idx.select(F.col("doc_id").alias("doc_sup"), "lang", "shingle")
-        inter = (
-            sa.join(sb, ["lang", "shingle"])
-            .filter(F.col("doc_sub") != F.col("doc_sup"))
-            .groupBy("doc_sub", "doc_sup")
-            .agg(F.count("*").alias("i"))
-        )
-    else:
-        if strategy == "banded":
-            cand = _bottomk_containment_candidates(idx)
-        else:
-            # rarest-first global order: df is the sort key, no global
-            # sort
-            w = Window.partitionBy("doc_id").orderBy("df", "shingle")
-            # ceil(0.8*n) exactly: (4n + 4) div 5
-            i_min = F.expr("(4 * n + 4) div 5")
-            prefix = (
-                idx.join(df_tbl, ["lang", "shingle"])
-                .withColumn("rk", F.row_number().over(w))
-                .join(cnt, "doc_id")
-                .filter(F.col("rk") <= F.col("n") - i_min + 1)
-                .select("doc_id", "lang", "shingle")
-            )
-            pa = prefix.select(
-                F.col("doc_id").alias("doc_sub"), "lang", "shingle"
-            )
-            full_b = idx.select(
-                F.col("doc_id").alias("doc_sup"), "lang", "shingle"
-            )
-            cand = (
-                pa.join(full_b, ["lang", "shingle"])
-                .filter(F.col("doc_sub") != F.col("doc_sup"))
-                .select("doc_sub", "doc_sup")
-                .distinct()
-            )
-        cand = ckpt(cand)
-        # exact verify, candidate-restricted on both sides (scales with
-        # candidates, not the corpus); under df_cap the intersection
-        # counts capped shingles only (documented capped semantics)
-        sa = idx.select(F.col("doc_id").alias("doc_sub"), "shingle")
-        sb = idx.select(F.col("doc_id").alias("doc_sup"), "shingle")
-        sa_c = sa.join(cand.select("doc_sub").distinct(), "doc_sub", "left_semi")
-        sb_c = sb.join(cand.select("doc_sup").distinct(), "doc_sup", "left_semi")
-        inter = (
-            sa_c.join(cand, "doc_sub")
-            .join(sb_c, ["doc_sup", "shingle"])
-            .groupBy("doc_sub", "doc_sup")
-            .agg(F.count("*").alias("i"))
-        )
-    ca = cnt.select(F.col("doc_id").alias("doc_sub"), F.col("n").alias("na"))
-    cb = cnt.select(F.col("doc_id").alias("doc_sup"), F.col("n").alias("nb"))
+    restriction in a single explain; production keeps the default."""
+    ckpt = reliable_checkpoint if checkpoint else _identity
+    spec = _PairSpec(
+        "doc_sub", "doc_sup", operator.ne, "(4 * n + 4) div 5",
+        prefix_both=False, banded=_bottomk_containment_candidates,
+    )
+    ix = _shingle_index(spark, sf_dir, df_cap, ckpt)
+    pairs = _pair_intersections(ix, strategy, spec, ckpt)
     containment = F.col("i").cast("double") / F.col("na")
     keep_dir = (F.col("na") < F.col("nb")) | (
         (F.col("na") == F.col("nb")) & (F.col("doc_sub") < F.col("doc_sup"))
     )
-    return (
-        inter.join(ca, "doc_sub")
-        .join(cb, "doc_sup")
-        .filter((containment >= 0.8) & keep_dir)
-        .select("doc_sub", "doc_sup", F.round(containment, 6).alias("containment"))
+    return pairs.filter((containment >= 0.8) & keep_dir).select(
+        "doc_sub", "doc_sup", F.round(containment, 6).alias("containment")
     )
 
 
@@ -1933,107 +1844,38 @@ def q_prefix_filter_join(
     shingles in that order, and candidate pairs form ONLY through shared
     prefix shingles — the prefix lemma guarantees no pair with Jaccard
     >= t is missed, so the result is EXACT (the oracle computes the full
-    threshold join). Survivors are verified with a candidate-restricted
-    exact intersection, same restrict-then-verify shape as q_dedup_near.
+    threshold join). Survivors are verified with the candidate-restricted
+    exact intersection (_verify), the same one q_dedup_near uses.
 
     Why a third technique: LSH banding (q_dedup_near) is probabilistic
     and tuned per threshold; the full inverted-index join
     (q_ngram_jaccard) pays Sum(df^2) over EVERY shingle. Prefix
     filtering is exact AND skips the Zipf head — hot shingles almost
     never appear in rarest-first prefixes, so candidate volume
-    concentrates on discriminative tokens. The df table is one rollup;
-    the global rarity order needs no global sort (df is the sort key
-    itself, computed per shingle).
+    concentrates on discriminative tokens.
 
-    ADAPTIVE like q_containment_dedup (round 5): the same 1-row df
-    probe picks a direct Σ df² self-join with map-side combine when the
-    measured expansion is bounded (head-free data — where candidate
-    materialization costs more than it saves; both branches exact), and
-    this prefix machinery when a Zipf head makes Σ df² unbounded by
-    true duplication. Prefix lengths use exact integer ceil
-    ((7n+9) div 10): the float ceil(0.7*n) overshoots whenever 0.7*n
-    rounds up past an integer, silently shortening the prefix below the
-    lemma's bound.
+    Adaptive like its siblings (_pair_intersections: direct / prefix /
+    banded). What is this op's own: the threshold t = 0.7, candidates
+    prefix×prefix, and the exact integer ceil(7n/10) = (7n+9) div 10 —
+    the float ceil(0.7*n) overshoots whenever 0.7*n rounds up past an
+    integer, silently shortening the prefix below the lemma's bound.
 
-    The shingle stream is CHECKPOINTED once: five consumers (df rollup,
-    rank join, per-doc counts, both verify sides) would otherwise each
-    re-explode the corpus. Materializing the tokenized stream is what a
-    production ppjoin index build does anyway — it IS the index's
-    ingest artifact — and a checkpoint (unlike an unscoped persist)
-    can't leak executor memory into later queries.
-
-    ``banded`` (auto, past the absolute pair budget under a dense
-    concentration verdict): MinHash-LSH candidates at r=2,
+    ``banded`` recall contract: MinHash-LSH candidates at r=2,
     b=_PREFIX_JOIN_BANDS — recall 1−(1−s²)^8 = 0.9954 at the 0.7
     threshold, ~1 above 0.8 — through the same exact verify. The
     banded tier is what survives the regime where the prefix lemma
     itself measured quadratic (66 s at true-sf1: a saturated
     vocabulary makes even rarest-first prefixes collide; 5.8 M prefix
     candidates vs ~10 k banded)."""
-    ckpt = reliable_checkpoint if checkpoint else (lambda df: df)
-    sh = ckpt(_shingle_df(spark, sf_dir, with_lang=True))
-    # (lang, shingle) df: pairs only form within a lang, so per-lang df
-    # is the right rarest-first key and matches the probe granularity
-    # used by the df_cap'd siblings
-    df_tbl = sh.groupBy("lang", "shingle").agg(F.count("*").alias("df"))
-    cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    strategy = _resolve_strategy(strategy, df_tbl, idx=sh)
-    if strategy == "direct":
-        sa = sh.select(F.col("doc_id").alias("doc_a"), "lang", "shingle")
-        sb = sh.select(F.col("doc_id").alias("doc_b"), "lang", "shingle")
-        inter = (
-            sa.join(sb, ["lang", "shingle"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("i"))
-        )
-    else:
-        if strategy == "banded":
-            cand = _banded_jaccard_candidates(
-                sh, _PREFIX_JOIN_BANDS, "doc_a", "doc_b"
-            )
-        else:
-            ranked = sh.join(df_tbl, ["lang", "shingle"])
-            w = Window.partitionBy("doc_id").orderBy("df", "shingle")
-            prefix_len = F.col("n") - F.expr("(7 * n + 9) div 10") + 1
-            prefix = (
-                ranked.withColumn("rk", F.row_number().over(w))
-                .join(cnt, "doc_id")
-                .filter(F.col("rk") <= prefix_len)
-                .select("doc_id", "lang", "shingle")
-            )
-            pa = prefix.select(
-                F.col("doc_id").alias("doc_a"), "lang", "shingle"
-            )
-            pb = prefix.select(
-                F.col("doc_id").alias("doc_b"), "lang", "shingle"
-            )
-            cand = (
-                pa.join(pb, ["lang", "shingle"])
-                .filter(F.col("doc_a") < F.col("doc_b"))
-                .select("doc_a", "doc_b")
-                .distinct()
-            )
-        cand = ckpt(cand)
-        sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-        sb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-        sa_c = sa.join(cand.select("doc_a").distinct(), "doc_a", "left_semi")
-        sb_c = sb.join(cand.select("doc_b").distinct(), "doc_b", "left_semi")
-        inter = (
-            sa_c.join(cand, "doc_a")
-            .join(sb_c, ["doc_b", "shingle"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("i"))
-        )
-    ca = cnt.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    cb = cnt.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    jac = F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
-    return (
-        inter.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .filter(jac >= _PREFIX_T)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    ckpt = reliable_checkpoint if checkpoint else _identity
+    spec = _PairSpec(
+        "doc_a", "doc_b", operator.lt, "(7 * n + 9) div 10", prefix_both=True,
+        banded=functools.partial(
+            _banded_jaccard_candidates, n_bands=_PREFIX_JOIN_BANDS
+        ),
     )
+    ix = _shingle_index(spark, sf_dir, ckpt=ckpt)
+    return _jaccard_at(_pair_intersections(ix, strategy, spec, ckpt), _PREFIX_T)
 
 
 # ---------------------------------------------------------------------------
@@ -3644,16 +3486,7 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference counterpart (SURVEY.md §2-A)."""
     sh = _shingle_df(spark, sf_dir)
     pairs = reliable_checkpoint(_band_pairs(spark, sf_dir, sh))
-    sa = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    sa_c = sa.join(pairs.select("doc_a").distinct(), "doc_a", "left_semi")
-    sb_c = sb.join(pairs.select("doc_b").distinct(), "doc_b", "left_semi")
-    inter = (
-        sa_c.join(pairs, "doc_a")
-        .join(sb_c, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count("*").alias("i"))
-    )
+    inter = _verify(sh, pairs, "doc_a", "doc_b")
     ts = spark.createDataFrame(
         [(t,) for t in _SWEEP_THRESHOLDS], "t bigint"
     )
@@ -4099,91 +3932,23 @@ def q_dedup_strategy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigint Σ df² can represent, the decisions are identical, and
     test_plans pins report == choose_dedup_strategy() on the fixtures.
 
-    Scale posture: two linear rollups + the 1/16-sampled concentration
-    join (~1/256 of the full pair volume — the same affordable
-    pre-flight the chooser itself runs past the absolute budget), all
-    reduced to one row. Reference basis: no reference counterpart (the
+    Scale posture: one linear rollup + the chooser's own lazy
+    _concentration relation (the 1/16-sampled flagged self-join, ~1/256
+    of the full pair volume), all reduced to one row. The tail verdict
+    reads the sampled rollup's df; the DuckDB twin reads the full
+    df_tbl, and the two agree exactly because the content-keyed sample
+    keeps whole shingles. Reference basis: no reference counterpart (the
     reference has no query layer, readme.md:43); this operationalizes
     round 11's "measured the hazard" profile into "the engine's own
     routing, audited"."""
-    sh = _shingle_df(spark, sf_dir, with_lang=True)
-    df_tbl = sh.groupBy("lang", "shingle").agg(F.count("*").alias("df"))
-    vol = df_tbl.agg(
+    ix = _shingle_index(spark, sf_dir)
+    vol = ix.df_tbl.agg(
         F.coalesce(F.sum(F.col("df") * F.col("df")), F.lit(0))
         .cast("bigint")
         .alias("sum_df2"),
         F.coalesce(F.sum("df"), F.lit(0)).cast("bigint").alias("n_rows"),
     )
-    samp = sh.filter(_concentration_sample_pred())
-    df_s = samp.groupBy("lang", "shingle").agg(F.count("*").alias("df"))
-    priced = df_s.agg(
-        F.coalesce(F.sum(F.expr("df*(df-1) DIV 2")), F.lit(0))
-        .cast("bigint")
-        .alias("priced")
-    )
-    # ONE flagged self-join yields BOTH pair counts (r13 fusion of the
-    # former full + head-excluded-tail sampled self-joins, which each
-    # rebuilt the sampled index and re-shuffled ~the same pair volume —
-    # the tail join is a subset of the full one): tail membership of a
-    # PAIR is an OR over its generating shingles' is_tail, so carrying
-    # the per-shingle flag (full df <= cap, a function of the join key)
-    # through the join and max()-ing it per distinct (lang, a, b) group
-    # counts tail pairs exactly — actual == |pairs sharing >=1 sampled
-    # shingle|, actual_t == |pairs sharing >=1 sampled TAIL shingle|,
-    # integer-identical to the two-join form the DuckDB twin mirrors.
-    tailflag = df_tbl.select(
-        "lang",
-        "shingle",
-        (F.col("df") <= _HEAD_PROBE_DF_CAP).cast("int").alias("is_tail"),
-    )
-    sampf = samp.join(tailflag, ["lang", "shingle"], "left")
-    sa = sampf.alias("pa")
-    sb = sampf.alias("pb")
-    both = (
-        sa.join(
-            sb,
-            (F.col("pa.lang") == F.col("pb.lang"))
-            & (F.col("pa.shingle") == F.col("pb.shingle"))
-            & (F.col("pa.doc_id") < F.col("pb.doc_id")),
-        )
-        .select(
-            F.col("pa.lang").alias("lang"),
-            F.col("pa.doc_id").alias("a"),
-            F.col("pb.doc_id").alias("b"),
-            F.col("pa.is_tail").alias("is_tail"),
-        )
-        .groupBy("lang", "a", "b")
-        .agg(F.max("is_tail").alias("t"))
-        .agg(
-            F.count("*").cast("bigint").alias("actual"),
-            F.coalesce(F.sum("t"), F.lit(0)).cast("bigint").alias("actual_t"),
-        )
-    )
-    # tail priced volume: df_s IS the per-(lang, shingle) sampled df, so
-    # restricting it to tail shingles equals re-aggregating the tail
-    # sample (the old tsamp groupBy) without the extra token-scale pass
-    priced_t = (
-        df_s.join(
-            tailflag.filter(F.col("is_tail") == 1).select("lang", "shingle"),
-            ["lang", "shingle"],
-            "left_semi",
-        ).agg(
-            F.coalesce(F.sum(F.expr("df*(df-1) DIV 2")), F.lit(0))
-            .cast("bigint")
-            .alias("priced_t")
-        )
-    )
-    conc = priced.crossJoin(both).crossJoin(priced_t).select(
-        F.expr(
-            "CASE WHEN actual = 0 THEN CAST(-1 AS BIGINT)"
-            " ELSE CAST(priced * 1000 DIV actual AS BIGINT) END"
-        ).alias("combine_x1000"),
-        F.expr(
-            "CASE WHEN actual_t = 0 THEN CAST(-1 AS BIGINT)"
-            " ELSE CAST(priced_t * 1000 DIV actual_t AS BIGINT) END"
-        ).alias("tail_combine_x1000"),
-    )
-    return vol.crossJoin(conc).select(
+    return vol.crossJoin(_concentration(ix)).select(
         "sum_df2",
         "n_rows",
         F.expr("CAST((sum_df2 - n_rows) DIV 2 AS BIGINT)").alias(

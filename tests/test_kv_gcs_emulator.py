@@ -288,3 +288,27 @@ def test_shim_binds_real_api_core_exception_when_on_disk(sdk_env):
         assert "GoogleAPICallError" in mro
     # either way the active class is exactly what Blob raises on 412
     assert gcs_sdk_shim._PRECONDITION_CLS is exc.PreconditionFailed
+
+
+def test_emulator_import_loads_no_engine():
+    """The emulator process (and anything else that needs only a
+    pot_spark.kv submodule) must not pay for pyspark/pyarrow: the
+    package __init__s re-export PotStore/PotClient lazily."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import sys, pot_spark.kv.gcs_emulator; "
+            "print(sorted(m for m in ('pyspark', 'pyarrow') if m in sys.modules))",
+        ],
+        capture_output=True,
+        text=True,
+        cwd=repo,
+        check=True,
+    )
+    assert out.stdout.strip() == "[]", out.stdout
+

@@ -1662,11 +1662,40 @@ def test_force_exact_env_reroutes_banded(spark, sf_dir, monkeypatch):
     monkeypatch.setenv(llm_dedup.FORCE_EXACT_ENV, "1")
     assert llm_dedup.choose_dedup_strategy(spark, sf_dir) == "prefix"
     # explicit banded is not overridden — only the auto transition is
+    ix = llm_dedup._shingle_index(spark, sf_dir)
+    assert llm_dedup._resolve_strategy("banded", ix) == "banded"
+
+
+def test_shingle_index_keeps_whole_shingle_groups(spark, sf_dir):
+    """The concentration probe reads its head/tail flag off the SAMPLED
+    df rollup, which is exact only while the index holds whole
+    (lang, shingle) groups. Pin both halves: under df_cap every
+    under-cap group survives with exactly its df_tbl row count (and no
+    over-cap group survives), and for every sampled shingle the sampled
+    df equals the full df, capped or not."""
     from pyspark.sql import functions as F
 
-    sh = llm_dedup._shingle_df(spark, sf_dir, with_lang=True)
-    df_tbl = sh.groupBy("lang", "shingle").agg(F.count("*").alias("df"))
-    assert llm_dedup._resolve_strategy("banded", df_tbl) == "banded"
+    from pot_spark.queries import llm_dedup
+
+    cap = 3
+    ix = llm_dedup._shingle_index(spark, sf_dir, df_cap=cap)
+    assert ix.df_tbl.filter(F.col("df") > cap).count() > 0  # cap bites
+    kept = ix.idx.groupBy("lang", "shingle").agg(F.count("*").alias("k"))
+    under = ix.df_tbl.filter(F.col("df") <= cap)
+    both = kept.join(under, ["lang", "shingle"], "full_outer")
+    assert both.count() == under.count() > 0
+    assert both.filter(~F.col("k").eqNullSafe(F.col("df"))).count() == 0
+
+    for df_cap in (None, cap):
+        ix = llm_dedup._shingle_index(spark, sf_dir, df_cap=df_cap)
+        df_s = (
+            ix.idx.filter(llm_dedup._concentration_sample_pred())
+            .groupBy("lang", "shingle")
+            .agg(F.count("*").alias("df_s"))
+        )
+        cmp = df_s.join(ix.df_tbl, ["lang", "shingle"], "left")
+        assert cmp.count() > 0
+        assert cmp.filter(~F.col("df_s").eqNullSafe(F.col("df"))).count() == 0
 
 
 def test_banded_recall_constants_match_formula():

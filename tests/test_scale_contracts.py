@@ -135,12 +135,7 @@ def test_cost_plan_agrees_with_op_probe(spark, sf_dir):
     s1 = direct.est_shuffle_rows
     s2 = 2 * direct.est_candidate_pairs + s1  # pairs = (s2 - s1) / 2
     affordable = d._direct_affordable(float(s2), s1)
-    df_tbl = (
-        d._shingle_df(spark, sf_dir, with_lang=True)
-        .groupBy("lang", "shingle")
-        .agg(F.count("*").alias("df"))
-    )
-    probe = d._resolve_strategy("auto", df_tbl)
+    probe = d._resolve_strategy("auto", d._shingle_index(spark, sf_dir))
     assert (probe == "direct") == affordable
     # the public chooser IS the probe
     assert d.choose_dedup_strategy(spark, sf_dir) == probe

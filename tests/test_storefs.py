@@ -13,8 +13,11 @@ and the LocalStoreFS/ObjectStoreFS walk/paths contract parity.
 
 from __future__ import annotations
 
+import io
 import json
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from pot_spark.kv.backend import ConditionalPutBackend
@@ -610,3 +613,29 @@ def test_bucket_rooted_request_counts_per_op(bucket_store_parts):
         calls.clear()
         store.create("p", {"id": f"new{i}"})
         assert (sum(calls.values()), calls.get("list")) == (9, 4), calls
+
+
+@pytest.mark.parametrize("kind", ["local", "object", "fsspec"])
+def test_snapshot_parquet_has_no_dictionary_page(kind, tmp_path, request):
+    """Snapshot parts are (key, doc) with both columns all-unique, so
+    every StoreFS writes them without dictionary encoding."""
+    if kind == "local":
+        fs, path = LocalStoreFS(), str(tmp_path / "part-00000.parquet")
+    elif kind == "object":
+        fs = ObjectStoreFS(request.getfixturevalue("bucket_store_parts"))
+        path = "pots/snap/part-00000.parquet"
+    else:
+        fs, path = FsspecStoreFS(_MemFS()), "bucket/snap/part-00000.parquet"
+    table = pa.table(
+        {
+            "key": [f"k{i}" for i in range(64)],
+            "doc": [json.dumps({"name": f"k{i}", "v": i}) for i in range(64)],
+        }
+    )
+    fs.write_parquet(table, path)
+    meta = pq.ParquetFile(io.BytesIO(fs.read_bytes(path))).metadata
+    cols = [meta.row_group(0).column(i) for i in range(meta.num_columns)]
+    assert len(cols) == 2
+    assert not any(c.has_dictionary_page for c in cols), kind
+    assert fs.read_parquet(path, table.schema).equals(table)
+

@@ -129,6 +129,11 @@ NOTES = {
     "concentrates on discriminative shingles; verify is candidate-"
     "restricted; the df probe falls back to the direct map-side-combine "
     "join on head-free data.",
+    "q_ngram_jaccard": "the third user of the shared candidate->verify "
+    "pipeline (_pair_intersections), at t=0.3: the same prefix×prefix "
+    "candidates as q_prefix_filter_join with the (3n+9) div 10 prefix "
+    "length, and the same left-semi-restricted exact verify. Shown with "
+    "checkpoint=False + strategy='prefix'.",
     "q_sessionize": "gap sessionization: ONE hashpartitioning(user_id) "
     "exchange serves the lag window, the running-sum session id, and the "
     "per-session rollup — never a global sort.",
@@ -247,6 +252,7 @@ import functools  # noqa: E402
 
 from pot_spark.queries.llm_dedup import (  # noqa: E402
     q_containment_dedup,
+    q_ngram_jaccard,
     q_prefix_filter_join,
 )
 
@@ -256,6 +262,9 @@ _UNCHECKPOINTED = {
     ),
     "q_prefix_filter_join": functools.partial(
         q_prefix_filter_join, checkpoint=False, strategy="prefix"
+    ),
+    "q_ngram_jaccard": functools.partial(
+        q_ngram_jaccard, checkpoint=False, strategy="prefix"
     ),
 }
 
