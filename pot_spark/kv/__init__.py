@@ -10,10 +10,10 @@ import importlib
 
 from pot_spark.kv.errors import CommitConflict, NoRewriteViolated
 
-# PEP 562 lazy re-exports: store.py (and client.py through it) imports
-# pyspark and pyarrow, so an eager import here would make every
-# pot_spark.kv submodule pay for the engine — the GCS emulator process
-# included, which never touches a pot.
+# PEP 562 lazy re-exports: store.py imports pyspark and pyarrow, so an
+# eager import here would make every pot_spark.kv submodule pay for the
+# engine — the GCS emulator and HTTP client processes included, which
+# never open a store.
 _LAZY = {
     "PotStore": "pot_spark.kv.store",
     "CreateResponse": "pot_spark.kv.store",

@@ -23,7 +23,7 @@ import urllib.request
 from typing import Any, Callable, Optional
 
 from pot_spark.kv.errors import CommitConflict, NoRewriteViolated
-from pot_spark.kv.store import derive_key
+from pot_spark.kv.keys import derive_key
 
 
 def format_go_duration(seconds: float) -> str:

@@ -5,7 +5,11 @@ so a user driving pot over HTTP (e.g. the OPA bundle workflow,
 reference docs/howto_opa.md) can point the same client here.
 
 Routes (all paths are pot paths, leading slash stripped):
-  GET    /<path>          -> full pot content map  (server_routes.go:43-53)
+  GET    /<path>          -> full pot content map  (server_routes.go:43-53),
+                             served as PotStore.get_json builds it from
+                             the stored doc text (no decode + re-encode);
+                             doc text that is not exactly one JSON value
+                             answers 500, never a 200
   GET    /<path>:list     -> {"paths": [...]}      (":list" suffix dispatch)
   POST   /<path>          -> upsert; body = one doc (key: id over name) or,
                              with ?batch, a {key: doc} map
@@ -34,7 +38,12 @@ Deliberate deviations from the reference's route quirks:
   server_routes.go:106-126, so its error lands on a half-written
   response);
 - paths that escape the store root answer 400 (the reference's GCS
-  namespace cannot express escape, so it has no such case).
+  namespace cannot express escape, so it has no such case);
+- a GET body carries each doc as stored. Dict-plane docs are stored as
+  ``json.dumps`` output, so their body is what re-encoding would give;
+  doc text a ``create_df`` caller wrote in another form (other key order
+  or spacing, raw UTF-8) is served verbatim. It parses to the same
+  content.
 """
 
 from __future__ import annotations
@@ -81,21 +90,18 @@ class _PotHandler(BaseHTTPRequestHandler):
 
     # -- helpers ------------------------------------------------------------
 
-    def _send_json(self, obj, status: int = 200) -> None:
-        body = (json.dumps(obj) + "\n").encode()
+    def _send(self, status: int, content_type: str, body: bytes) -> None:
         self.send_response(status)
-        self.send_header("Content-Type", "application/json")
+        self.send_header("Content-Type", content_type)
         self.send_header("Content-Length", str(len(body)))
         self.end_headers()
         self.wfile.write(body)
 
+    def _send_json(self, obj, status: int = 200) -> None:
+        self._send(status, "application/json", (json.dumps(obj) + "\n").encode())
+
     def _send_error_text(self, status: int, msg: str) -> None:
-        body = (msg + "\n").encode()
-        self.send_response(status)
-        self.send_header("Content-Type", "text/plain; charset=utf-8")
-        self.send_header("Content-Length", str(len(body)))
-        self.end_headers()
-        self.wfile.write(body)
+        self._send(status, "text/plain; charset=utf-8", (msg + "\n").encode())
 
     def _rel_path(self) -> Optional[tuple[str, dict[str, list[str]]]]:
         """Decode the pot path; None (after a 400 response) for any path
@@ -137,7 +143,8 @@ class _PotHandler(BaseHTTPRequestHandler):
                 paths = self.store.list_paths(rel[: -len(":list")])
                 self._send_json({"paths": paths})
             else:
-                self._send_json(self.store.get(rel))
+                # the body is the stored doc text, validated by the store
+                self._send(200, "application/json", self.store.get_json(rel) + b"\n")
         except Exception as e:  # noqa: BLE001 - 500 like the reference
             self._send_error_text(500, str(e))
 

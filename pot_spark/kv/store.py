@@ -56,12 +56,16 @@ table, drops the touched keys with one `is_in` filter, appends the
 request's rows (the only docs it JSON-encodes) and writes one key-sorted
 part through `_write_snapshot`. Untouched docs ride along as their stored
 JSON text and are never decoded, so a write costs parquet I/O plus the
-delta's codec work. Both writers produce the identical (key, doc)
-parquet layout, so a pot written by either path is readable by both. At
-100 TB a pot is a table: bulk upserts go through `create_df` (left_anti
-+ union, one shuffle on key) or `create_df_bucketed` (only touched
-buckets rewritten), and `get_typed` projects the JSON documents to a
-typed DataFrame for the relational layer.
+delta's codec work. A dict-plane read joins the stored doc text into
+one JSON object body on Arrow (what the HTTP shim serves) and parses
+each doc text once (what `get` returns, and the validation of the
+body); `_read_content` is that one read. Both writers produce the
+identical (key, doc) parquet layout, so a pot written by either path is
+readable by both. At 100 TB a pot is a table: bulk upserts go through
+`create_df` (left_anti + union, one shuffle on key) or
+`create_df_bucketed` (only touched buckets rewritten), and `get_typed`
+projects the JSON documents to a typed DataFrame for the relational
+layer.
 """
 
 from __future__ import annotations
@@ -82,6 +86,7 @@ from pyspark.sql import functions as F
 
 from pot_spark.kv.backend import CommitBackend, LocalFSBackend
 from pot_spark.kv.errors import CommitConflict, NoRewriteViolated
+from pot_spark.kv.keys import derive_key
 from pot_spark.kv.storefs import LocalStoreFS
 
 _LOG = logging.getLogger("pot_spark.kv")
@@ -92,6 +97,39 @@ _MAX_COMMIT_RETRIES = 32
 
 DOC_SCHEMA = "key string, doc string"
 _ARROW_SCHEMA = pa.schema([("key", pa.string()), ("doc", pa.string())])
+# keys json.dumps quotes without escaping: printable ASCII minus '"' and '\'
+_PLAIN_KEY = r"^[ !#-\[\]-~]*$"
+_SCAN = json.JSONDecoder().scan_once
+
+
+def _join(arr: pa.Array, sep: str) -> pa.Scalar:
+    """All of ``arr``'s strings joined with ``sep`` by one Arrow kernel."""
+    one_row = pa.ListArray.from_arrays(pa.array([0, len(arr)], pa.int32()), arr)
+    return pc.binary_join(one_row, sep)[0]
+
+
+def _texts(arr: pa.Array) -> list[str]:
+    """``arr``'s strings as a list by one join and one split on NUL, far
+    cheaper than ``to_pylist``. No JSON text and no plain key holds a
+    NUL, so a stored string that does raises."""
+    texts = _join(arr, "\0").as_py().split("\0") if len(arr) else []
+    if len(texts) != len(arr):
+        raise ValueError("a stored key or doc holds a NUL")
+    return texts
+
+
+def _parse_doc(text: str) -> Any:
+    """``json.loads(text)``. Doc text that is one bare JSON value (all
+    that dict-plane writers store) goes straight to the C scanner, which
+    skips ``json.loads``'s whitespace handling; any other text, valid or
+    not, goes through ``json.loads``."""
+    try:
+        value, end = _SCAN(text, 0)
+        if end == len(text):
+            return value
+    except StopIteration:  # text does not start with a JSON value
+        pass
+    return json.loads(text)
 
 
 @dataclass
@@ -248,21 +286,6 @@ def _manifest_name(generation: int) -> str:
 
 def _bucket_of(n_buckets: int):
     return F.pmod(F.hash("key"), F.lit(n_buckets)).cast("int")
-
-
-def derive_key(doc: dict[str, Any]) -> str:
-    """`name` first, `id` overrides (server.go:347-354); zero-value key
-    when neither is present; non-string raises (reference panics)."""
-    key = ""
-    if "name" in doc:
-        if not isinstance(doc["name"], str):
-            raise TypeError(f"pot key must be a string, got {type(doc['name']).__name__}")
-        key = doc["name"]
-    if "id" in doc:
-        if not isinstance(doc["id"], str):
-            raise TypeError(f"pot key must be a string, got {type(doc['id']).__name__}")
-        key = doc["id"]
-    return key
 
 
 class PotStore:
@@ -437,13 +460,44 @@ class PotStore:
         tables = [self._fs.read_parquet(p, _ARROW_SCHEMA) for p in parts]
         return pa.concat_tables(tables) if tables else _ARROW_SCHEMA.empty_table()
 
-    def _read_content(self, manifest: Optional[_Manifest], path: str) -> dict[str, Any]:
+    def _read_content(
+        self, manifest: Optional[_Manifest], path: str
+    ) -> tuple[bytes, dict[str, Any]]:
+        """The one dict-plane read: ``manifest``'s content as the JSON
+        object body ``{"<key>": <doc text>, ...}`` and as a dict.
+
+        The body is joined on Arrow from the stored doc text, never from
+        decoded docs, with keys quoted as ``json.dumps`` quotes them, so
+        for dict-plane pots (doc text is ``json.dumps`` output) it equals
+        ``json.dumps`` of the dict byte for byte. The dict is each doc
+        text parsed on its own, which is also the validation: a null key
+        or doc, doc text that is not exactly one JSON value
+        (``json.JSONDecodeError``) or a key stored twice raises instead
+        of reaching a reader. Parsing the joined body instead would let
+        two broken docs (``{"p": 1`` and ``2}, "y": 3``) join into valid
+        JSON."""
         if manifest is None:
-            return {}
+            return b"{}", {}
         table = self._read_table(self._parts(path, manifest))
-        keys = table.column("key").to_pylist()
-        docs = table.column("doc").to_pylist()
-        return {k: json.loads(d) for k, d in zip(keys, docs)}
+        keys = table["key"].combine_chunks()
+        docs = table["doc"].combine_chunks()
+        if keys.null_count or docs.null_count:
+            raise ValueError(
+                f"generation {manifest.generation} of {path!r} stores a null key or doc"
+            )
+        plain = not pc.match_substring_regex(keys, _PLAIN_KEY).false_count
+        names = _texts(keys) if plain else keys.to_pylist()
+        content = {k: _parse_doc(d) for k, d in zip(names, _texts(docs))}
+        if len(content) != table.num_rows:
+            raise ValueError(
+                f"generation {manifest.generation} of {path!r} stores"
+                f" {table.num_rows} docs under {len(content)} keys"
+            )
+        if not plain:
+            # json.dumps's escaping of each key, without its quotes
+            keys = pa.array([json.dumps(k)[1:-1] for k in names], pa.string())
+        pairs = pc.binary_join_element_wise('"', keys, '": ', docs, "")
+        return b"{" + _join(pairs, ", ").as_buffer().to_pybytes() + b"}", content
 
     def _write_snapshot(self, path: str, name: str, table: pa.Table) -> None:
         """The one dict-plane snapshot writer: ``table`` (key, doc) as a
@@ -510,7 +564,22 @@ class PotStore:
     # -- public API: the pot surface ----------------------------------------
 
     def get(self, path: str) -> dict[str, Any]:
-        """Read-all at path; missing pot => empty map (server.go:468-491)."""
+        """Read-all at path; missing pot => empty map (server.go:468-491).
+        Raises on stored doc text that is not exactly one JSON value
+        (see `_read_content`)."""
+        return self._get(path)[1]
+
+    def get_json(self, path: str) -> bytes:
+        """`get` as the JSON object body the HTTP shim serves for
+        ``GET /<path>``: ``{"<key>": <doc text>, ...}`` built from the
+        stored doc text, with the same validation, read count and
+        generation-cache update as `get`. For dict-plane pots it equals
+        ``json.dumps(get(path)).encode()`` byte for byte; doc text
+        ``create_df`` stored in another form (other key order or
+        spacing, raw UTF-8) is served as stored, parsing equal."""
+        return self._get(path)[0]
+
+    def _get(self, path: str) -> tuple[bytes, dict[str, Any]]:
         self.metrics.bump(reads=1)
         manifest = self._latest_manifest(path)
         if manifest is not None:
@@ -523,7 +592,7 @@ class PotStore:
         replay old states). Valid until `vacuum` reclaims the snapshot;
         missing generation => empty map, mirroring get()'s missing-path
         semantics."""
-        return self._read_content(self._manifest_at(path, generation), path)
+        return self._read_content(self._manifest_at(path, generation), path)[1]
 
     def list_generations(self, path: str) -> list[tuple[int, float]]:
         """All retained (generation, committed_at) pairs, oldest first."""
@@ -1022,11 +1091,8 @@ class PotStore:
         Reads and decodes both snapshots whole, bucketed or not;
         `changes_df` is the scale path, and it prunes a bucketed pot to
         the buckets whose file entries differ before reading."""
-        old = self._read_content(self._manifest_at(path, from_generation), path)
-        if to_generation is None:
-            new = self.get(path)
-        else:
-            new = self._read_content(self._manifest_at(path, to_generation), path)
+        old = self.get_at(path, from_generation)
+        new = self.get(path) if to_generation is None else self.get_at(path, to_generation)
         out: dict[str, tuple[str, Optional[dict[str, Any]]]] = {}
         for k, v in new.items():
             if k not in old:

@@ -9,6 +9,7 @@ import json
 import urllib.error
 import urllib.request
 
+import pyarrow as pa
 import pytest
 
 from pot_spark.kv import PotStore
@@ -303,3 +304,146 @@ def test_http_contention_exactly_one_winner(srv):
     # the pot holds exactly the winner's doc
     winner = [w for w, s in results.items() if s == 201][0]
     assert _req(f"{base}/race/p")[1]["leader"]["holder"] == winner
+
+
+# -- GET body: built from the stored doc text, shape pinned to json.dumps --
+
+ESCAPED_KEYS = {
+    'q"uote': {"v": 1},
+    "back\\slash": {"v": [1, 2]},
+    "ctl\x01": {"n": None},
+    "ünï": {"s": "é"},
+    "plain": {"f": 1.5, "b": True},
+    "": {},
+}
+
+
+def _raw_get(url):
+    """(status, raw body bytes) of a GET, error statuses included."""
+    try:
+        with urllib.request.urlopen(url) as r:
+            return r.status, r.read()
+    except urllib.error.HTTPError as e:
+        return e.code, e.read()
+
+
+def _docs_df(spark, rows):
+    return spark.createDataFrame(
+        [(k, json.dumps(v, sort_keys=True)) for k, v in rows.items()],
+        schema="key string, doc string",
+    )
+
+
+@pytest.fixture()
+def spark_srv(spark, tmp_path):
+    store = PotStore(spark, str(tmp_path / "potroot"))
+    server = serve(store, port=0)
+    host, port = server.server_address[:2]
+    yield f"http://{host}:{port}", store
+    server.shutdown()
+
+
+def test_get_body_matches_reencoded_content_for_escaped_keys(srv):
+    base, store = srv
+    store.create_batch("esc/p", ESCAPED_KEYS)
+    assert store.get("esc/p") == ESCAPED_KEYS
+    want = (json.dumps(store.get("esc/p")) + "\n").encode()
+    assert _raw_get(f"{base}/esc/p") == (200, want)
+
+
+def test_get_body_of_missing_pot_is_empty_object(srv):
+    base, store = srv
+    assert _raw_get(f"{base}/nope/p") == (200, b"{}\n")
+    assert (json.dumps(store.get("nope/p")) + "\n").encode() == b"{}\n"
+
+
+def test_get_body_of_multi_part_bucketed_pot(spark_srv, spark):
+    base, store = spark_srv
+    docs = {f"k{i:03d}": {"v": i, "t": f"x{i % 7}"} for i in range(40)}
+    store.create_df_bucketed("bk/p", _docs_df(spark, docs), n_buckets=4)
+    store.create_df_bucketed("bk/p", _docs_df(spark, {"k001": {"v": -1}}), n_buckets=4)
+    m = store._latest_manifest("bk/p")
+    assert len(store._parts("bk/p", m)) > 1
+    got = store.get("bk/p")
+    assert got == {**docs, "k001": {"v": -1}}
+    assert _raw_get(f"{base}/bk/p") == (200, (json.dumps(got) + "\n").encode())
+
+
+def test_get_json_bookkeeping_matches_get(srv):
+    """One shim GET counts one read and refreshes the generation cache,
+    exactly as PotStore.get does."""
+    base, store = srv
+    store.create_batch("bk/g", {"a": {"v": 1}})
+    store.create_batch("bk/g", {"b": {"v": 2}})
+    store.generation_cache.clear()
+    reads = store.metrics.reads
+    assert _raw_get(f"{base}/bk/g")[0] == 200
+    assert store.metrics.reads == reads + 1
+    assert store.generation_cache == {"bk/g": 2}
+
+
+_GOOD = ("y", '{"v": 1}')
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [("x", "{not json"), _GOOD],
+        [("x", None), _GOOD],
+        [("x", ""), _GOOD],
+        [("x", '1, "zz": {}'), _GOOD],
+        # the spilled pair repeats a real key
+        [("x", '1, "y": {"v": 5}'), _GOOD],
+        # two broken fragments that join into valid JSON with as many
+        # pairs as rows, under the stored keys
+        [("x", '{"p": 1'), ("y", '2}, "y": 3')],
+        [("x", '{}\0{}'), _GOOD],
+    ],
+    ids=[
+        "unparseable",
+        "null",
+        "empty",
+        "spills_new_key",
+        "spills_existing_key",
+        "fragments_join",
+        "nul",
+    ],
+)
+def test_malformed_stored_doc_never_served_as_200(spark_srv, spark, rows):
+    base, store = spark_srv
+    store.create_df(
+        "bad/p", spark.createDataFrame(rows, schema="key string, doc string")
+    )
+    with pytest.raises(ValueError):  # json.JSONDecodeError included
+        store.get("bad/p")
+    with pytest.raises(ValueError):
+        store.get_at("bad/p", 1)
+    status, raw = _raw_get(f"{base}/bad/p")
+    assert status == 500, raw
+
+
+def test_key_stored_twice_never_served_as_200(srv, monkeypatch):
+    """No writer stores a key twice, but a snapshot read from disk that
+    does fails the read instead of collapsing to one doc."""
+    base, store = srv
+    store.create_batch("dup/p", {"a": {"v": 1}})
+    monkeypatch.setattr(
+        store, "_read_table", lambda parts: pa.table({"key": ["a", "a"], "doc": ["1", "2"]})
+    )
+    with pytest.raises(ValueError, match="2 docs under 1 keys"):
+        store.get("dup/p")
+    assert _raw_get(f"{base}/dup/p")[0] == 500
+
+
+@pytest.mark.parametrize("text", ['{"b":1,"a":"é"}', ' {"b":1,\n"a":"é"}\t'])
+def test_non_canonical_stored_text_is_served_verbatim(spark_srv, spark, text):
+    """create_df doc text in another form is served as stored; it parses
+    to the same content get() returns."""
+    base, store = spark_srv
+    store.create_df(
+        "raw/p", spark.createDataFrame([("x", text)], schema="key string, doc string")
+    )
+    status, raw = _raw_get(f"{base}/raw/p")
+    assert status == 200
+    assert raw == ('{"x": ' + text + "}\n").encode()
+    assert json.loads(raw) == store.get("raw/p") == {"x": {"b": 1, "a": "é"}}

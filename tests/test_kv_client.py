@@ -193,3 +193,60 @@ def test_election_example_http_mode_runs_clean():
     )
     assert res.returncode == 0, res.stdout + res.stderr
     assert "OK" in res.stdout
+
+
+def test_client_get_equals_store_get(srv):
+    """The client parses the shim's stored-text body back to exactly the
+    store's content, escaped keys and a missing pot included."""
+    base, store = srv
+    client = PotClient(base)
+    store.create_batch(
+        "eq/p",
+        {'q"uote': {"v": 1}, "back\\slash": {"l": [1]}, "ctl\x01": {}, "ünï": {"s": "é"}},
+    )
+    for path in ("eq/p", "eq/missing"):
+        assert client.get(path) == store.get(path)
+
+
+def test_client_get_equals_store_get_on_bucketed_pot(spark, tmp_path):
+    import json
+
+    store = PotStore(spark, str(tmp_path / "potroot"))
+    docs = {f"k{i:03d}": {"v": i} for i in range(24)}
+    store.create_df_bucketed(
+        "bk/p",
+        spark.createDataFrame(
+            [(k, json.dumps(v)) for k, v in docs.items()], schema="key string, doc string"
+        ),
+        n_buckets=4,
+    )
+    server = serve(store, port=0)
+    host, port = server.server_address[:2]
+    try:
+        got = PotClient(f"http://{host}:{port}").get("bk/p")
+    finally:
+        server.shutdown()
+    assert got == store.get("bk/p") == docs
+
+
+def test_client_import_loads_no_engine():
+    """A PotClient process needs only the standard library: importing
+    the client must not load pyspark or pyarrow."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import sys, pot_spark.kv.client; "
+            "print(sorted(m for m in ('pyspark', 'pyarrow') if m in sys.modules))",
+        ],
+        capture_output=True,
+        text=True,
+        cwd=repo,
+        check=True,
+    )
+    assert out.stdout.strip() == "[]", out.stdout

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Store-level KV latency by pot size: p50 of a single-doc ``create``, a
-whole-pot ``get`` and a 64-doc ``create_batch`` at 10, 1k, 5k and 20k
-docs, on ``LocalStoreFS`` with no SparkSession, plus the largest/smallest
-ratio of the ``create`` p50. The target for that ratio at 20k/10 docs is
-at most ~10x: a write should cost little more than its parquet I/O.
+whole-pot ``get``, the HTTP shim's whole-pot read ``get_json`` and a
+64-doc ``create_batch`` at 10, 1k, 5k and 20k docs, on ``LocalStoreFS``
+with no SparkSession, plus the largest/smallest ratio of the ``create``
+p50. The target for that ratio at 20k/10 docs is at most ~10x: a write
+should cost little more than its parquet I/O.
 
 Usage:
     python tools/kv_sizes.py                  # 10, 1000, 5000, 20000 docs
@@ -70,6 +71,7 @@ def one_size(n_docs: int, reps: int) -> dict[str, float]:
         return {
             "create": _p50_ms(create, reps),
             "get": _p50_ms(lambda: store.get("p"), reps),
+            "get_json": _p50_ms(lambda: store.get_json("p"), reps),
             "batch": _p50_ms(batch, reps),
         }
     finally:
@@ -87,12 +89,18 @@ def main() -> int:
     except (AttributeError, OSError):
         pass
 
-    print(f"| docs | create p50 ms | get p50 ms | {BATCH}-doc batch p50 ms |")
-    print("|---:|---:|---:|---:|")
+    print(
+        f"| docs | create p50 ms | get p50 ms | get_json p50 ms"
+        f" | {BATCH}-doc batch p50 ms |"
+    )
+    print("|---:|---:|---:|---:|---:|")
     results = {}
     for n in sizes:
         results[n] = r = one_size(n, args.reps)
-        print(f"| {n} | {r['create']:.1f} | {r['get']:.1f} | {r['batch']:.1f} |")
+        print(
+            f"| {n} | {r['create']:.1f} | {r['get']:.1f} | {r['get_json']:.1f}"
+            f" | {r['batch']:.1f} |"
+        )
     lo, hi = min(sizes), max(sizes)
     if lo != hi:
         ratio = results[hi]["create"] / results[lo]["create"]
