@@ -66,6 +66,20 @@ readable by both. At 100 TB a pot is a table: bulk upserts go through
 `create_df_bucketed` (only touched buckets rewritten), and `get_typed`
 projects the JSON documents to a typed DataFrame for the relational
 layer.
+
+Each store keeps a head cache: per path, the last validated head's
+(key, doc) arrays and GET body, under the head manifest's identity
+(generation, snapshot, bucket files). It rests on one invariant: a
+committed manifest and the snapshot it names never change (manifests
+are put-if-absent, snapshot dirs carry a nonce), so while the listed
+head has the cached identity, its content is the cached one — the
+Delta Lake client rule of keeping the last-read table state and only
+checking the log for a newer version. A shim GET then costs the head
+lookup (a listdir and a manifest read) instead of a parquet read and a
+per-doc parse; `get` skips the read but still parses, so each caller
+gets a fresh dict; an upsert merges onto the cached arrays. A snapshot
+damaged out of band under a cached head is no longer noticed by that
+process. Two stores over one root share nothing, like two processes.
 """
 
 from __future__ import annotations
@@ -75,6 +89,7 @@ import logging
 import threading
 import time
 import uuid
+from collections import OrderedDict
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterable, Optional
@@ -100,6 +115,13 @@ _ARROW_SCHEMA = pa.schema([("key", pa.string()), ("doc", pa.string())])
 # keys json.dumps quotes without escaping: printable ASCII minus '"' and '\'
 _PLAIN_KEY = r"^[ !#-\[\]-~]*$"
 _SCAN = json.JSONDecoder().scan_once
+# Head-cache budget per store (keys + doc text + GET body of each cached
+# head), LRU-evicted by path. Measured entry sizes (~200-byte docs): 5k
+# docs 0.96 MB of arrays + 0.95 MB of body, 32 docs 6 KB + 6 KB, 20k docs
+# 3.8 + 3.8 MB. So kv_local_large's working set (8 x 5k) is ~15 MB and
+# kv_bucket_small's (64 x 32) ~0.8 MB; 64 MiB holds either, or eight
+# 20k-doc pots, and bounds what a server process keeps.
+_HEAD_CACHE_BYTES = 64 << 20
 
 
 def _join(arr: pa.Array, sep: str) -> pa.Scalar:
@@ -132,6 +154,91 @@ def _parse_doc(text: str) -> Any:
     return json.loads(text)
 
 
+def _plain(keys: pa.Array) -> bool:
+    return not pc.match_substring_regex(keys, _PLAIN_KEY).false_count
+
+
+def _parse_docs(keys: pa.Array, docs: pa.Array, where: str) -> dict[str, Any]:
+    """Each doc text parsed on its own, under its key; this is also the
+    validation of a read. A null key or doc, doc text that is not
+    exactly one JSON value (``json.JSONDecodeError``) or a key stored
+    twice raises. Parsing the joined body instead would let two broken
+    docs (``{"p": 1`` and ``2}, "y": 3``) join into valid JSON."""
+    if keys.null_count or docs.null_count:
+        raise ValueError(f"{where} stores a null key or doc")
+    names = _texts(keys) if _plain(keys) else keys.to_pylist()
+    content = {k: _parse_doc(d) for k, d in zip(names, _texts(docs))}
+    if len(content) != len(keys):
+        raise ValueError(f"{where} stores {len(keys)} docs under {len(content)} keys")
+    return content
+
+
+def _body(keys: pa.Array, docs: pa.Array) -> bytes:
+    """The JSON object body ``{"<key>": <doc text>, ...}`` joined on
+    Arrow from the stored doc text, with keys quoted as ``json.dumps``
+    quotes them."""
+    if not _plain(keys):
+        # json.dumps's escaping of each key, without its quotes
+        keys = pa.array([json.dumps(k)[1:-1] for k in keys.to_pylist()], pa.string())
+    pairs = pc.binary_join_element_wise('"', keys, '": ', docs, "")
+    return b"{" + _join(pairs, ", ").as_buffer().to_pybytes() + b"}"
+
+
+@dataclass(frozen=True)
+class _Head:
+    """One validated pot head in a store's head cache: the identity of
+    the manifest it was read or written under, its (key, doc) arrays
+    and, once a GET built it, the body."""
+
+    ident: tuple
+    keys: pa.Array
+    docs: pa.Array
+    body: Optional[bytes] = None
+
+    @property
+    def nbytes(self) -> int:
+        return self.keys.nbytes + self.docs.nbytes + len(self.body or b"")
+
+
+class _HeadCache:
+    """Validated heads by path, at most ``_HEAD_CACHE_BYTES`` in all,
+    least recently used evicted first; a head over the budget is never
+    kept. Entries are immutable, so a hit needs no copy. A lookup hits
+    only on the caller's manifest identity, which is all correctness
+    rests on. An entry never gives way to an older generation of its
+    pot, so neither a reader that listed the head before a commit nor a
+    `get_at` pushes the newer head out (a pot deleted and recreated out
+    of band below its cached generation just misses until it passes
+    it)."""
+
+    def __init__(self) -> None:
+        self._guard = threading.Lock()
+        self._heads: OrderedDict[str, _Head] = OrderedDict()
+        self.nbytes = 0
+
+    def get(self, path: str, ident: tuple) -> Optional[_Head]:
+        with self._guard:
+            head = self._heads.get(path)
+            if head is None or head.ident != ident:
+                return None
+            self._heads.move_to_end(path)
+            return head
+
+    def put(self, path: str, head: _Head) -> None:
+        with self._guard:
+            old = self._heads.get(path)
+            if old is not None and old.ident[0] > head.ident[0]:
+                return
+            if old is not None:
+                self.nbytes -= self._heads.pop(path).nbytes
+            if head.nbytes > _HEAD_CACHE_BYTES:
+                return
+            self._heads[path] = head
+            self.nbytes += head.nbytes
+            while self.nbytes > _HEAD_CACHE_BYTES:
+                self.nbytes -= self._heads.popitem(last=False)[1].nbytes
+
+
 @dataclass
 class CreateResponse:
     """Mirror of the reference's CreateResponse (server.go:267-270)."""
@@ -160,6 +267,9 @@ class StoreMetrics:
     removes: int = 0
     lock_wait_s: float = 0.0
     lock_acquisitions: int = 0
+    # head-cache lookups of an existing pot's head (reads and upserts)
+    head_cache_hits: int = 0
+    head_cache_misses: int = 0
     span_seconds: dict = field(default_factory=dict)
     span_calls: dict = field(default_factory=dict)
 
@@ -216,6 +326,8 @@ class StoreMetrics:
                 "pot_local_lock_wait_seconds_total": self.lock_wait_s,
                 "pot_local_lock_acquisitions": self.lock_acquisitions,
                 "pot_local_lock_duration_avg_ms": self.avg_local_lock_duration_ms,
+                "pot_head_cache_hits": self.head_cache_hits,
+                "pot_head_cache_misses": self.head_cache_misses,
             }
             for name in sorted(self.span_seconds):
                 out[f"pot_span_{name}_seconds_total"] = self.span_seconds[name]
@@ -258,6 +370,13 @@ class _Manifest:
             files=m.get("files"),
         )
 
+    @property
+    def ident(self) -> tuple:
+        """What names this manifest's content. The generation alone does
+        not: a deleted and recreated pot starts again at 1."""
+        files = None if self.files is None else tuple(sorted(self.files.items()))
+        return self.generation, self.snapshot, files
+
     def snapshot_dirs(self) -> set[str]:
         """The top-level snapshot dirs this manifest references (bucket
         entries look like "<snapdir>/__b=<k>")."""
@@ -270,14 +389,17 @@ class _Manifest:
 @dataclass
 class _Stage:
     """What one attempt of the commit loop publishes: the manifest's
-    snapshot fields, and how to rewrite the staged data if a
-    cross-process vacuum reclaims it before the publish lands (None when
-    the attempt staged nothing, e.g. a metadata-only restore)."""
+    snapshot fields, how to rewrite the staged data if a cross-process
+    vacuum reclaims it before the publish lands (None when the attempt
+    staged nothing, e.g. a metadata-only restore), and what to run with
+    the committed manifest once the publish won, still under the path
+    lock."""
 
     snapshot: str
     n_keys: int
     files: Optional[dict[str, str]] = None
     restage: Optional[Callable[[], None]] = None
+    on_commit: Optional[Callable[["_Manifest"], None]] = None
 
 
 def _manifest_name(generation: int) -> str:
@@ -328,6 +450,7 @@ class PotStore:
         self._locks: dict[str, threading.RLock] = {}
         self._locks_guard = threading.Lock()
         self.metrics = StoreMetrics()
+        self._heads = _HeadCache()
         # per-path last-read generation cache, like the typed client's
         # (client.go:148-152); used by callers for lease renewal.
         self.generation_cache: dict[str, int] = {}
@@ -460,53 +583,65 @@ class PotStore:
         tables = [self._fs.read_parquet(p, _ARROW_SCHEMA) for p in parts]
         return pa.concat_tables(tables) if tables else _ARROW_SCHEMA.empty_table()
 
+    def _cached(self, path: str, manifest: _Manifest) -> Optional[_Head]:
+        """The head cache's entry for ``manifest``, counted as a hit or a
+        miss."""
+        head = self._heads.get(path, manifest.ident)
+        if head is None:
+            self.metrics.bump(head_cache_misses=1)
+        else:
+            self.metrics.bump(head_cache_hits=1)
+        return head
+
     def _read_content(
-        self, manifest: Optional[_Manifest], path: str
-    ) -> tuple[bytes, dict[str, Any]]:
-        """The one dict-plane read: ``manifest``'s content as the JSON
-        object body ``{"<key>": <doc text>, ...}`` and as a dict.
+        self, manifest: Optional[_Manifest], path: str, body: bool = False
+    ) -> Any:
+        """The one dict-plane read: ``manifest``'s content as a fresh dict,
+        or with ``body`` as the JSON object body ``{"<key>": <doc text>,
+        ...}``.
 
         The body is joined on Arrow from the stored doc text, never from
-        decoded docs, with keys quoted as ``json.dumps`` quotes them, so
-        for dict-plane pots (doc text is ``json.dumps`` output) it equals
-        ``json.dumps`` of the dict byte for byte. The dict is each doc
-        text parsed on its own, which is also the validation: a null key
-        or doc, doc text that is not exactly one JSON value
-        (``json.JSONDecodeError``) or a key stored twice raises instead
-        of reaching a reader. Parsing the joined body instead would let
-        two broken docs (``{"p": 1`` and ``2}, "y": 3``) join into valid
-        JSON."""
+        decoded docs (`_body`), so for dict-plane pots (doc text is
+        ``json.dumps`` output) it equals ``json.dumps`` of the dict byte
+        for byte. The dict is each doc text parsed on its own, which is
+        also the validation (`_parse_docs`): bad stored text raises
+        instead of reaching a reader.
+
+        The head cache is checked first. A committed manifest and the
+        snapshot it names never change, so under a cached identity the
+        snapshot is not read again: the body comes from the cache (built
+        on the first body read) and the dict is parsed from the cached
+        arrays. A miss reads the parts and validates them, and only a
+        read that validated is installed."""
         if manifest is None:
-            return b"{}", {}
-        table = self._read_table(self._parts(path, manifest))
-        keys = table["key"].combine_chunks()
-        docs = table["doc"].combine_chunks()
-        if keys.null_count or docs.null_count:
-            raise ValueError(
-                f"generation {manifest.generation} of {path!r} stores a null key or doc"
+            return b"{}" if body else {}
+        where = f"generation {manifest.generation} of {path!r}"
+        head = self._cached(path, manifest)
+        if head is None:
+            table = self._read_table(self._parts(path, manifest))
+            head = _Head(
+                manifest.ident,
+                table["key"].combine_chunks(),
+                table["doc"].combine_chunks(),
             )
-        plain = not pc.match_substring_regex(keys, _PLAIN_KEY).false_count
-        names = _texts(keys) if plain else keys.to_pylist()
-        content = {k: _parse_doc(d) for k, d in zip(names, _texts(docs))}
-        if len(content) != table.num_rows:
-            raise ValueError(
-                f"generation {manifest.generation} of {path!r} stores"
-                f" {table.num_rows} docs under {len(content)} keys"
-            )
-        if not plain:
-            # json.dumps's escaping of each key, without its quotes
-            keys = pa.array([json.dumps(k)[1:-1] for k in names], pa.string())
-        pairs = pc.binary_join_element_wise('"', keys, '": ', docs, "")
-        return b"{" + _join(pairs, ", ").as_buffer().to_pybytes() + b"}", content
+            content = _parse_docs(head.keys, head.docs, where)
+            if not body:
+                self._heads.put(path, head)
+                return content
+        elif not body:
+            return _parse_docs(head.keys, head.docs, where)
+        if head.body is None:
+            head = _Head(head.ident, head.keys, head.docs, _body(head.keys, head.docs))
+            self._heads.put(path, head)
+        return head.body
 
     def _write_snapshot(self, path: str, name: str, table: pa.Table) -> None:
-        """The one dict-plane snapshot writer: ``table`` (key, doc) as a
-        single key-sorted part. Doc text is written as given."""
+        """The one dict-plane snapshot writer: ``table`` (key, doc), which
+        the caller has sorted by key, as a single part. Doc text is
+        written as given."""
         snap_dir = self._snapshot_path(path, name)
         self._fs.makedirs(snap_dir)
-        self._fs.write_parquet(
-            table.sort_by("key"), self._fs.join(snap_dir, "part-00000.parquet")
-        )
+        self._fs.write_parquet(table, self._fs.join(snap_dir, "part-00000.parquet"))
 
     def _restage_if_vacuumed(
         self, path: str, committed: "_Manifest", restage: Callable[[], None]
@@ -566,8 +701,8 @@ class PotStore:
     def get(self, path: str) -> dict[str, Any]:
         """Read-all at path; missing pot => empty map (server.go:468-491).
         Raises on stored doc text that is not exactly one JSON value
-        (see `_read_content`)."""
-        return self._get(path)[1]
+        (see `_read_content`). Each call returns a fresh dict."""
+        return self._get(path, body=False)
 
     def get_json(self, path: str) -> bytes:
         """`get` as the JSON object body the HTTP shim serves for
@@ -576,15 +711,17 @@ class PotStore:
         generation-cache update as `get`. For dict-plane pots it equals
         ``json.dumps(get(path)).encode()`` byte for byte; doc text
         ``create_df`` stored in another form (other key order or
-        spacing, raw UTF-8) is served as stored, parsing equal."""
-        return self._get(path)[0]
+        spacing, raw UTF-8) is served as stored, parsing equal. While
+        the head is unchanged the body comes from the head cache: a head
+        lookup and no parquet read or parse (see `_read_content`)."""
+        return self._get(path, body=True)
 
-    def _get(self, path: str) -> tuple[bytes, dict[str, Any]]:
+    def _get(self, path: str, body: bool) -> Any:
         self.metrics.bump(reads=1)
         manifest = self._latest_manifest(path)
         if manifest is not None:
             self.generation_cache[path] = manifest.generation
-        return self._read_content(manifest, path)
+        return self._read_content(manifest, path, body)
 
     def get_at(self, path: str, generation: int) -> dict[str, Any]:
         """Time travel: read the pot as of a past generation (extension
@@ -592,7 +729,7 @@ class PotStore:
         replay old states). Valid until `vacuum` reclaims the snapshot;
         missing generation => empty map, mirroring get()'s missing-path
         semantics."""
-        return self._read_content(self._manifest_at(path, generation), path)[1]
+        return self._read_content(self._manifest_at(path, generation), path)
 
     def list_generations(self, path: str) -> list[tuple[int, float]]:
         """All retained (generation, committed_at) pairs, oldest first."""
@@ -737,6 +874,8 @@ class PotStore:
                 if won:
                     if staged.restage is not None:
                         self._restage_if_vacuumed(path, committed, staged.restage)
+                    if staged.on_commit is not None:
+                        staged.on_commit(committed)
                     self.generation_cache[path] = generation
                     return committed
                 # lost the race: discard this attempt's stage, re-read, retry
@@ -773,7 +912,15 @@ class PotStore:
         consequences: doc text another writer stored in non-canonical
         form (``create_df``) stays as written, and an unparseable doc
         under an untouched key no longer fails an unrelated upsert
-        (``get`` still raises on it)."""
+        (``get`` still raises on it).
+
+        The base is the head cache's arrays when they are the head's.
+        A won commit installs the merged table as the new head, still
+        under the path lock so the next writer finds it, only if its base
+        was validated (a cached or empty head): a validated base plus
+        ``json.dumps`` rows stays valid, while a base read from parquet
+        may hold a bad untouched doc that a cached head would serve with
+        a 200."""
         keys = list(new_docs)
         added = pa.table(
             {
@@ -786,11 +933,13 @@ class PotStore:
 
         def stage(head: Optional[_Manifest], name: str) -> _Stage:
             with self._span("read"):
-                table = (
-                    _ARROW_SCHEMA.empty_table()
-                    if head is None
-                    else self._read_table(self._parts(path, head))
-                )
+                cached = None if head is None else self._cached(path, head)
+                if head is None:
+                    table = _ARROW_SCHEMA.empty_table()
+                elif cached is not None:
+                    table = pa.table([cached.keys, cached.docs], schema=_ARROW_SCHEMA)
+                else:
+                    table = self._read_table(self._parts(path, head))
             if require_generation is not None and (
                 head is None or head.generation != require_generation
             ):
@@ -820,8 +969,26 @@ class PotStore:
                 self._write_snapshot(path, name, merged)
 
             with self._span("write"):
+                merged = merged.sort_by("key")
                 write()
-            return _Stage(name, merged.num_rows, restage=write)
+
+            def install(committed: _Manifest) -> None:
+                self._heads.put(
+                    path,
+                    _Head(
+                        committed.ident,
+                        merged["key"].combine_chunks(),
+                        merged["doc"].combine_chunks(),
+                    ),
+                )
+
+            validated = head is None or cached is not None
+            return _Stage(
+                name,
+                merged.num_rows,
+                restage=write,
+                on_commit=install if validated and not merged["key"].null_count else None,
+            )
 
         committed = self._commit_mutation(path, stage)
         return CreateResponse(content=new_docs, generation=committed.generation)
@@ -1285,7 +1452,7 @@ class PotStore:
             snap_dir = self._snapshot_path(path, name)
             files: Optional[dict[str, str]] = None
             if self.spark is None:
-                table = self._read_table(self._parts(path, head))
+                table = self._read_table(self._parts(path, head)).sort_by("key")
 
                 def write() -> None:
                     self._write_snapshot(path, name, table)

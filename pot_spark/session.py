@@ -22,11 +22,15 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 DEFAULT_MASTER = os.environ.get("SPARK_GRAFT_MASTER", "")
 
 
-def get_spark(app_name: str = "pot_spark", cpus: str | None = None) -> SparkSession:
+def get_spark(
+    app_name: str = "pot_spark", cpus: str | None = None, ui_port: int | None = None
+) -> SparkSession:
     """Build (or reuse) the SparkSession with engine defaults.
 
     UTC session timezone is load-bearing: the DuckDB oracle compares
-    timestamps as UTC-naive values.
+    timestamps as UTC-naive values. ``ui_port`` serves the Spark UI and
+    its REST API on that port (off otherwise), so a profile reads the
+    same session config the bench runs.
     """
     cpus = cpus or DEFAULT_CPUS
     master = DEFAULT_MASTER or f"local[{cpus}]"
@@ -57,9 +61,11 @@ def get_spark(app_name: str = "pot_spark", cpus: str | None = None) -> SparkSess
         # Python DataSource readers (pot format) declare key pushdown
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
+        .config("spark.ui.enabled", str(ui_port is not None).lower())
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if ui_port is not None:
+        builder = builder.config("spark.ui.port", str(ui_port))
     if master.startswith("local-cluster"):
         # executor JVMs spawn their own Python workers, which need the
         # repo importable (UDF closures reference pot_spark modules);

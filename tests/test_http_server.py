@@ -131,6 +131,8 @@ def test_metrics_endpoint(srv):
     # span export rides along (otel.go:70-98 trace parity)
     assert m["pot_span_create_calls"] >= 1
     assert m["pot_span_local_lock_seconds_total"] <= m["pot_span_create_seconds_total"]
+    # the GET hit the head the POST installed
+    assert (m["pot_head_cache_hits"], m["pot_head_cache_misses"]) == (1, 0)
 
 
 def test_path_traversal_rejected_with_400(srv, tmp_path):
@@ -424,15 +426,21 @@ def test_malformed_stored_doc_never_served_as_200(spark_srv, spark, rows):
 
 def test_key_stored_twice_never_served_as_200(srv, monkeypatch):
     """No writer stores a key twice, but a snapshot read from disk that
-    does fails the read instead of collapsing to one doc."""
+    does fails the read instead of collapsing to one doc. Another store
+    over the root writes the pot (the other-process writer), so the
+    shim's store has no cached head and reads the snapshot; a read that
+    fails installs nothing, so every read fails again."""
     base, store = srv
-    store.create_batch("dup/p", {"a": {"v": 1}})
+    PotStore(None, store.root).create_batch("dup/p", {"a": {"v": 1}})
     monkeypatch.setattr(
         store, "_read_table", lambda parts: pa.table({"key": ["a", "a"], "doc": ["1", "2"]})
     )
-    with pytest.raises(ValueError, match="2 docs under 1 keys"):
-        store.get("dup/p")
-    assert _raw_get(f"{base}/dup/p")[0] == 500
+    for _ in range(2):
+        with pytest.raises(ValueError, match="2 docs under 1 keys"):
+            store.get("dup/p")
+        assert _raw_get(f"{base}/dup/p")[0] == 500
+    assert store.metrics.head_cache_hits == 0
+    assert store.metrics.head_cache_misses == 4
 
 
 @pytest.mark.parametrize("text", ['{"b":1,"a":"é"}', ' {"b":1,\n"a":"é"}\t'])
@@ -447,3 +455,50 @@ def test_non_canonical_stored_text_is_served_verbatim(spark_srv, spark, text):
     assert status == 200
     assert raw == ('{"x": ' + text + "}\n").encode()
     assert json.loads(raw) == store.get("raw/p") == {"x": {"b": 1, "a": "é"}}
+
+
+# -- head cache: a hit serves what a fresh read would, never a bad doc --
+
+
+def test_upsert_onto_unparseable_doc_never_caches_it(spark_srv, spark):
+    """A dict upsert onto a pot whose base came from parquet (here a
+    create_df with an unparseable doc under another key) caches nothing,
+    so the bad doc keeps failing every read."""
+    base, store = spark_srv
+    store.create_df(
+        "bad/u",
+        spark.createDataFrame([("x", "{not json"), _GOOD], schema="key string, doc string"),
+    )
+    for i in range(2):
+        store.create("bad/u", {"id": f"z{i}"})
+        with pytest.raises(ValueError):
+            store.get("bad/u")
+        for _ in range(2):
+            assert _raw_get(f"{base}/bad/u")[0] == 500
+    assert store.metrics.head_cache_hits == 0
+
+
+def test_cached_body_equals_a_fresh_read(spark_srv, spark):
+    """A GET served from the head cache (installed by a write, or by a
+    read of a multi-part bucketed pot) is the body another store reads
+    from the snapshot."""
+    base, store = spark_srv
+    store.create_batch("esc/p", ESCAPED_KEYS)
+    store.create("esc/p", {"id": 'k"ü', "v": 1})
+    docs = {f"k{i:03d}": {"v": i} for i in range(40)}
+    store.create_df_bucketed("bk/p", _docs_df(spark, docs), n_buckets=4)
+    store.create_df_bucketed("bk/p", _docs_df(spark, {"k001": {"v": -1}}), n_buckets=4)
+    assert store.get("bk/p")  # the read installs the bucketed head
+    store.get_json("bk/p")
+    for path in ("esc/p", "bk/p"):
+        hits = store.metrics.head_cache_hits
+        status, raw = _raw_get(f"{base}/{path}")
+        assert store.metrics.head_cache_hits == hits + 1
+        assert (status, raw) == (200, PotStore(None, store.root).get_json(path) + b"\n")
+    # an upsert onto the cached bucketed head caches its merge
+    store.create("bk/p", {"id": "k002", "v": -2})
+    hits = store.metrics.head_cache_hits
+    raw = _raw_get(f"{base}/bk/p")[1]
+    assert store.metrics.head_cache_hits == hits + 1
+    assert raw == PotStore(None, store.root).get_json("bk/p") + b"\n"
+    assert json.loads(raw)["k002"] == {"id": "k002", "v": -2}

@@ -909,3 +909,152 @@ def test_lost_race_commits_exactly_once(store, monkeypatch, op):
         assert store.get(path) == {"a": {"id": "a", "v": 1}}
     elif op != "create":
         assert store.get(path) == before
+
+
+# -- head cache: keyed by the head manifest's identity ----------------------
+
+
+def test_two_stores_on_one_root_see_each_others_writes(tmp_path):
+    """Each store caches its own heads, so two stores over one root act
+    like two processes: B's commit moves the head A lists, A misses and
+    reads it, and A's next upsert merges onto B's content."""
+    import shutil
+
+    root = str(tmp_path / "potroot")
+    a, b = PotStore(None, root), PotStore(None, root)
+    a.create_batch("p", {"x": {"v": 1}})
+    got = a.get("p")
+    assert got == {"x": {"v": 1}}
+    assert a.metrics.head_cache_hits == 1  # the write installed the head
+    got["x"]["v"] = -1  # each caller gets its own dict
+    assert a.get("p") == {"x": {"v": 1}}
+
+    b.create("p", {"id": "y"})
+    want = {"x": {"v": 1}, "y": {"id": "y"}}
+    misses = a.metrics.head_cache_misses
+    assert a.get("p") == want
+    assert a.get_json("p") == json.dumps(want).encode()
+    assert a.metrics.head_cache_misses == misses + 1
+
+    b.remove("p", "x")
+    a.create("p", {"id": "z"})
+    want = {"y": {"id": "y"}, "z": {"id": "z"}}
+    assert a.get("p") == b.get("p") == want
+    assert a.get_json("p") == b.get_json("p") == json.dumps(want).encode()
+
+    # deleted and recreated out of band: generation 1 again, but under a
+    # new snapshot name, so A's cached generation-1 head is not served
+    a.create_batch("q", {"old": {"v": 1}})
+    assert a.get("q") == {"old": {"v": 1}}
+    shutil.rmtree(tmp_path / "potroot" / "q")
+    assert b.create_batch("q", {"new": {"v": 2}}).generation == 1
+    assert a.get("q") == {"new": {"v": 2}}
+    assert a.get_json("q") == b'{"new": {"v": 2}}'
+
+
+def test_older_generation_never_replaces_the_cached_head(store):
+    """Time travel reads an older generation but keeps the head cached."""
+    store.create_batch("h/p", {"a": {"v": 1}})
+    store.create("h/p", {"id": "b"})
+    head = {"a": {"v": 1}, "b": {"id": "b"}}
+    m = store.metrics
+    assert store.get_at("h/p", 1) == {"a": {"v": 1}}
+    hits, misses = m.head_cache_hits, m.head_cache_misses
+    assert store.get("h/p") == head
+    assert store.changes("h/p", 1) == {"b": ("insert", {"id": "b"})}
+    assert store.get_json("h/p") == json.dumps(head).encode()
+    assert (m.head_cache_hits, m.head_cache_misses) == (hits + 3, misses + 1)
+
+
+def test_head_cache_budget_and_lru_eviction(tmp_path, monkeypatch):
+    """The cache stays within ``_HEAD_CACHE_BYTES``: the least recently
+    used head is evicted first, and a head over the budget on its own
+    is never cached."""
+    import pot_spark.kv.store as store_mod
+
+    root = str(tmp_path / "potroot")
+    docs = {f"k{i:03d}": {"v": i, "pad": "x" * 40} for i in range(50)}
+    writer = PotStore(None, root)
+    for p in ("p0", "p1", "p2"):
+        writer.create_batch(p, docs)
+    probe = PotStore(None, root)
+    probe.get_json("p0")
+    one = probe._heads.nbytes  # one head with its body
+    assert one > 0
+
+    def reads(store, paths):
+        """(hits, misses) of one get_json per path, in order."""
+        m = store.metrics
+        h0, m0 = m.head_cache_hits, m.head_cache_misses
+        for p in paths:
+            assert store.get_json(p) == writer.get_json(p)
+            assert store._heads.nbytes <= store_mod._HEAD_CACHE_BYTES
+        return m.head_cache_hits - h0, m.head_cache_misses - m0
+
+    monkeypatch.setattr(store_mod, "_HEAD_CACHE_BYTES", int(2.5 * one))
+    store = PotStore(None, root)
+    assert reads(store, ["p0", "p1", "p0"]) == (1, 2)
+    # p1 is now the least recently used: caching p2 evicts it, not p0
+    assert reads(store, ["p2"]) == (0, 1)
+    assert reads(store, ["p0", "p2"]) == (2, 0)
+    assert reads(store, ["p1"]) == (0, 1)
+
+    monkeypatch.setattr(store_mod, "_HEAD_CACHE_BYTES", one // 4)
+    store = PotStore(None, root)
+    assert reads(store, ["p0", "p0"]) == (0, 2)
+    assert store.get("p0") == store.get("p0") == docs
+    store.create("p0", {"id": "k000", "v": -1})  # a won write caches nothing
+    assert store._heads.nbytes == 0
+    assert store.metrics.head_cache_hits == 0
+
+
+def test_head_cache_under_concurrent_threads(tmp_path, monkeypatch):
+    """The shim drives one store from many threads. With more threads
+    than cores, a short switch interval and a budget that keeps
+    evicting, every read sees its own thread's write, the cache's byte
+    count stays equal to its entries' sizes and within the budget, and
+    the final pots equal what another store reads."""
+    import sys
+
+    import pot_spark.kv.store as store_mod
+
+    monkeypatch.setattr(store_mod, "_HEAD_CACHE_BYTES", 6000)
+    root = str(tmp_path / "potroot")
+    store = PotStore(None, root)
+    pots = ["t0", "t1", "t2"]
+    for p in pots:
+        store.create_batch(p, {"seed": {"v": 0}})
+    errors: list[BaseException] = []
+
+    def worker(w: int) -> None:
+        try:
+            for i in range(20):
+                p = pots[(w + i) % len(pots)]
+                store.create(p, {"id": f"w{w}-{i}", "pad": "x" * 20})
+                assert f"w{w}-{i}" in json.loads(store.get_json(p))
+                assert f"w{w}-{i}" in store.get(p)
+        except BaseException as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(w,)) for w in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    cache = store._heads
+    assert cache.nbytes == sum(h.nbytes for h in cache._heads.values())
+    assert cache.nbytes <= store_mod._HEAD_CACHE_BYTES
+    fresh = PotStore(None, root)
+    for k, p in enumerate(pots):
+        want = {"seed"} | {
+            f"w{w}-{i}" for w in range(8) for i in range(20) if (w + i) % 3 == k
+        }
+        assert set(store.get(p)) == want
+        assert store.get_json(p) == fresh.get_json(p)

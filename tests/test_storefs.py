@@ -588,10 +588,11 @@ def test_bucket_root_exists_probe_is_bounded(bucket_store_parts):
 def test_bucket_rooted_request_counts_per_op(bucket_store_parts):
     """Pin the object-store round trips of the two hot dict-plane ops on
     a 32-doc bucket-rooted pot, so a later change cannot quietly add a
-    probe back. get = list commits + fetch manifest + list snapshot +
-    fetch parquet (4, 2 lists). create = those 4 + snapshot dir probe
-    and marker + parquet upload + conditional manifest put + the
-    post-publish vacuum check (9, 4 lists)."""
+    probe back. The head is cached from the first write on, so no op
+    lists or fetches the snapshot. get = list commits + fetch manifest
+    (2, 1 list). create = those 2 + snapshot dir probe and marker +
+    parquet upload + conditional manifest put + the post-publish vacuum
+    check (7, 3 lists)."""
     client = bucket_store_parts
     store = _bucket_store(client)
     store.create_batch("p", {f"k{i:02d}": {"v": i} for i in range(32)})
@@ -609,10 +610,11 @@ def test_bucket_rooted_request_counts_per_op(bucket_store_parts):
     for i in range(3):
         calls.clear()
         assert len(store.get("p")) == 32 + i
-        assert (sum(calls.values()), calls.get("list")) == (4, 2), calls
+        assert (sum(calls.values()), calls.get("list")) == (2, 1), calls
         calls.clear()
         store.create("p", {"id": f"new{i}"})
-        assert (sum(calls.values()), calls.get("list")) == (9, 4), calls
+        assert (sum(calls.values()), calls.get("list")) == (7, 3), calls
+    assert (store.metrics.head_cache_hits, store.metrics.head_cache_misses) == (6, 0)
 
 
 @pytest.mark.parametrize("kind", ["local", "object", "fsspec"])

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Per-stage profile of one or more queries (guide §1/§7): runs each query
-through the noop sink on a UI-enabled session and prints the completed
-stages (duration, task count, shuffle read/write, input bytes, Python
-boundary time) from the Spark REST API — the evidence base for
-OPTIMIZATION_r13.md.
+through the noop sink on the bench's session config (``get_spark`` with
+the UI on) and prints the completed stages (duration, task count,
+shuffle read/write, input bytes, Python boundary time) from the Spark
+REST API — the evidence base for OPTIMIZATION_r13.md.
 
 Usage: [SPARK_GRAFT_SF_DIR=...] python tools/profile_query.py q_a [q_b ...]
 """
@@ -19,29 +19,9 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pot_spark import registry  # noqa: E402
+from pot_spark.session import get_spark  # noqa: E402
 
 UI_PORT = int(os.environ.get("SPARK_GRAFT_PROFILE_PORT", "4050"))
-
-
-def get_spark_ui(cpus: str = "32"):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile_query")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .getOrCreate()
-    )
 
 
 def _api(path: str):
@@ -53,7 +33,7 @@ def _api(path: str):
 def main() -> None:
     names = sys.argv[1:]
     registry.load_all_query_modules()
-    spark = get_spark_ui()
+    spark = get_spark("profile_query", ui_port=UI_PORT)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     app_id = spark.sparkContext.applicationId
     # warm the session the way bench.py does (JVM/codegen + page cache)
