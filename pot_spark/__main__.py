@@ -31,7 +31,7 @@ import json
 import sys
 
 from pot_spark.kv.errors import NoRewriteViolated
-from pot_spark.kv.store import PotStore
+from pot_spark.kv.store import open_store
 
 EXIT_NOREWRITE = 23  # mirrors the reference's HTTP 423 Locked
 
@@ -129,22 +129,9 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     args = ap.parse_args(argv)
-    if args.object_store is not None:
-        if not args.bucket:
-            ap.error("--object-store requires --bucket")
-        from pot_spark.kv.backend import ConditionalPutBackend
-        from pot_spark.kv.gcs_emulator import HttpObjectStoreClient
-        from pot_spark.kv.storefs import ObjectStoreFS
-
-        client = HttpObjectStoreClient(args.bucket, args.object_store)
-        store = PotStore(
-            None,
-            args.root,
-            backend=ConditionalPutBackend(client),
-            fs=ObjectStoreFS(client),
-        )
-    else:
-        store = PotStore(None, args.root)
+    if args.object_store is not None and not args.bucket:
+        ap.error("--object-store requires --bucket")
+    store = open_store(args.root, args.object_store, args.bucket)
 
     if args.cmd == "get":
         json.dump(store.get(args.path), sys.stdout, sort_keys=True)

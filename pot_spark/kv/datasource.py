@@ -47,7 +47,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from pot_spark.kv.store import _ARROW_SCHEMA, PotStore
+from pot_spark.kv.store import _ARROW_SCHEMA, PotStore, open_store
 
 if TYPE_CHECKING:
     from pyspark.sql.datasource import Filter
@@ -69,36 +69,16 @@ def _conn_fields(options) -> tuple[str, str, str | None, str | None]:
     root = options.get("root")
     if not root:
         raise ValueError('the pot data source requires .option("root", <dir>)')
-    endpoint = options.get("objectstore") or options.get("objectStore")
+    endpoint = options.get("objectstore") or options.get("objectStore") or None
     bucket = options.get("bucket")
     if endpoint and not bucket:
         raise ValueError('.option("objectStore", ...) requires .option("bucket", ...)')
     return root, options.get("path", ""), endpoint, bucket
 
 
-def _mk_store(root: str, endpoint: str | None, bucket: str | None) -> PotStore:
-    """Local-rooted by default; with an object-store endpoint the store
-    runs BUCKET-ROOTED — conditional-put commits and the snapshot data
-    plane through one namespace (kv/storefs.py), the same wiring as the
-    CLI's --object-store mode."""
-    if endpoint:
-        from pot_spark.kv.backend import ConditionalPutBackend
-        from pot_spark.kv.gcs_emulator import HttpObjectStoreClient
-        from pot_spark.kv.storefs import ObjectStoreFS
-
-        client = HttpObjectStoreClient(bucket, endpoint)
-        return PotStore(
-            spark=None,
-            root=root,
-            backend=ConditionalPutBackend(client),
-            fs=ObjectStoreFS(client),
-        )
-    return PotStore(spark=None, root=root)
-
-
 def _store(options) -> tuple[PotStore, str]:
     root, path, endpoint, bucket = _conn_fields(options)
-    return _mk_store(root, endpoint, bucket), path
+    return open_store(root, endpoint, bucket), path
 
 
 class PotDataSource(DataSource):
@@ -196,47 +176,49 @@ class PotDataSourceNoPushdown(PotDataSource):
         return PotReaderNoPushdown(self.options)
 
 
-class PotWriter(DataSourceWriter):
-    def __init__(self, options, overwrite: bool) -> None:
+class _StagedWriter:
+    """What the batch and streaming pot writers share: each executor task
+    buffers its rows into one parquet file (never a per-row write) under
+    the writer's stage dir, through the store's data-plane fs, so a
+    bucket-rooted pot stages straight into the bucket; the driver folds
+    the staged files into one {key: doc} batch. Subclasses name the
+    stage dir and the part files."""
+
+    _STAGE_PREFIX: str
+
+    def __init__(self, options, overwrite: bool = False) -> None:
         self._root, self._path, self._endpoint, self._bucket = _conn_fields(
             options
         )
         self._overwrite = overwrite
         store = self._mk()
         self._staging = store._fs.join(
-            store._pot_dir(self._path), f"stage-{uuid.uuid4().hex[:8]}"
+            store._pot_dir(self._path),
+            f"{self._STAGE_PREFIX}-{uuid.uuid4().hex[:8]}",
         )
 
     def _mk(self) -> PotStore:
-        return _mk_store(self._root, self._endpoint, self._bucket)
+        return open_store(self._root, self._endpoint, self._bucket)
+
+    def _part_name(self) -> str:
+        raise NotImplementedError
 
     def write(self, iterator) -> _StagedFile:
-        """Executor task: buffer this partition's rows into one staged
-        parquet file (never a per-row write) — through the store's
-        data-plane fs, so a bucket-rooted pot stages straight into the
-        bucket."""
-        from pyspark import TaskContext
-
         fs = self._mk()._fs
         fs.makedirs(self._staging)
-        pid = TaskContext.get().partitionId()
         keys, docs = [], []
         for row in iterator:
             keys.append(row[0])
             docs.append(row[1])
-        out = fs.join(self._staging, f"part-{pid:05d}.parquet")
+        out = fs.join(self._staging, self._part_name())
         fs.write_parquet(
             pa.Table.from_pydict({"key": keys, "doc": docs}, schema=_ARROW_SCHEMA),
             out,
         )
         return _StagedFile(out)
 
-    def commit(self, messages) -> None:
-        """Driver: fold the staged files into one batch and publish through
-        the store's commit protocol (append = merge upsert, overwrite =
-        replace) — the same all-or-nothing semantics as the HTTP batch
-        route (server.go:334-339)."""
-        store = self._mk()
+    @staticmethod
+    def _staged_docs(store: PotStore, messages) -> dict[str, dict]:
         docs: dict[str, dict] = {}
         for m in messages:
             if m is None:
@@ -244,6 +226,24 @@ class PotWriter(DataSourceWriter):
             t = store._fs.read_parquet(m.file, _ARROW_SCHEMA)
             for k, d in zip(t.column("key").to_pylist(), t.column("doc").to_pylist()):
                 docs[k] = json.loads(d)
+        return docs
+
+
+class PotWriter(_StagedWriter, DataSourceWriter):
+    _STAGE_PREFIX = "stage"
+
+    def _part_name(self) -> str:
+        from pyspark import TaskContext
+
+        return f"part-{TaskContext.get().partitionId():05d}.parquet"
+
+    def commit(self, messages) -> None:
+        """Driver: fold the staged files into one batch and publish through
+        the store's commit protocol (append = merge upsert, overwrite =
+        replace) — the same all-or-nothing semantics as the HTTP batch
+        route (server.go:334-339)."""
+        store = self._mk()
+        docs = self._staged_docs(store, messages)
         if self._overwrite:
             store.replace_batch(self._path, docs)
         else:
@@ -254,7 +254,7 @@ class PotWriter(DataSourceWriter):
         self._mk()._fs.rmtree(self._staging)
 
 
-class PotStreamWriter(DataSourceStreamWriter):
+class PotStreamWriter(_StagedWriter, DataSourceStreamWriter):
     """writeStream.format("pot"): every micro-batch is a keyed upsert
     published through the manifest commit, with the same per-epoch
     put-if-absent ledger the foreachBatch sink uses
@@ -263,44 +263,16 @@ class PotStreamWriter(DataSourceStreamWriter):
     Complete-mode streams pass overwrite=True and REPLACE the pot each
     epoch (replace_batch); update/append modes merge-upsert."""
 
-    def __init__(self, options, overwrite: bool = False) -> None:
-        self._root, self._path, self._endpoint, self._bucket = _conn_fields(
-            options
-        )
-        self._overwrite = overwrite
-        store = self._mk()
-        self._staging = store._fs.join(
-            store._pot_dir(self._path), f"stage-stream-{uuid.uuid4().hex[:8]}"
-        )
+    _STAGE_PREFIX = "stage-stream"
 
-    def _mk(self) -> PotStore:
-        return _mk_store(self._root, self._endpoint, self._bucket)
-
-    def write(self, iterator) -> _StagedFile:
-        fs = self._mk()._fs
-        fs.makedirs(self._staging)
-        keys, docs = [], []
-        for row in iterator:
-            keys.append(row[0])
-            docs.append(row[1])
-        out = fs.join(self._staging, f"part-{uuid.uuid4().hex}.parquet")
-        fs.write_parquet(
-            pa.Table.from_pydict({"key": keys, "doc": docs}, schema=_ARROW_SCHEMA),
-            out,
-        )
-        return _StagedFile(out)
+    def _part_name(self) -> str:
+        return f"part-{uuid.uuid4().hex}.parquet"
 
     def commit(self, messages, batchId: int) -> None:
         from pot_spark.streaming.sink import _epoch_done, _mark_epoch_done
 
         store = self._mk()
-        docs: dict[str, dict] = {}
-        for m in messages:
-            if m is None:
-                continue
-            t = store._fs.read_parquet(m.file, _ARROW_SCHEMA)
-            for k, d in zip(t.column("key").to_pylist(), t.column("doc").to_pylist()):
-                docs[k] = json.loads(d)
+        docs = self._staged_docs(store, messages)
         # commit FIRST, mark after: a replay of an unmarked-but-committed
         # epoch re-applies an identical upsert (harmless); marking first
         # would drop the epoch's data forever on a crash mid-commit.
@@ -349,7 +321,7 @@ class PotChangesStreamReader(SimpleDataSourceStreamReader):
         self._start = options.get("startingGeneration")
 
     def _store(self) -> PotStore:
-        return _mk_store(self._root, self._endpoint, self._bucket)
+        return open_store(self._root, self._endpoint, self._bucket)
 
     def _latest(self) -> int:
         m = self._store()._latest_manifest(self._path)

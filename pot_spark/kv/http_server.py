@@ -56,7 +56,8 @@ from typing import Optional
 from urllib.parse import parse_qs, unquote, urlparse
 
 from pot_spark.kv.errors import CommitConflict, NoRewriteViolated
-from pot_spark.kv.store import PotStore, derive_key
+from pot_spark.kv.keys import derive_key
+from pot_spark.kv.store import PotStore
 
 _GO_DURATION_UNITS = {
     "ns": 1e-9,

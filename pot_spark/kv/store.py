@@ -1501,3 +1501,23 @@ class PotStore:
             return _Stage(name, head.n_keys, files, restage)
 
         return self._commit(path, stage).generation
+
+
+def open_store(
+    root: str, endpoint: Optional[str] = None, bucket: Optional[str] = None
+) -> PotStore:
+    """A Spark-less store over ``root``: local-rooted by default; with an
+    object-store endpoint it runs BUCKET-ROOTED, with conditional-put
+    commits and the snapshot data plane through one namespace
+    (kv/storefs.py). The CLI's --object-store mode and the "pot" data
+    source both open their stores here."""
+    if endpoint is not None:
+        from pot_spark.kv.backend import ConditionalPutBackend
+        from pot_spark.kv.gcs_emulator import HttpObjectStoreClient
+        from pot_spark.kv.storefs import ObjectStoreFS
+
+        client = HttpObjectStoreClient(bucket, endpoint)
+        return PotStore(
+            None, root, backend=ConditionalPutBackend(client), fs=ObjectStoreFS(client)
+        )
+    return PotStore(None, root)

@@ -35,8 +35,9 @@ def _tokens() -> Column:
     return F.split("text", " ")
 
 
-def _shingles(toks: Column | None = None) -> Column:
-    """Distinct 3-token shingles (docs with <3 tokens excluded upstream).
+def _shingles(toks: Column | None = None, w: int = 3) -> Column:
+    """Distinct w-token shingles (docs with <w tokens excluded upstream).
+    w=3 is the family's width; q_shingle_size_sweep prices the others.
 
     Pass a pre-materialized token-array *column* where possible: inlining
     the split would re-tokenize the text for every element_at inside the
@@ -46,8 +47,8 @@ def _shingles(toks: Column | None = None) -> Column:
     # bounds-checked copy per shingle instead of three indexed lookups)
     return F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.size(t) - 2),
-            lambda i: F.array_join(F.slice(t, i, 3), " "),
+            F.sequence(F.lit(1), F.size(t) - (w - 1)),
+            lambda i: F.array_join(F.slice(t, i, w), " "),
         )
     )
 
@@ -104,14 +105,13 @@ def _shingle_df(
     spark: SparkSession, sf_dir: str, with_lang: bool = False,
     spread: bool = True,
 ) -> DataFrame:
-    """Exploded (doc_id[, lang], shingle) pairs — the ONE definition of
-    the shingle stream (incl. the size>=3 exclusion the _SHINGLES_SQL
-    oracles depend on). Deliberately NOT cached: block-store
-    serialization of the exploded table costs more than recomputing it
-    from the columnar scan (measured 6.7s vs 2.9s cold at sf0.1), and
-    at corpus scale the shingle table wouldn't fit in memory anyway —
-    recomputation keeps every consumer a pipelined scan."""
-    cols = ["doc_id", "lang"] if with_lang else ["doc_id"]
+    """Exploded (doc_id[, lang], shingle) pairs of the corpus — the ONE
+    definition of the shingle stream (_shingle_stream). Deliberately NOT
+    cached: block-store serialization of the exploded table costs more
+    than recomputing it from the columnar scan (measured 6.7s vs 2.9s
+    cold at sf0.1), and at corpus scale the shingle table wouldn't fit
+    in memory anyway — recomputation keeps every consumer a pipelined
+    scan."""
     # spread the single-split fixture scan BEFORE tokenizing: the whole
     # shingle+minhash map side pipelines on the scan tasks, and one task
     # serializes it on one core (r13 profile: 1.5-1.9 s single-task
@@ -126,13 +126,22 @@ def _shingle_df(
         if spread
         else load(spark, sf_dir, "documents")
     )
+    return _shingle_stream(docs, with_lang)
+
+
+def _shingle_stream(
+    docs: DataFrame, with_lang: bool = False, w: int = 3
+) -> DataFrame:
+    """(doc_id[, lang], shingle) rows of ``docs``' w-token shingles,
+    with the size>=w exclusion the _SHINGLES_SQL oracles depend on."""
+    cols = ["doc_id", "lang"] if with_lang else ["doc_id"]
     docs = (
         docs
         .select(*cols, _tokens().alias("toks"))
-        .filter(F.size("toks") >= 3)
+        .filter(F.size("toks") >= w)
     )
     return docs.select(
-        *cols, F.explode(_shingles(F.col("toks"))).alias("shingle")
+        *cols, F.explode(_shingles(F.col("toks"), w)).alias("shingle")
     )
 
 
@@ -164,12 +173,17 @@ def _shingle_index(
     sf_dir: str,
     df_cap: int | None = None,
     ckpt: Callable[[DataFrame], DataFrame] = _identity,
+    sh: DataFrame | None = None,
 ) -> _ShingleIndex:
     """Build the family's index once; ``ckpt`` materializes the shingle
     stream (its five consumers would otherwise each re-explode the
     corpus). df is keyed by (lang, shingle) — the grouping df_cap
-    filters on and the only grouping pairs can form within."""
-    sh = ckpt(_shingle_df(spark, sf_dir, with_lang=True))
+    filters on and the only grouping pairs can form within. ``sh`` is
+    the (doc_id, lang, shingle) stream to index, by default the
+    corpus's 3-shingles (q_shingle_size_sweep passes other widths)."""
+    if sh is None:
+        sh = _shingle_df(spark, sf_dir, with_lang=True)
+    sh = ckpt(sh)
     df_tbl = sh.groupBy("lang", "shingle").agg(F.count("*").alias("df"))
     idx = sh
     if df_cap is not None:
@@ -181,6 +195,21 @@ def _shingle_index(
         idx = sh.join(rare, ["lang", "shingle"], "left_semi")
     cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     return _ShingleIndex(idx, df_tbl, cnt, df_cap)
+
+
+def _df_profile(df_tbl: DataFrame) -> DataFrame:
+    """The 1-row exact-integer profile of a ``df`` count column:
+    n_types (groups), n_rows = Σ df (index rows a self-join shuffles),
+    sum_df2 = Σ df² and pairs_priced = (Σ df² − Σ df)/2 = Σ C(df, 2),
+    the distinct pairs a self-join on the grouping key would emit. The
+    planning ops price every plan from it; nothing pairwise is ever
+    materialized. Sums are NULL on an empty input, as in SQL."""
+    return df_tbl.agg(
+        F.count("*").cast("bigint").alias("n_types"),
+        F.sum("df").cast("bigint").alias("n_rows"),
+        F.sum(F.col("df") * F.col("df")).cast("bigint").alias("sum_df2"),
+        F.expr("(sum(df * df) - sum(df)) DIV 2").alias("pairs_priced"),
+    )
 
 
 def _verify(sh: DataFrame, cand: DataFrame, a: str, b: str) -> DataFrame:
@@ -1124,7 +1153,7 @@ def _direct_affordable(sum_df2: float, n_rows: int) -> bool:
 # concentration probe worth its price.
 _DENSE_DIRECT_PAIR_BUDGET = 2_000_000
 
-# Concentration verdict boundary — shared with q_dedup_candidate_profile
+# Concentration verdict boundary on _concentration's combine_x1000
 # (priced/actual candidate-pair ratio ×1000): >= 4x combining means
 # clustered duplication the direct join's map-side combine absorbs;
 # below it the candidate set is ~all-distinct pairs (saturated
@@ -1142,25 +1171,26 @@ _HEAD_PROBE_DF_CAP = 256
 
 
 def _concentration_sample_pred() -> Column:
-    """The deterministic 1/16 shingle sample BOTH the user-facing
-    q_dedup_candidate_profile op and the in-op strategy probe measure
+    """The deterministic 1/16 shingle sample _concentration measures
     on: shingles whose md5 hex starts with '0'. Content-keyed, so the
     verdict is partition-layout independent and identical across
-    engines — the chooser consumes exactly the profile op's statistic."""
+    engines (the DuckDB twins filter ``substr(md5(shingle), 1, 1)``)."""
     return F.substring(F.md5(F.encode(F.col("shingle"), "UTF-8")), 1, 1) == "0"
 
 
 def _concentration(ix: _ShingleIndex) -> DataFrame:
     """Measured candidate CONCENTRATION as a lazy 1-row DataFrame
-    (combine_x1000, tail_combine_x1000) on the deterministic 1/16
-    shingle sample of ``ix.idx``: priced pairs Σ df·(df−1)/2 over the
-    sampled df rollup, divided by the sample's ACTUAL distinct pair
-    count, ×1000 integer-exact. ~1000 means dense (map-side combine will
-    not fire; the direct join's candidate volume is all real work);
-    >= _CLUSTERED_COMBINE_X1000 means clustered (combine absorbs it).
-    -1 when the sample has no pairs (treated as clustered: nothing to
-    combine either way). The chooser collects it
-    (_sampled_combine_x1000); q_dedup_strategy_report cross-joins it.
+    (sampled_shingles, priced, actual, combine_x1000,
+    tail_combine_x1000) on the deterministic 1/16 shingle sample of
+    ``ix.idx``: ``priced`` pairs Σ df·(df−1)/2 over the sampled df
+    rollup of ``sampled_shingles`` groups, divided by the sample's
+    ``actual`` distinct pair count, ×1000 integer-exact. ~1000 means
+    dense (map-side combine will not fire; the direct join's candidate
+    volume is all real work); >= _CLUSTERED_COMBINE_X1000 means
+    clustered (combine absorbs it). -1 when the sample has no pairs
+    (treated as clustered: nothing to combine either way). The chooser
+    collects the two verdicts (_sampled_combine_x1000);
+    q_dedup_strategy_report and q_dedup_candidate_profile cross-join it.
 
     tail_combine_x1000 is the r13 HEAD-EXCLUDED verdict (the mixed-regime
     disambiguator) from the SAME flagged self-join: a pair's tail
@@ -1196,13 +1226,20 @@ def _concentration(ix: _ShingleIndex) -> DataFrame:
         F.expr("df*(df-1) DIV 2").alias("p"),
     )
     priced_both = flagged.agg(
+        F.count("*").cast("bigint").alias("sampled_shingles"),
         F.coalesce(F.sum("p"), F.lit(0)).cast("bigint").alias("priced"),
         F.coalesce(F.sum(F.expr("CASE WHEN is_tail = 1 THEN p ELSE 0 END")), F.lit(0))
         .cast("bigint")
         .alias("priced_t"),
     )
+    # left, not inner: every sampled row has its rollup row, so the two
+    # agree, and a left join on the rollup's unique key is one the
+    # optimizer drops when no tail column is read (the candidate
+    # profile), leaving that op the plain sampled self-join. The pair's
+    # flag reads BOTH sides (equal: same shingle) so that a tail reader
+    # keeps the flag join on both and they stay one relation.
     sampf = samp.join(
-        flagged.select("lang", "shingle", "is_tail"), ["lang", "shingle"]
+        flagged.select("lang", "shingle", "is_tail"), ["lang", "shingle"], "left"
     )
     sa = sampf.alias("pa")
     sb = sampf.alias("pb")
@@ -1217,7 +1254,7 @@ def _concentration(ix: _ShingleIndex) -> DataFrame:
             F.col("pa.lang").alias("lang"),
             F.col("pa.doc_id").alias("a"),
             F.col("pb.doc_id").alias("b"),
-            F.col("pa.is_tail").alias("is_tail"),
+            F.greatest("pa.is_tail", "pb.is_tail").alias("is_tail"),
         )
         .groupBy("lang", "a", "b")
         .agg(F.max("is_tail").alias("t"))
@@ -1227,6 +1264,9 @@ def _concentration(ix: _ShingleIndex) -> DataFrame:
         )
     )
     return priced_both.crossJoin(both).select(
+        "sampled_shingles",
+        "priced",
+        "actual",
         *[
             F.expr(
                 f"CASE WHEN actual{s} = 0 THEN CAST(-1 AS BIGINT)"
@@ -1254,7 +1294,8 @@ def _sampled_combine_x1000(ix: _ShingleIndex) -> tuple[int, int]:
     """(combine_x1000, tail_combine_x1000) of _concentration, memoized."""
     key = (ix.idx.semanticHash(), _HEAD_PROBE_DF_CAP)
     if key not in _PROBE_CACHE:
-        _PROBE_CACHE[key] = tuple(_concentration(ix).collect()[0])
+        verdicts = _concentration(ix).select("combine_x1000", "tail_combine_x1000")
+        _PROBE_CACHE[key] = tuple(verdicts.collect()[0])
     return _PROBE_CACHE[key]
 
 
@@ -1373,7 +1414,7 @@ def _auto_strategy(ix: _ShingleIndex) -> str:
     'prefix'.
 
     Stage 2 (only when the priced DISTINCT-pair volume (Σ df² − Σ df)/2
-    exceeds _DENSE_DIRECT_PAIR_BUDGET): the sampled concentration probe
+    exceeds _DENSE_DIRECT_PAIR_BUDGET): the sampled _concentration probe
     on the very index the chosen plan will join — round 11's true-sf1
     tier measured the failure Σ df² cannot see (a saturated vocabulary
     prices as affordable per index row while its candidate set is
@@ -1433,15 +1474,14 @@ def choose_dedup_strategy(
     spark: SparkSession, sf_dir: str, df_cap: int | None = None
 ) -> str:
     """User-facing strategy chooser: runs the EXACT probes the adaptive
-    dedup ops run internally — the (lang, shingle) df rollup through
-    _auto_strategy/_direct_affordable, plus (past the absolute pair
-    budget) the sampled concentration verdict of
-    q_dedup_candidate_profile — and returns 'direct', 'prefix' or
-    'banded'. Read q_dedup_cost_plan for the priced table and
-    q_dedup_candidate_profile for the measured concentration; call
-    this for the decision. All consume the same profile and the same
-    budget rules, so they cannot diverge (round-7 advice item; the
-    concentration wiring closes round 11's open scale item)."""
+    dedup ops run internally — the (lang, shingle) df rollup of
+    _shingle_index through _auto_strategy/_direct_affordable, plus
+    (past the absolute pair budget) the shared _concentration probe —
+    and returns 'direct', 'prefix' or 'banded'. Read q_dedup_cost_plan
+    for the priced table and q_dedup_candidate_profile for the measured
+    concentration; call this for the decision. The planning ops read
+    the same index, _df_profile and _concentration, and the same budget
+    rules, so they cannot diverge."""
     return _resolve_strategy("auto", _shingle_index(spark, sf_dir, df_cap))
 
 
@@ -3394,55 +3434,34 @@ def q_dedup_cost_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     two call sites (round-7 advice item; choose_dedup_strategy() is the
     programmatic chooser, test_cost_plan_agrees_with_op_probe the pin).
 
-    Scale posture: two rollups (shingle df, text digest), each reduced
-    to a 1-row exact-integer profile before the 3-row union — nothing
-    pairwise is ever materialized; the calculator costs two linear
-    passes. No reference counterpart (SURVEY.md §2-A)."""
-    sh = _shingle_df(spark, sf_dir, with_lang=True)
-    dfp = sh.groupBy("lang", "shingle").agg(
-        F.count("*").cast("bigint").alias("df")
-    )
-    prof = dfp.agg(
-        F.sum("df").cast("bigint").alias("s1"),
-        F.sum(F.col("df") * F.col("df")).cast("bigint").alias("s2"),
-        F.sum(F.least(F.col("df"), F.lit(32))).cast("bigint").alias("c1"),
-        F.sum(
-            F.least(F.col("df"), F.lit(32)) * F.least(F.col("df"), F.lit(32))
-        )
-        .cast("bigint")
-        .alias("c2"),
-    )
+    Scale posture: two rollups (the index's shingle df, text digest),
+    each reduced by _df_profile to a 1-row exact-integer profile before
+    the 3-row union — nothing pairwise is ever materialized; the
+    calculator costs two linear passes. The capped row profiles the
+    same df rollup with each df clipped at 32. No reference counterpart
+    (SURVEY.md §2-A)."""
+    df_tbl = _shingle_index(spark, sf_dir).df_tbl
     dig = (
         load(spark, sf_dir, "documents")
-        .groupBy(F.md5("text").alias("digest"))
-        .agg(F.count("*").cast("bigint").alias("c"))
+        .groupBy(F.md5("text"))
+        .agg(F.count("*").alias("df"))
     )
-    dprof = dig.agg(
-        F.sum("c").cast("bigint").alias("e1"),
-        F.sum(F.col("c") * F.col("c")).cast("bigint").alias("e2"),
+    rows = [
+        ("exact_digest", dig),
+        ("direct_inverted_index", df_tbl),
+        ("df_capped_m32", df_tbl.select(F.least("df", F.lit(32)).alias("df"))),
+    ]
+    return functools.reduce(
+        DataFrame.unionByName,
+        [
+            _df_profile(counts).select(
+                F.lit(name).alias("strategy"),
+                F.col("pairs_priced").alias("est_candidate_pairs"),
+                F.col("n_rows").alias("est_shuffle_rows"),
+            )
+            for name, counts in rows
+        ],
     )
-    exact = dprof.select(
-        F.lit("exact_digest").alias("strategy"),
-        ((F.col("e2") - F.col("e1")) / 2)
-        .cast("bigint")
-        .alias("est_candidate_pairs"),
-        F.col("e1").alias("est_shuffle_rows"),
-    )
-    direct = prof.select(
-        F.lit("direct_inverted_index").alias("strategy"),
-        ((F.col("s2") - F.col("s1")) / 2)
-        .cast("bigint")
-        .alias("est_candidate_pairs"),
-        F.col("s1").alias("est_shuffle_rows"),
-    )
-    capped = prof.select(
-        F.lit("df_capped_m32").alias("strategy"),
-        ((F.col("c2") - F.col("c1")) / 2)
-        .cast("bigint")
-        .alias("est_candidate_pairs"),
-        F.col("c1").alias("est_shuffle_rows"),
-    )
-    return exact.unionByName(direct).unionByName(capped)
 
 
 _SWEEP_THRESHOLDS = [30, 40, 50, 60, 70, 80, 90]
@@ -3555,51 +3574,24 @@ def q_shingle_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the production width's cost row.
 
     Scale posture: three scan-side explodes (one per width), each
-    map-side combined to a df rollup and reduced to a 1-row profile —
-    pairs are PRICED from the profile, never materialized (the
-    q_dedup_cost_plan posture, three widths wide). No reference
+    map-side combined to the index's df rollup and reduced by
+    _df_profile to a 1-row profile — pairs are PRICED from the profile,
+    never materialized (the q_dedup_cost_plan posture, three widths
+    wide). The three streams share one documents load (its schema
+    inference is ~90 ms of driver time at sf0.1). No reference
     counterpart (SURVEY.md §2-A)."""
     docs = load_spread(spark, sf_dir, "documents")
-    outs = []
-    for w in _SWEEP_WIDTHS:
-        toks = docs.select(
-            "lang", _tokens().alias("toks")
-        ).filter(F.size("toks") >= w)
-        sh = toks.select(
-            "lang",
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("toks") - (w - 1)),
-                        lambda i: F.array_join(
-                            F.slice("toks", i, w), " "
-                        ),
-                    )
-                )
-            ).alias("shingle"),
+
+    def profile(w: int) -> DataFrame:
+        ix = _shingle_index(spark, sf_dir, sh=_shingle_stream(docs, True, w))
+        return _df_profile(ix.df_tbl).select(
+            F.lit(w).cast("bigint").alias("w"),
+            F.col("n_types").alias("n_shingle_types"),
+            F.col("n_rows").alias("index_rows"),
+            F.col("pairs_priced").alias("est_pairs"),
         )
-        dfp = sh.groupBy("lang", "shingle").agg(
-            F.count("*").cast("bigint").alias("df")
-        )
-        outs.append(
-            dfp.agg(
-                F.lit(w).cast("bigint").alias("w"),
-                F.count("*").cast("bigint").alias("n_shingle_types"),
-                F.sum("df").cast("bigint").alias("index_rows"),
-                (
-                    (
-                        F.sum(F.col("df") * F.col("df")) - F.sum("df")
-                    )
-                    / 2
-                )
-                .cast("bigint")
-                .alias("est_pairs"),
-            )
-        )
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res
+
+    return functools.reduce(DataFrame.unionByName, map(profile, _SWEEP_WIDTHS))
 
 
 @query(
@@ -3761,60 +3753,27 @@ def q_dedup_candidate_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference basis: the reference has no query layer (readme.md:43);
     this extends q_dedup_cost_plan's pricing with measured concentration.
 
-    Round 12: the verdict is WIRED into the adaptive chooser —
-    _auto_strategy consumes this exact statistic (shared
-    _concentration_sample_pred / _sampled_combine_x1000 definitions)
-    once the priced pair volume exceeds _DENSE_DIRECT_PAIR_BUDGET, and
-    a dense reading routes q_ngram_jaccard / q_containment_dedup /
-    q_prefix_filter_join to the banded tier (measured at true-sf1:
-    25-43x for 10x data down to 9-13x).
+    The statistic is the adaptive chooser's own: every column is a
+    select over _concentration (the 1/16-sampled rollup and flagged
+    self-join _auto_strategy collects once the priced pair volume
+    exceeds _DENSE_DIRECT_PAIR_BUDGET) crossed with the index's
+    _df_profile, so the profile cannot drift from the probe that routes
+    q_ngram_jaccard / q_containment_dedup / q_prefix_filter_join to the
+    banded tier on a dense reading (measured at true-sf1: 25-43x for
+    10x data down to 9-13x).
     """
-    sh = _shingle_df(spark, sf_dir, with_lang=True)
-    samp = sh.filter(_concentration_sample_pred())
-    df_s = samp.groupBy("lang", "shingle").agg(F.count("*").alias("df"))
-    priced = df_s.agg(
-        F.count("*").cast("bigint").alias("sampled_shingles"),
-        F.coalesce(F.sum(F.expr("df*(df-1) DIV 2")), F.lit(0))
-        .cast("bigint")
-        .alias("sampled_cand_pairs"),
-    )
-    sa = samp.select("lang", "shingle", F.col("doc_id").alias("a"))
-    sb = samp.select("lang", "shingle", F.col("doc_id").alias("b"))
-    pairs = (
-        sa.join(sb, ["lang", "shingle"])
-        .filter(F.col("a") < F.col("b"))
-        .select("lang", "a", "b")
-        .distinct()
-        .agg(F.count("*").cast("bigint").alias("sampled_distinct_pairs"))
-    )
-    fp = (
-        sh.groupBy("lang", "shingle")
-        .agg(F.count("*").alias("df"))
-        .agg(
-            F.coalesce(F.sum(F.expr("df*(df-1) DIV 2")), F.lit(0))
-            .cast("bigint")
-            .alias("full_cand_pairs")
-        )
-    )
-    return (
-        priced.crossJoin(pairs)
-        .crossJoin(fp)
-        .select(
-            "sampled_shingles",
-            "sampled_cand_pairs",
-            "sampled_distinct_pairs",
-            F.expr(
-                "CASE WHEN sampled_distinct_pairs = 0 THEN CAST(-1 AS BIGINT)"
-                " ELSE CAST(sampled_cand_pairs*1000 DIV sampled_distinct_pairs"
-                " AS BIGINT) END"
-            ).alias("combine_x1000"),
-            F.expr(
-                "CASE WHEN sampled_distinct_pairs = 0 THEN 'empty'"
-                " WHEN sampled_cand_pairs*1000 DIV sampled_distinct_pairs >= 4000"
-                " THEN 'clustered' ELSE 'dense' END"
-            ).alias("regime"),
-            "full_cand_pairs",
-        )
+    ix = _shingle_index(spark, sf_dir)
+    return _concentration(ix).crossJoin(_df_profile(ix.df_tbl)).select(
+        "sampled_shingles",
+        F.col("priced").alias("sampled_cand_pairs"),
+        F.col("actual").alias("sampled_distinct_pairs"),
+        "combine_x1000",
+        F.expr(
+            "CASE WHEN actual = 0 THEN 'empty'"
+            f" WHEN combine_x1000 >= {_CLUSTERED_COMBINE_X1000}"
+            " THEN 'clustered' ELSE 'dense' END"
+        ).alias("regime"),
+        F.coalesce("pairs_priced", F.lit(0)).alias("full_cand_pairs"),
     )
 
 
@@ -3914,8 +3873,8 @@ def q_dedup_strategy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-12 strategy tree reads and the verdict it returns, in one
     oracle-checkable row: Σ df² and Σ df over the (lang, shingle)
     rollup, the priced distinct-pair volume (Σ df² − Σ df)/2, the
-    sampled concentration factor (q_dedup_candidate_profile's
-    combine_x1000, same deterministic 1/16 sample), the r13
+    sampled concentration factor (_concentration's combine_x1000, the
+    probe the chooser collects), the r13
     HEAD-EXCLUDED tail_combine_x1000 (the mixed-regime disambiguator:
     a dense verdict driven only by Zipf-head shingles keeps the exact
     prefix plan), and the resulting
@@ -3932,8 +3891,8 @@ def q_dedup_strategy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigint Σ df² can represent, the decisions are identical, and
     test_plans pins report == choose_dedup_strategy() on the fixtures.
 
-    Scale posture: one linear rollup + the chooser's own lazy
-    _concentration relation (the 1/16-sampled flagged self-join, ~1/256
+    Scale posture: the index's _df_profile (one linear rollup) + the
+    chooser's own lazy _concentration relation (the 1/16-sampled flagged self-join, ~1/256
     of the full pair volume), all reduced to one row. The tail verdict
     reads the sampled rollup's df; the DuckDB twin reads the full
     df_tbl, and the two agree exactly because the content-keyed sample
@@ -3942,23 +3901,21 @@ def q_dedup_strategy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     round 11's "measured the hazard" profile into "the engine's own
     routing, audited"."""
     ix = _shingle_index(spark, sf_dir)
-    vol = ix.df_tbl.agg(
-        F.coalesce(F.sum(F.col("df") * F.col("df")), F.lit(0))
-        .cast("bigint")
-        .alias("sum_df2"),
-        F.coalesce(F.sum("df"), F.lit(0)).cast("bigint").alias("n_rows"),
+    vol = _df_profile(ix.df_tbl).select(
+        *[
+            F.coalesce(c, F.lit(0)).alias(c)
+            for c in ("sum_df2", "n_rows", "pairs_priced")
+        ]
     )
     return vol.crossJoin(_concentration(ix)).select(
         "sum_df2",
         "n_rows",
-        F.expr("CAST((sum_df2 - n_rows) DIV 2 AS BIGINT)").alias(
-            "pairs_priced"
-        ),
+        "pairs_priced",
         "combine_x1000",
         "tail_combine_x1000",
         F.expr(
             "CASE"
-            f" WHEN (sum_df2 - n_rows) DIV 2 > {_DENSE_DIRECT_PAIR_BUDGET}"
+            f" WHEN pairs_priced > {_DENSE_DIRECT_PAIR_BUDGET}"
             "      AND combine_x1000 >= 0"
             f"      AND combine_x1000 < {_CLUSTERED_COMBINE_X1000}"
             "   THEN CASE WHEN tail_combine_x1000 >= 0"

@@ -1734,3 +1734,23 @@ def test_strategy_report_matches_chooser(spark, sf_dir):
     row = q_dedup_strategy_report(spark, sf_dir).collect()[0]
     assert row["strategy"] == choose_dedup_strategy(spark, sf_dir)
     assert row["pairs_priced"] == (row["sum_df2"] - row["n_rows"]) // 2
+
+
+def test_planning_ops_agree_on_one_profile(spark, sf_dir):
+    """The four planning ops read one index, one _df_profile and one
+    _concentration probe, so their shared columns must agree: the
+    candidate profile's verdict is the chooser's collected one, its full
+    priced volume is the report's, and the sweep's w=3 row is the
+    report's index profile."""
+    from pot_spark.queries import llm_dedup as d
+
+    prof = d.q_dedup_candidate_profile(spark, sf_dir).collect()[0]
+    rep = d.q_dedup_strategy_report(spark, sf_dir).collect()[0]
+    sweep = {r["w"]: r for r in d.q_shingle_size_sweep(spark, sf_dir).collect()}
+    ix = d._shingle_index(spark, sf_dir)
+    assert prof["combine_x1000"] == d._sampled_combine_x1000(ix)[0]
+    assert prof["full_cand_pairs"] == rep["pairs_priced"] > 0
+    assert (sweep[3]["index_rows"], sweep[3]["est_pairs"]) == (
+        rep["n_rows"],
+        rep["pairs_priced"],
+    )

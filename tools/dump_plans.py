@@ -204,9 +204,10 @@ NOTES = {
     "rollup + aliased keyed self-join (exact), checkpointed band-pairs "
     "+ min-label propagation (near); the funnel's own math is three "
     "1-row aggregates unioned against a broadcast totals row.",
-    "q_dedup_cost_plan": "pair volume is PRICED from two linear "
-    "profile rollups (shingle df, text digest) reduced to 1-row exact "
-    "integer profiles — zero joins, nothing pairwise materialized.",
+    "q_dedup_cost_plan": "pair volume is PRICED by _df_profile from two "
+    "linear rollups (the shingle index's df, text digest; the capped row "
+    "clips the same df at 32) reduced to 1-row exact integer profiles — "
+    "zero joins, nothing pairwise materialized.",
     "q_ngram_novelty": "one distinct (doc,src,gram) rollup; the gram "
     "first-occurrence table collapses to doc-scale BEFORE re-touching "
     "documents, so the only joins are doc-keyed linear + source-typed.",
@@ -235,9 +236,10 @@ NOTES = {
     "q_intra_label_diversity": "pairwise-cosine mean via |sum u|^2 - n: "
     "three linear rollups (vec norm, (label,dim) unit sums, label "
     "square-sum) — no pair join exists in the plan.",
-    "q_shingle_size_sweep": "three explode->df-rollup->1-row-profile "
-    "branches unioned; est pairs are arithmetic on the profiles — "
-    "plan contains no Join node.",
+    "q_shingle_size_sweep": "w=2/3/4 shingle streams of one documents "
+    "load, each rolled up by _shingle_index and reduced by _df_profile "
+    "to a 1-row profile, unioned; est pairs are arithmetic on the "
+    "profiles — plan contains no Join node.",
     "q_dup_graph_degree": "both endpoint unions read ONE checkpointed "
     "band-pair materialization (ExistingRDD); degree and histogram "
     "rollups are map-side combined.",

@@ -112,16 +112,6 @@ TIER = [
 ]
 
 
-def _calibrate() -> float:
-    import hashlib
-
-    t0 = time.perf_counter()
-    block = b"x" * 1024
-    for _ in range(200_000):
-        block = hashlib.md5(block).digest() + block[:1008]
-    return round(time.perf_counter() - t0, 4)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default=None)
@@ -161,6 +151,7 @@ def main() -> None:
     lo_dir, lo_tag = args.lo.rsplit(":", 1)
     hi_dir, hi_tag = args.hi.rsplit(":", 1)
 
+    from bench import _calibrate
     from pot_spark import registry
     from pot_spark.session import get_spark
 
