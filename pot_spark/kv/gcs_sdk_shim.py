@@ -50,8 +50,7 @@ class PreconditionFailed(Exception):
 
 
 # known on-disk copies of the real google-api-core package in pip-less
-# environments (the gcloud CLI vendors it; same posture as
-# streaming/protobuf_compat's runtime candidates)
+# environments (the gcloud CLI vendors it)
 _API_CORE_CANDIDATES = [
     "/usr/lib/google-cloud-sdk/lib/third_party",
 ]
@@ -207,16 +206,12 @@ def install() -> bool:
         if mod is None:
             mod = types.ModuleType(name)
             mod.__pot_spark_shim__ = True
-            # Namespace-package shape (round-11 advice): without a
-            # __path__, a later `import google.protobuf` fails with
-            # "'google' is not a package" instead of falling through
-            # to the path-based finder — and protobuf_compat's
-            # ensure_protobuf() would then purge google.* from
-            # sys.modules, silently evicting this shim and breaking
-            # subsequent GCSBackend imports. Point __path__ at any
-            # real on-disk portions of the namespace so genuine
-            # submodules (google.protobuf from a vendored runtime)
-            # still import; [] when none exist.
+            # Namespace-package shape: without a __path__, a later
+            # `import google.protobuf` (a pip-installed protobuf beside
+            # the shim) fails with "'google' is not a package" instead
+            # of falling through to the path-based finder. Point
+            # __path__ at any real on-disk portions of the namespace so
+            # genuine submodules still import; [] when none exist.
             mod.__path__ = [
                 d
                 for d in (

@@ -935,9 +935,9 @@ def q_window_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans a single user-partitioned sort — one shuffle, no joins, and
     the whole expression tree runs in whole-stage codegen. An unbounded
     (infinite-memory) EWMA is inherently recursive — that variant is a
-    stateful streaming op (transformWithStateInPandas, runner.py), not
-    a window query; the 7-tap FIR form here is what a backfill over a
-    100 TB event table should use."""
+    per-key stateful streaming op (carried state, not a window query);
+    the 7-tap FIR form here is what a backfill over a 100 TB event
+    table should use."""
     w = Window.partitionBy("user_id").orderBy("event_id")
     num = None
     den = None

@@ -262,8 +262,9 @@ def q_window_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     executors; no global sort), O(w log w) work per row at w=7 inside
     codegen'd array_sort. For large frames (w in the thousands) this
     array-rebuild becomes O(w^2 log w) per partition slice and the right
-    design is a running two-heap/multiset via transformWithStateInPandas
-    (see pot_spark/streaming/runner.py for the stateful pattern) — at
+    design is a running two-heap/multiset in per-key state (see the
+    applyInPandasWithState builders in pot_spark/streaming/runner.py
+    for the stateful pattern) — at
     w=7 the array frame is strictly cheaper than Python state hops.
 
     NULL measurements are filtered out up front ON BOTH SIDES: Spark's

@@ -71,10 +71,10 @@ def get_spark(
         # repo importable (UDF closures reference pot_spark modules);
         # on a real cluster this is the --py-files / container image.
         # CARRY the driver's PYTHONPATH along: executorEnv.PYTHONPATH
-        # REPLACES the inherited value for executor Python workers, and
-        # dropping it severs the protobuf vendor bridge
-        # (streaming/protobuf_compat.bootstrap_env) that
-        # transformWithState workers import state protos through.
+        # REPLACES the inherited value for executor Python workers, so
+        # without the carry a worker loses every module directory the
+        # driver was started with and fails to import what a closure
+        # references from there.
         repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         inherited = os.environ.get("PYTHONPATH", "")
         val = repo + (os.pathsep + inherited if inherited else "")

@@ -19,7 +19,6 @@ session_window state merger; sinks become exactly-once via foreachBatch
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1436,428 +1435,6 @@ def _sharded_gate(
     )
 
 
-def build_stateful_dedup_tws(stream: DataFrame) -> DataFrame:
-    """The same first-event dedup on Spark 4's transformWithState API
-    (StatefulProcessor + typed state handles) — the successor to
-    applyInPandasWithState, with explicit state objects, timers and
-    initial-state support. Functionally identical to
-    build_stateful_dedup; both stream twins are checked against the
-    batch s_dedup_first. NOTE: the TWS workers speak protobuf to the
-    JVM state server; protobuf_compat.bootstrap_env() bridges a
-    vendored runtime in pip-less environments (tests/conftest.py calls
-    it pre-JVM), and a standard cluster image pip-installs it. RocksDB
-    state store provider required."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("first_event_id", T.LongType()),
-            T.StructField("first_ts", T.TimestampType()),
-            T.StructField("first_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-
-    class FirstEvent(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._best = handle.getValueState("best", state_schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            user_id, event_type = key
-            prev = self._best.get() if self._best.exists() else None
-            best = None if prev is None else (prev[0], prev[1], prev[2])
-            for pdf in rows:
-                r = pdf.loc[pdf["event_id"].idxmin()]
-                cand = (
-                    int(r["event_id"]),
-                    int(pd.Timestamp(r["ts"]).value // 1000),
-                    float(r["value"]),
-                )
-                if best is None or cand[0] < best[0]:
-                    best = cand
-            if best is not None and (prev is None or best[0] < prev[0]):
-                self._best.update(best)
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id],
-                        "event_type": [event_type],
-                        "first_event_id": [best[0]],
-                        "first_ts": [pd.Timestamp(best[1] * 1000)],
-                        "first_value": [best[2]],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id", "event_type").transformWithStateInPandas(
-        statefulProcessor=FirstEvent(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def build_stateful_quota_tws(stream: DataFrame) -> DataFrame:
-    """The admission quota (build_stateful_quota) on Spark 4's
-    transformWithState API, state held in a typed ListState handle —
-    the K admitted event_ids per (user_id, event_type) as list elements
-    the state server manages individually (RocksDB merge-appends),
-    instead of applyInPandasWithState's fixed-width row the whole tuple
-    rewrites on every grant. Same admission contract: first K smallest
-    event_ids ever seen, each granted exactly once, redelivery grants
-    nothing twice. Batch twin: scale_ops.s_user_quota; stream == batch
-    pinned beside the applyInPandasWithState twin in
-    tests/test_streaming.py."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from pot_spark.queries.scale_ops import _QUOTA_K
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("admitted_event_id", T.LongType()),
-        ]
-    )
-    elem_schema = T.StructType([T.StructField("event_id", T.LongType())])
-
-    class Quota(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._admitted = handle.getListState("admitted", elem_schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            user_id, event_type = key
-            admitted = sorted(int(r[0]) for r in self._admitted.get())
-            batch_ids: set[int] = set()
-            for pdf in rows:
-                batch_ids.update(int(x) for x in pdf["event_id"].dropna())
-            new = sorted(batch_ids - set(admitted))
-            granted = new[: max(0, _QUOTA_K - len(admitted))]
-            if granted:
-                self._admitted.appendList([(g,) for g in granted])
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id] * len(granted),
-                        "event_type": [event_type] * len(granted),
-                        "admitted_event_id": granted,
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.filter(F.col("event_id").isNotNull())
-        .groupBy("user_id", "event_type")
-        .transformWithStateInPandas(
-            statefulProcessor=Quota(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-def build_near_dedup_gate_tws(stream: DataFrame) -> DataFrame:
-    """The near-duplicate admission gate (build_near_dedup_gate) on
-    Spark 4's transformWithState: the retained-signature set per band
-    key lives in a typed ListState handle, so a new arrival APPENDS its
-    signature (a RocksDB merge) instead of rewriting the whole set —
-    at a hot band key with thousands of retained signatures that is the
-    difference between O(1) and O(set) state writes per arrival. Same
-    admission contract and same per-(band, doc) collided-flag output as
-    the applyInPandasWithState twin; stream == batch pinned against
-    s_dedup_near_gate in tests/test_streaming.py."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from pot_spark.queries.llm_dedup import _GATE_MIN_LANES
-
-    bands = _gate_bands(stream)
-    out_schema = T.StructType(
-        [
-            T.StructField("band_key", T.StringType()),
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("collided", T.IntegerType()),
-        ]
-    )
-    elem_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("sig", T.StringType()),
-        ]
-    )
-
-    class Gate(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._retained = handle.getListState("retained", elem_schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            (band_key,) = key
-            retained = [(int(r[0]), r[1]) for r in self._retained.get()]
-            parsed = [
-                (d, tuple(int(x) for x in s.split(","))) for d, s in retained
-            ]
-            seen = {d for d, _ in retained}
-            batch = pd.concat(list(rows), ignore_index=True)
-            out_doc: list[int] = []
-            out_col: list[int] = []
-            fresh: list[tuple[int, str]] = []
-            for row in batch.sort_values("doc_id").itertuples(index=False):
-                d = int(row.doc_id)
-                s = tuple(int(x) for x in row.sig.split(","))
-                collided = any(
-                    did < d
-                    and sum(a == b for a, b in zip(sg, s))
-                    >= _GATE_MIN_LANES
-                    for did, sg in parsed
-                )
-                out_doc.append(d)
-                out_col.append(1 if collided else 0)
-                if d not in seen:  # idempotent under at-least-once replay
-                    seen.add(d)
-                    parsed.append((d, s))
-                    fresh.append((d, row.sig))
-            if fresh:
-                # append-only state write: the merge the ListState API
-                # exists for — never rewrites the retained set
-                self._retained.appendList(fresh)
-            if out_doc:
-                yield pd.DataFrame(
-                    {
-                        "band_key": [band_key] * len(out_doc),
-                        "doc_id": out_doc,
-                        "collided": out_col,
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return bands.groupBy("band_key").transformWithStateInPandas(
-        statefulProcessor=Gate(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def build_stateful_cdc_tws(stream: DataFrame) -> DataFrame:
-    """The CDC log compactor (build_stateful_cdc) on Spark 4's
-    transformWithState, state held in a typed MapState handle — keyed
-    by user_id alone, with the map carrying event_type -> newest
-    (ts, event_id, op, value). Completes the state-shape coverage of
-    the TWS twins: ValueState (build_stateful_dedup_tws), ListState
-    (quota + admission gate), MapState (here). The map layout is the
-    scale-relevant one for CDC: the state store holds ONE key per user
-    (fewer, fatter keys) and a superseding record rewrites only its
-    event_type's map entry (a point write in RocksDB), not every
-    type's state — while the applyInPandasWithState twin shards by the
-    full (user_id, event_type) pair. Same latest-wins contract and
-    output schema; stream == batch pinned against q_cdc_compact's
-    snapshot in tests/test_streaming.py, redelivery-idempotent (a
-    replayed older record never supersedes a newer map entry)."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("last_event_id", T.LongType()),
-            T.StructField("last_ts", T.TimestampType()),
-            T.StructField("op", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    key_schema = T.StructType([T.StructField("event_type", T.StringType())])
-    val_schema = T.StructType(
-        [
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("op", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-
-    class Compact(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._latest = handle.getMapState("latest", key_schema, val_schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            (user_id,) = key
-            out: dict[str, tuple] = {}
-            for pdf in rows:
-                # batch-local newest per event_type first: one map
-                # read/write per type per microbatch, not per row
-                for et, grp in pdf.groupby("event_type", sort=False):
-                    r = grp.sort_values(["ts", "event_id"]).iloc[-1]
-                    cand = (
-                        int(pd.Timestamp(r["ts"]).value // 1000),
-                        int(r["event_id"]),
-                        "D" if int(r["event_id"]) % 7 == 0 else "U",
-                        float(r["value"]),
-                    )
-                    prev = out.get(et)
-                    if prev is None and self._latest.containsKey((et,)):
-                        g = self._latest.getValue((et,))
-                        prev = (int(g[0]), int(g[1]), g[2], float(g[3]))
-                    if prev is None or (cand[0], cand[1]) > (prev[0], prev[1]):
-                        out[et] = cand
-                        self._latest.updateValue((et,), cand)
-            if out:
-                types = sorted(out)
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id] * len(types),
-                        "event_type": types,
-                        "last_event_id": [out[t][1] for t in types],
-                        "last_ts": [
-                            pd.Timestamp(out[t][0] * 1000) for t in types
-                        ],
-                        "op": [out[t][2] for t in types],
-                        "value": [out[t][3] for t in types],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=Compact(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def build_sim_index_tws(
-    stream: DataFrame, spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The ANN index maintainer (build_sim_index) on Spark 4's
-    transformWithState: the per-cell posting list lives in a typed
-    ListState handle, so an arriving vector APPENDS its (vec_id, score)
-    entry (a RocksDB merge) instead of rewriting the whole list — at a
-    hot cell with millions of members that is O(1) vs O(cell) state
-    writes per arrival. Same assignment expression, same emission
-    contract and idempotence as the applyInPandasWithState twin;
-    stream == batch pinned against s_sim_index in
-    tests/test_streaming.py."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from pot_spark.queries.llm_similarity import (
-        _IVF_TOPM,
-        _int_vec,
-        _ivf_assign,
-        _ivf_centroids,
-        _ivf_valid,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("cell", T.LongType()),
-            T.StructField("n_members", T.LongType()),
-            T.StructField("reps", T.StringType()),
-        ]
-    )
-    cents = _ivf_centroids(spark, sf_dir)
-    if not cents:
-        return (
-            stream.select(
-                F.lit(None).cast("bigint").alias("cell"),
-                F.lit(None).cast("bigint").alias("n_members"),
-                F.lit(None).cast("string").alias("reps"),
-            ).filter(F.lit(False))
-        )
-    cell, s = _ivf_assign(cents)
-    # one file per microbatch = one scan partition: spread the rows so
-    # the k-centroid x 64-dim assignment arithmetic runs cores-wide
-    # instead of single-task (same rationale as _gate_bands)
-    n_par = int(stream.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    assigned = (
-        _ivf_valid(stream.repartition(n_par))
-        .select("vec_id", _int_vec().alias("__iv"))
-        .select("vec_id", cell.alias("cell"), s.alias("s"))
-    )
-    elem_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-
-    class Index(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._members = handle.getListState("members", elem_schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            (cell_id,) = key
-            members = [(int(r[0]), float(r[1])) for r in self._members.get()]
-            seen = {vid for vid, _ in members}
-            fresh: list[tuple[int, float]] = []
-            for pdf in rows:
-                for row in pdf.itertuples(index=False):
-                    vid = int(row.vec_id)
-                    if vid in seen:  # at-least-once replay: a member
-                        continue  #    already, appends nothing twice
-                    seen.add(vid)
-                    fresh.append((vid, float(row.s)))
-            if fresh:
-                # append-only state write — the RocksDB merge ListState
-                # exists for; the posting list is never rewritten
-                self._members.appendList(fresh)
-                members.extend(fresh)
-                top = sorted(members, key=lambda t: (-t[1], t[0]))
-                yield pd.DataFrame(
-                    {
-                        "cell": [int(cell_id)],
-                        "n_members": [len(members)],
-                        "reps": [
-                            ",".join(
-                                str(vid) for vid, _ in top[:_IVF_TOPM]
-                            )
-                        ],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return assigned.groupBy("cell").transformWithStateInPandas(
-        statefulProcessor=Index(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def build_stream_stream_join(stream: DataFrame) -> DataFrame:
     """Stream-stream self-join: purchases matched to signups of the same
     user within 1h — the streaming twin of the batch q_theta_range_join
@@ -2089,6 +1666,13 @@ VEC_STATEFUL_BUILDERS = {
     "s_sim_index": build_sim_index,
 }
 
+# Cap on _stream_shuffle_partitions' size-derived count: the local
+# commit-concurrency plateau (measurements in its docstring).
+_STATE_PARTITIONS_MAX = 8
+# Shuffle partitions for Python-stateful plans with FEW state groups
+# (see streaming_plan).
+_FEW_GROUP_PY_PARTITIONS = 8
+
 
 def _stream_shuffle_partitions(source_file: str) -> int:
     """Shuffle/state-store partition count for one streaming run, derived
@@ -2105,27 +1689,93 @@ def _stream_shuffle_partitions(source_file: str) -> int:
     CONCURRENT commits (s_outer_join wall: 32p=30.1s, 16p=33.5s,
     8p=11.4s, 4p=9.9s, 2p=10.5s, 1p=10.6s — the 16p/32p regime's summed
     commit time is 70-230s vs 0.4-5.6s below 8). One state partition per
-    ~4 MB of source, floored at 4, picks the measured plateau.
+    ~4 MB of source, floored at 4 and capped at _STATE_PARTITIONS_MAX,
+    picks the measured plateau.
 
     Production posture: a real deployment sizes state partitions to the
-    cluster and the watermark-bounded state volume, NOT to one file —
-    set ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` explicitly (it wins
-    outright); the derived value is additionally capped by
-    ``SPARK_GRAFT_STREAM_STATE_PARTITIONS_MAX`` (default 8 — the local
-    commit-concurrency plateau; raise it on a multi-disk cluster)."""
+    cluster and the watermark-bounded state volume, NOT to one file; a
+    multi-disk cluster raises the cap, with a measurement beside it."""
     import math
-    import os
 
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
-    cap = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS_MAX", "8"))
     try:
         nbytes = os.path.getsize(source_file)
     except OSError:
-        return min(4, cap) if cap >= 1 else 4
-    derived = max(4, math.ceil(nbytes / (4 << 20)))
-    return max(1, min(derived, cap))
+        return 4
+    return min(max(4, math.ceil(nbytes / (4 << 20))), _STATE_PARTITIONS_MAX)
+
+
+def streaming_plan(
+    spark: SparkSession, name: str, sf_dir: str
+) -> tuple[DataFrame, str, int | None]:
+    """The one dispatch from a runner name to what its stream runs: the
+    source, the builder, the output mode, and the shuffle-partition count
+    to pin at stream start (None: inherit the session conf).
+
+    The shuffle-partition conf is captured at query START and pins the
+    stateful operators' partitioning for the stream's lifetime. Three
+    plan classes, each from bench-protocol A/B measurements at sf0.1
+    (best-of-reps, warm session — OPTIMIZATION_r13.md "streaming state
+    partitioning"):
+
+    - Python-stateful plans with FEW state groups (the 32-sharded doc
+      gate, the ~k-cell IVF index): partitions beyond the group count
+      buy nothing and each idle task still pays ~1s of Python/state
+      overhead per batch; 8 measured the gate 5.0s vs 7.3s at 32
+      (production: ~4x executor count, matching the n_shards sizing).
+    - Python-stateful plans with MANY state groups (per-key dedup /
+      quota / CDC): per-group Python dispatch needs task parallelism
+      ~ cores; the small value measured s_dedup_first_stream 8.6s vs
+      2.9s. Inherit the session conf.
+    - JVM-stateful plans (stream-stream joins, window aggs, native
+      dedup): commit-bound — every batch commits one store per
+      partition (FOUR for a join) and commit cost is superlinear in
+      concurrent commits. Size-derived small value
+      (_stream_shuffle_partitions): s_outer_join 30.1s -> 9.9s."""
+    events = f"{sf_dir}/events.parquet"
+    if name in DOC_STATEFUL_BUILDERS:
+        stream = _doc_stream(spark, f"{sf_dir}/documents.parquet")
+        plan = DOC_STATEFUL_BUILDERS[name](stream)
+        return plan, "update", _FEW_GROUP_PY_PARTITIONS
+    if name in VEC_STATEFUL_BUILDERS:
+        stream = _vec_stream(spark, f"{sf_dir}/embeddings.parquet")
+        plan = VEC_STATEFUL_BUILDERS[name](stream, spark, sf_dir)
+        return plan, "update", _FEW_GROUP_PY_PARTITIONS
+    if name in STATEFUL_BUILDERS:
+        return STATEFUL_BUILDERS[name](_event_stream(spark, events)), "update", None
+    parts = _stream_shuffle_partitions(events)
+    if name in LATE_SPLIT_BUILDERS:
+        stream = _split_event_stream(spark, events)
+        return LATE_SPLIT_BUILDERS[name](stream), "append", parts
+    if name in SENTINEL_APPEND_BUILDERS:
+        stream = _sentinel_event_stream(spark, events)
+        return SENTINEL_APPEND_BUILDERS[name](stream), "append", parts
+    if name in REPLAY_APPEND_BUILDERS:
+        stream = _event_stream(spark, events, replay=True)
+        return REPLAY_APPEND_BUILDERS[name](stream), "append", parts
+    stream = _event_stream(spark, events)
+    if name in APPEND_BUILDERS:
+        return APPEND_BUILDERS[name](stream), "append", parts
+    if name in STATIC_BUILDERS:
+        return STATIC_BUILDERS[name](stream, spark, sf_dir), "complete", parts
+    return BUILDERS[name](stream), "complete", parts
+
+
+def checkpoint_dir() -> str:
+    """A fresh throwaway checkpoint directory for one in-process run.
+
+    Such runs end inside this process and their checkpoints are
+    throwaway, yet every state-store commit and WAL write fsyncs them —
+    on a 4-vCPU VM's virtio disk that fsync latency is both large and
+    wildly variable (the same stream measured 3.6 s and 14.7 s across
+    runs). Place the checkpoint on tmpfs when available; a production
+    deployment with a resumable stream sets SPARK_GRAFT_STREAM_CKPT_BASE
+    to durable storage instead."""
+    import tempfile
+
+    base = os.environ.get("SPARK_GRAFT_STREAM_CKPT_BASE")
+    if not base and os.path.isdir("/dev/shm"):
+        base = "/dev/shm"
+    return tempfile.mkdtemp(prefix="pot_spark_stream_ckpt_", dir=base)
 
 
 def run_streaming_query(
@@ -2134,100 +1784,20 @@ def run_streaming_query(
     """Execute one event-time window operator as a real stream to
     completion (complete output mode into a memory sink) and return the
     final result as a DataFrame."""
-    if name in DOC_STATEFUL_BUILDERS:
-        source_file = f"{sf_dir}/documents.parquet"
-    elif name in VEC_STATEFUL_BUILDERS:
-        source_file = f"{sf_dir}/embeddings.parquet"
-    else:
-        source_file = f"{sf_dir}/events.parquet"
-    if name in LATE_SPLIT_BUILDERS:
-        stream = _split_event_stream(spark, f"{sf_dir}/events.parquet")
-    elif name in SENTINEL_APPEND_BUILDERS:
-        stream = _sentinel_event_stream(spark, f"{sf_dir}/events.parquet")
-    elif name in DOC_STATEFUL_BUILDERS:
-        stream = _doc_stream(spark, f"{sf_dir}/documents.parquet")
-    elif name in VEC_STATEFUL_BUILDERS:
-        stream = _vec_stream(spark, f"{sf_dir}/embeddings.parquet")
-    else:
-        stream = _event_stream(
-            spark,
-            f"{sf_dir}/events.parquet",
-            replay=name in REPLAY_APPEND_BUILDERS,
-        )
-    if name in DOC_STATEFUL_BUILDERS:
-        plan, mode = DOC_STATEFUL_BUILDERS[name](stream), "update"
-    elif name in VEC_STATEFUL_BUILDERS:
-        plan, mode = VEC_STATEFUL_BUILDERS[name](stream, spark, sf_dir), "update"
-    elif name in LATE_SPLIT_BUILDERS:
-        plan, mode = LATE_SPLIT_BUILDERS[name](stream), "append"
-    elif name in SENTINEL_APPEND_BUILDERS:
-        plan, mode = SENTINEL_APPEND_BUILDERS[name](stream), "append"
-    elif name in REPLAY_APPEND_BUILDERS:
-        plan, mode = REPLAY_APPEND_BUILDERS[name](stream), "append"
-    elif name in STATEFUL_BUILDERS:
-        plan, mode = STATEFUL_BUILDERS[name](stream), "update"
-    elif name in APPEND_BUILDERS:
-        plan, mode = APPEND_BUILDERS[name](stream), "append"
-    elif name in STATIC_BUILDERS:
-        plan, mode = STATIC_BUILDERS[name](stream, spark, sf_dir), "complete"
-    else:
-        plan, mode = BUILDERS[name](stream), "complete"
+    import shutil
+
+    plan, mode, parts = streaming_plan(spark, name, sf_dir)
     # deterministic sink name per query: a rerun REPLACES the previous
     # run's memory-sink table instead of accumulating uuid-named views
     # (and their driver-held rows) without bound across a long session
     sink = f"sink_{name}"
     spark.catalog.dropTempView(sink)
-    # The shuffle-partition conf is captured at query START and pins the
-    # stateful operators' partitioning for the stream's lifetime; set a
-    # per-plan-class value for this run only and restore the session
-    # conf for whatever batch work follows. Three classes, each from
-    # bench-protocol A/B measurements at sf0.1 (best-of-reps, warm
-    # session — OPTIMIZATION_r13.md "streaming state partitioning"):
-    #
-    # - JVM-stateful plans (stream-stream joins, window aggs, native
-    #   dedup): commit-bound — every batch commits one store per
-    #   partition (FOUR for a join) and commit cost is superlinear in
-    #   concurrent commits. Size-derived small value
-    #   (_stream_shuffle_partitions): s_outer_join 30.1s -> 9.9s.
-    # - Python-stateful plans with MANY state groups (per-key dedup /
-    #   quota / CDC): per-group Python dispatch needs task parallelism
-    #   ~ cores; the small value measured s_dedup_first_stream 8.6s vs
-    #   2.9s. Inherit the session conf (unchanged behavior).
-    # - Python-stateful plans with FEW state groups (the 32-sharded doc
-    #   gate, the ~k-cell IVF index): partitions beyond the group count
-    #   buy nothing and each idle task still pays ~1s of Python/state
-    #   overhead per batch; 8 measured the gate 5.0s vs 7.3s at 32.
-    #   SPARK_GRAFT_STREAM_PY_PARTITIONS overrides (production: ~4x
-    #   executor count, matching the n_shards sizing note above).
-    few_group_python = name in DOC_STATEFUL_BUILDERS or name in VEC_STATEFUL_BUILDERS
-    many_group_python = name in STATEFUL_BUILDERS
+    # pin this run's partition count and restore the session conf for
+    # whatever batch work follows
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if few_group_python:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_STREAM_PY_PARTITIONS", "8"),
-        )
-    elif not many_group_python:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(_stream_shuffle_partitions(source_file)),
-        )
-    # Ephemeral checkpoint placement: these runs end inside this process
-    # and their checkpoints are throwaway (Spark force-deletes temp
-    # checkpoint dirs on stop), yet every state-store commit and WAL
-    # write fsyncs them — on this rig's virtio disk that fsync latency
-    # is both large and wildly variable (the same stream measured 3.6 s
-    # and 14.7 s across runs). Place the throwaway checkpoint on tmpfs
-    # when available; a production deployment with a resumable stream
-    # sets SPARK_GRAFT_STREAM_CKPT_BASE to durable storage instead.
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    ckpt_base = _os.environ.get("SPARK_GRAFT_STREAM_CKPT_BASE")
-    if not ckpt_base and _os.path.isdir("/dev/shm"):
-        ckpt_base = "/dev/shm"
-    ckpt_dir = _tempfile.mkdtemp(prefix="pot_spark_stream_ckpt_", dir=ckpt_base)
+    if parts is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    ckpt_dir = checkpoint_dir()
     try:
         q = (
             plan.writeStream.outputMode(mode)
@@ -2243,5 +1813,5 @@ def run_streaming_query(
             q.awaitTermination(timeout_s)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        _shutil.rmtree(ckpt_dir, ignore_errors=True)
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
     return spark.table(sink)

@@ -7,13 +7,6 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# transformWithState's JVM-spawned driver worker resolves google.protobuf
-# from the env PYTHONPATH only — bridge a vendored runtime in BEFORE any
-# test launches the JVM (no-op when protobuf is pip-installed or absent)
-from pot_spark.streaming.protobuf_compat import bootstrap_env  # noqa: E402
-
-bootstrap_env()
-
 SF_DIR = os.environ.get("POT_SPARK_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 

@@ -233,36 +233,6 @@ def test_cross_process_race_through_real_client(sdk_env):
         assert json.loads(blob.download_as_bytes())["writer"] == winners[0]
 
 
-def test_shim_survives_protobuf_compat_purge(sdk_env):
-    """Order-dependence guard (round-11 advice): gcs_sdk_shim installs
-    synthetic google.* modules; protobuf_compat.ensure_protobuf()
-    purges google.* from sys.modules while bridging to a vendored
-    runtime. Sharing one process must leave BOTH working: the shim is
-    namespace-shaped (so `import google.protobuf` falls through to the
-    finder instead of "'google' is not a package"), and ensure_protobuf
-    re-installs the shim after its purge."""
-    import importlib
-    import sys
-
-    from pot_spark.streaming.protobuf_compat import ensure_protobuf
-
-    g = sys.modules.get("google")
-    if getattr(g, "__pot_spark_shim__", False):
-        # namespace-package shape: __path__ present, importable spec
-        assert isinstance(g.__path__, list)
-        assert g.__spec__ is not None
-        assert g.__spec__.submodule_search_locations == g.__path__
-
-    mode = ensure_protobuf()
-    # whatever the protobuf outcome, the storage surface must still work
-    storage = importlib.import_module("google.cloud.storage")
-    assert hasattr(storage, "Client")
-    exc = importlib.import_module("google.api_core.exceptions")
-    assert hasattr(exc, "PreconditionFailed")
-    if mode is not None:
-        import google.protobuf  # noqa: F401  (bridged or installed)
-
-
 def test_shim_binds_real_api_core_exception_when_on_disk(sdk_env):
     """Round-12 fidelity upgrade: PyPI is unreachable here (verified:
     'No matching distribution found'), but the gcloud CLI vendors the

@@ -283,48 +283,6 @@ def test_streaming_signature_ingest_matches_batch(spark, sf_dir, tmp_path):
     assert len(store.list_generations("signatures")) >= 2  # multi-epoch
 
 
-def test_transform_with_state_matches_batch(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas twin of the stateful dedup:
-    the StatefulProcessor-based stream equals the batch s_dedup_first."""
-    from pot_spark.streaming.protobuf_compat import ensure_protobuf
-
-    if ensure_protobuf(spark) is None:
-        pytest.skip(
-            "transformWithState speaks protobuf to the JVM state server; "
-            "no pip package and no on-disk runtime to bridge to"
-        )
-    from pot_spark.streaming.runner import (
-        _event_stream,
-        build_stateful_dedup_tws,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = _event_stream(spark, f"{sf_dir}/events.parquet")
-        plan = build_stateful_dedup_tws(stream)
-        q = (
-            plan.writeStream.format("memory")
-            .queryName("tws_dedup")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    streamed = spark.sql("SELECT * FROM tws_dedup")
-    batch = registry.QUERIES["s_dedup_first"](spark, sf_dir)
-    assert _sorted_rows(streamed) == _sorted_rows(batch)
-
-
 def test_native_dedup_collapses_at_least_once_delivery(spark, sf_dir):
     """The replayed source delivers every event twice; the native
     dropDuplicatesWithinWatermark operator must emit each exactly once —
@@ -380,20 +338,19 @@ def test_outer_join_stream_emits_unmatched_signups(spark, sf_dir):
     assert out.count() == batch.count()
 
 
-def test_quota_admits_nothing_twice_under_replay(spark, sf_dir):
-    """The replayed (at-least-once) source delivers every event in TWO
-    microbatches; the quota operator's admitted-id state must grant each
-    key's K slots exactly once — the second delivery emits nothing, so
-    the sink still equals the batch twin."""
-    from pot_spark.streaming.runner import _event_stream, build_stateful_quota
+def _replayed_sink(spark, sf_dir, build, sink):
+    """Run ``build`` over the replayed (at-least-once) events source,
+    which delivers every event in TWO microbatches, in update mode into
+    a memory sink; returns the sink table."""
+    from pot_spark.streaming.runner import _event_stream
 
     stream = _event_stream(spark, f"{sf_dir}/events.parquet", replay=True)
-    plan = build_stateful_quota(stream)
-    spark.catalog.dropTempView("sink_quota_replay")
+    spark.catalog.dropTempView(sink)
     q = (
-        plan.writeStream.outputMode("update")
+        build(stream)
+        .writeStream.outputMode("update")
         .format("memory")
-        .queryName("sink_quota_replay")
+        .queryName(sink)
         .start()
     )
     try:
@@ -401,8 +358,29 @@ def test_quota_admits_nothing_twice_under_replay(spark, sf_dir):
     finally:
         q.stop()
         q.awaitTermination(60)
-    out = spark.table("sink_quota_replay")
+    return spark.table(sink)
+
+
+def test_quota_admits_nothing_twice_under_replay(spark, sf_dir):
+    """The per-key quota operator under the replayed source: its
+    admitted-id state must grant each key's K slots exactly once — the
+    second delivery emits nothing, so the sink still equals the batch
+    twin."""
+    from pot_spark.streaming.runner import build_stateful_quota
+
+    out = _replayed_sink(spark, sf_dir, build_stateful_quota, "sink_quota_replay")
     batch = registry.QUERIES["s_user_quota"](spark, sf_dir)
+    assert _sorted_rows(out) == _sorted_rows(batch)
+
+
+@pytest.mark.parametrize("name", ["s_cdc_compact", "s_dedup_first", "s_user_quota"])
+def test_registered_stateful_admits_nothing_twice_under_replay(spark, sf_dir, name):
+    """The registered (sharded, as shipped) dedup, CDC and quota
+    operators under the replayed source: a redelivered event is already
+    in the state and emits nothing — a replayed record never supersedes
+    an equal one — so the sink still equals the registry twin."""
+    out = _replayed_sink(spark, sf_dir, STATEFUL_BUILDERS[name], f"sink_{name}_replay")
+    batch = registry.QUERIES[name](spark, sf_dir)
     assert _sorted_rows(out) == _sorted_rows(batch)
 
 
@@ -724,195 +702,6 @@ def test_near_dedup_gate_idempotent_under_replay(spark, sf_dir):
     )
     batch = registry.QUERIES["s_dedup_near_gate"](spark, sf_dir)
     assert _sorted_rows(out) == _sorted_rows(batch)
-
-
-def test_quota_tws_matches_batch_under_replay(spark, sf_dir):
-    """The round-9 transformWithState twin of the admission quota
-    (ListState-held grants) equals the batch s_user_quota even when the
-    at-least-once source redelivers every event — a redelivered id is
-    already in the ListState and grants nothing twice."""
-    from pot_spark.streaming.protobuf_compat import ensure_protobuf
-
-    if ensure_protobuf(spark) is None:
-        pytest.skip(
-            "transformWithState speaks protobuf to the JVM state server; "
-            "no pip package and no on-disk runtime to bridge to"
-        )
-    from pot_spark.streaming.runner import (
-        _event_stream,
-        build_stateful_quota_tws,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = _event_stream(spark, f"{sf_dir}/events.parquet", replay=True)
-        plan = build_stateful_quota_tws(stream)
-        spark.catalog.dropTempView("tws_quota")
-        q = (
-            plan.writeStream.format("memory")
-            .queryName("tws_quota")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    streamed = spark.sql("SELECT * FROM tws_quota")
-    batch = registry.QUERIES["s_user_quota"](spark, sf_dir)
-    assert _sorted_rows(streamed) == _sorted_rows(batch)
-
-
-def test_near_dedup_gate_tws_matches_batch(spark, sf_dir):
-    """The admission gate on transformWithState (ListState-held
-    retained signatures, append-only state writes): the rolled-up sink
-    equals the batch twin s_dedup_near_gate — the same contract as the
-    applyInPandasWithState twin, on the Spark 4 API."""
-    from pot_spark.streaming.protobuf_compat import ensure_protobuf
-
-    if ensure_protobuf(spark) is None:
-        pytest.skip(
-            "transformWithState speaks protobuf to the JVM state server; "
-            "no pip package and no on-disk runtime to bridge to"
-        )
-    from pyspark.sql import functions as F
-
-    from pot_spark.streaming.runner import (
-        _doc_stream,
-        build_near_dedup_gate_tws,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = _doc_stream(spark, f"{sf_dir}/documents.parquet")
-        plan = build_near_dedup_gate_tws(stream)
-        spark.catalog.dropTempView("tws_gate")
-        q = (
-            plan.writeStream.format("memory")
-            .queryName("tws_gate")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    out = spark.table("tws_gate").groupBy("doc_id").agg(
-        (1 - F.max("collided")).cast("bigint").alias("admitted")
-    )
-    batch = registry.QUERIES["s_dedup_near_gate"](spark, sf_dir)
-    assert _sorted_rows(out) == _sorted_rows(batch)
-
-
-def test_sim_index_tws_matches_batch_under_replay(spark, sf_dir):
-    """The r10 transformWithState twin of the ANN index maintainer
-    (ListState posting lists, append-only writes): the per-cell final
-    emission equals the batch s_sim_index even when every embedding
-    chunk is redelivered."""
-    from pot_spark.streaming.protobuf_compat import ensure_protobuf
-
-    if ensure_protobuf(spark) is None:
-        pytest.skip(
-            "transformWithState speaks protobuf to the JVM state server; "
-            "no pip package and no on-disk runtime to bridge to"
-        )
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from pot_spark.streaming.runner import _vec_stream, build_sim_index_tws
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = _vec_stream(spark, f"{sf_dir}/embeddings.parquet", replay=True)
-        plan = build_sim_index_tws(stream, spark, sf_dir)
-        spark.catalog.dropTempView("tws_sim_index")
-        q = (
-            plan.writeStream.format("memory")
-            .queryName("tws_sim_index")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    sink = spark.table("tws_sim_index")
-    w = Window.partitionBy("cell").orderBy(F.col("n_members").desc())
-    out = (
-        sink.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    batch = registry.QUERIES["s_sim_index"](spark, sf_dir)
-    assert _sorted_rows(out) == _sorted_rows(batch)
-
-
-def test_cdc_compact_tws_matches_batch_under_replay(spark, sf_dir):
-    """The round-10 transformWithState twin of the CDC compactor:
-    MapState keyed by user_id with event_type -> latest record map
-    entries (completing Value/List/Map state-shape coverage across the
-    TWS twins). The at-least-once source redelivers every event; a
-    replayed older/equal record never supersedes a newer map entry, so
-    the sink still holds exactly the per-key latest snapshot == the
-    batch twin s_cdc_compact."""
-    from pot_spark.streaming.protobuf_compat import ensure_protobuf
-
-    if ensure_protobuf(spark) is None:
-        pytest.skip(
-            "transformWithState speaks protobuf to the JVM state server; "
-            "no pip package and no on-disk runtime to bridge to"
-        )
-    from pot_spark.streaming.runner import (
-        _event_stream,
-        build_stateful_cdc_tws,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = _event_stream(spark, f"{sf_dir}/events.parquet", replay=True)
-        plan = build_stateful_cdc_tws(stream)
-        spark.catalog.dropTempView("tws_cdc")
-        q = (
-            plan.writeStream.format("memory")
-            .queryName("tws_cdc")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    streamed = spark.sql("SELECT * FROM tws_cdc")
-    batch = registry.QUERIES["s_cdc_compact"](spark, sf_dir)
-    assert _sorted_rows(streamed) == _sorted_rows(batch)
 
 
 def test_sim_index_stream_matches_batch_under_replay(spark, sf_dir):

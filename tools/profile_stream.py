@@ -1,6 +1,8 @@
 #!/usr/bin/env python
 """Per-microbatch profile of a streaming query (guide §1): executes the
-same plan run_streaming_query builds, but keeps the handle and dumps each
+plan run_streaming_query runs (runner.streaming_plan: same source,
+builder, output mode, shuffle partitions and checkpoint placement; STREAM_P
+overrides the partition count), but keeps the handle and dumps each
 microbatch's durationMs breakdown (addBatch / getBatch / commitOffsets /
 stateOperators) — where the wall time of the s_*_stream rotation rows goes.
 
@@ -12,6 +14,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -25,79 +28,33 @@ def main() -> None:
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     spark = get_spark("profile_stream")
-    if os.environ.get("STREAM_P"):
-        spark.conf.set("spark.sql.shuffle.partitions", os.environ["STREAM_P"])
-    else:
-        # mirror run_streaming_query's per-plan-class partition policy so
-        # the captured plan/timings match the registered path
-        if name in R.DOC_STATEFUL_BUILDERS:
-            src = f"{sys.argv[2] if len(sys.argv) > 2 else '/root/testdata/sf0.1'}/documents.parquet"
-        elif name in R.VEC_STATEFUL_BUILDERS:
-            src = f"{sys.argv[2] if len(sys.argv) > 2 else '/root/testdata/sf0.1'}/embeddings.parquet"
-        else:
-            src = f"{sys.argv[2] if len(sys.argv) > 2 else '/root/testdata/sf0.1'}/events.parquet"
-        few = name in R.DOC_STATEFUL_BUILDERS or name in R.VEC_STATEFUL_BUILDERS
-        many = name in R.STATEFUL_BUILDERS
-        if few:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                os.environ.get("SPARK_GRAFT_STREAM_PY_PARTITIONS", "8"),
-            )
-        elif not many and hasattr(R, "_stream_shuffle_partitions"):
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(R._stream_shuffle_partitions(src)),
-            )
-    # same source selection as run_streaming_query
-    if name in R.LATE_SPLIT_BUILDERS:
-        stream = R._split_event_stream(spark, f"{sf_dir}/events.parquet")
-    elif name in R.SENTINEL_APPEND_BUILDERS:
-        stream = R._sentinel_event_stream(spark, f"{sf_dir}/events.parquet")
-    elif name in R.DOC_STATEFUL_BUILDERS:
-        stream = R._doc_stream(spark, f"{sf_dir}/documents.parquet")
-    elif name in R.VEC_STATEFUL_BUILDERS:
-        stream = R._vec_stream(spark, f"{sf_dir}/embeddings.parquet")
-    else:
-        stream = R._event_stream(
-            spark, f"{sf_dir}/events.parquet",
-            replay=name in R.REPLAY_APPEND_BUILDERS,
-        )
-    if name in R.DOC_STATEFUL_BUILDERS:
-        plan, mode = R.DOC_STATEFUL_BUILDERS[name](stream), "update"
-    elif name in R.VEC_STATEFUL_BUILDERS:
-        plan, mode = R.VEC_STATEFUL_BUILDERS[name](stream, spark, sf_dir), "update"
-    elif name in R.LATE_SPLIT_BUILDERS:
-        plan, mode = R.LATE_SPLIT_BUILDERS[name](stream), "append"
-    elif name in R.SENTINEL_APPEND_BUILDERS:
-        plan, mode = R.SENTINEL_APPEND_BUILDERS[name](stream), "append"
-    elif name in R.REPLAY_APPEND_BUILDERS:
-        plan, mode = R.REPLAY_APPEND_BUILDERS[name](stream), "append"
-    elif name in R.STATEFUL_BUILDERS:
-        plan, mode = R.STATEFUL_BUILDERS[name](stream), "update"
-    elif name in R.APPEND_BUILDERS:
-        plan, mode = R.APPEND_BUILDERS[name](stream), "append"
-    elif name in R.STATIC_BUILDERS:
-        plan, mode = R.STATIC_BUILDERS[name](stream, spark, sf_dir), "complete"
-    else:
-        plan, mode = R.BUILDERS[name](stream), "complete"
-    t0 = time.perf_counter()
-    q = (
-        plan.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(f"profile_{name}")
-        .start()
-    )
+    plan, mode, parts = R.streaming_plan(spark, name, sf_dir)
+    parts = os.environ.get("STREAM_P") or parts
+    if parts is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    ckpt_dir = R.checkpoint_dir()
     try:
-        q.processAllAvailable()
+        t0 = time.perf_counter()
+        q = (
+            plan.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(f"profile_{name}")
+            .option("checkpointLocation", ckpt_dir)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            wall = time.perf_counter() - t0
+            progress = list(q.recentProgress)
+            plan_out = os.environ.get("STREAM_PLAN_OUT")
+            if plan_out:
+                with open(plan_out, "w") as f:
+                    f.write(q._jsq.explainInternal(False))
+            q.stop()
+            q.awaitTermination(60)
     finally:
-        wall = time.perf_counter() - t0
-        progress = list(q.recentProgress)
-        plan_out = os.environ.get("STREAM_PLAN_OUT")
-        if plan_out:
-            with open(plan_out, "w") as f:
-                f.write(q._jsq.explainInternal(False))
-        q.stop()
-        q.awaitTermination(60)
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
     print(f"\n=== {name}: wall {wall:.2f}s, {len(progress)} progress entries ===")
     for p in progress:
         d = p.get("durationMs", {})
