@@ -16,6 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pot_spark.queries.llm_similarity import _DIM, _as_double, _dot, _norm
 from pot_spark.registry import query
 from pot_spark.tables import load, load_spread
 
@@ -134,25 +135,8 @@ def q_skew_salt_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bit-identical cell rankings.
 # ---------------------------------------------------------------------------
 
-_DIM = 64
 _NPROBE = 2
 _TOPK = 5
-
-
-def _as_double(col: str = "embedding"):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _dot(a: str, b: str):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def _norm(a: str):
-    return F.sqrt(
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
 
 
 @query(

@@ -4,11 +4,20 @@ Streaming.
 The batch queries in pot_spark.queries.streaming_windows use the exact
 window expressions (`F.window`, `F.session_window`) that Structured
 Streaming executes incrementally; this module wires the same plans to a
-streaming source (file source over the events parquet, one batch per
-trigger via maxFilesPerTrigger) and a memory sink, with watermarks for
-state eviction. tests/test_streaming.py asserts the streamed result
-equals the batch result — the contract that lets the engine claim the
-batch oracle verifies the streaming operator.
+streaming source and a memory sink, with watermarks for state eviction.
+tests/test_streaming.py asserts the streamed result equals the batch
+result — the contract that lets the engine claim the batch oracle
+verifies the streaming operator.
+
+Every source is one writer, _file_stream: it writes a list of arrival
+batches (pyarrow tables) as one parquet file each, name and mtime pinned
+to list order, and reads the directory back one file per trigger
+(maxFilesPerTrigger=1), so each list entry is exactly one microbatch.
+The five arrival models are lists over the fixture tables: the whole
+events table once (_event_stream) or twice (replay, at-least-once),
+events then a watermark-flush sentinel (_sentinel_event_stream), the
+interleaved late-data split (_split_event_stream), and ordered
+doc/embedding chunks, optionally replayed (_doc_stream, _vec_stream).
 
 Scale notes: at 100 TB the source becomes Kafka/cloud files with the
 same plan; watermark bounds state size; session windows use the built-in
@@ -19,10 +28,19 @@ session_window state merger; sinks become exactly-once via foreachBatch
 from __future__ import annotations
 
 import os
+import sys
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# Python workers unpickle every stateful handler built here. cloudpickle
+# ships a module-level function it can import by reference, so a handler
+# calling this module's helpers (_prune_stale_bands, the shard-state
+# codec) would fail on a worker that cannot import pot_spark — a driver
+# that put the repo on its own sys.path only. Ship them by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -36,39 +54,87 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
-def _event_stream(
-    spark: SparkSession, events_file: str, replay: bool = False
+def _file_stream(
+    spark: SparkSession, schema: T.StructType, batches: list, tag: str
 ) -> DataFrame:
-    """events.parquet as a file-source stream, `ts` normalised to
-    microsecond TimestampType exactly as pot_spark.tables._load_events
-    does for the batch path (fixture stores timestamp[us], read NTZ then
-    cast under the UTC-pinned session). The file source needs a directory
-    (some stateful plans re-resolve basePath), so the single parquet file
-    is exposed through a temp dir symlink. With ``replay=True`` the file
-    is linked TWICE, so the source delivers every event at-least-once
-    across two microbatches — the delivery model a dedup operator must
-    collapse back to exactly-once."""
+    """A file-source stream delivering each pyarrow table in ``batches``
+    as exactly one microbatch, in list order. Order is pinned by both
+    file name and mtime (the file source sorts its listing by
+    modification time). Every mtime lies safely in the past: a file
+    stamped "now" can race the source's first directory listing within
+    the same clock second and never be delivered. An empty table is
+    still a file, hence still a (zero-row) microbatch."""
     import atexit
-    import os
     import shutil
     import tempfile
+    import time
 
-    stream_dir = tempfile.mkdtemp(prefix="pot_spark_stream_")
+    import pyarrow.parquet as pq
+
+    stream_dir = tempfile.mkdtemp(prefix=f"pot_spark_stream_{tag}_")
     atexit.register(shutil.rmtree, stream_dir, ignore_errors=True)
-    os.symlink(events_file, os.path.join(stream_dir, "events.parquet"))
-    if replay:
-        os.symlink(events_file, os.path.join(stream_dir, "events_replay.parquet"))
-    raw = (
-        spark.readStream.schema(EVENTS_SCHEMA)
+    first = time.time() - 20 * (len(batches) + 6)
+    for i, part in enumerate(batches):
+        path = os.path.join(stream_dir, f"{i:02d}-{tag}.parquet")
+        pq.write_table(part, path)
+        os.utime(path, (first + 20 * i, first + 20 * i))
+    return (
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stream_dir)
     )
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _events(spark: SparkSession, batches: list) -> DataFrame:
+    """Event batches as a stream, `ts` normalised to microsecond
+    TimestampType exactly as pot_spark.tables._load_events does for the
+    batch path (the fixture stores timestamp[us], read NTZ then cast
+    under the UTC-pinned session)."""
+    stream = _file_stream(spark, EVENTS_SCHEMA, batches, "events")
+    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _flush_row(t) -> list:
+    """The ``__flush__`` sentinel batch for events table ``t``: one row
+    30 days past max(ts), so the watermark passes every real event and
+    the no-data microbatch flushes the remaining state. A zero-row table
+    has nothing to flush: no batch."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    max_ts = pc.max(t.column("ts")).as_py()
+    if max_ts is None:
+        return []
+    row = {
+        "event_id": [pc.max(t.column("event_id")).as_py() + 1],
+        "ts": [max_ts + datetime.timedelta(days=30)],
+        "user_id": [0],
+        "event_type": ["__flush__"],
+        "value": [0.0],
+        "props": [None],
+    }
+    cols = {f.name: row[f.name] for f in t.schema}
+    return [pa.Table.from_pydict(cols, schema=t.schema)]
+
+
+def _event_stream(
+    spark: SparkSession, events_file: str, replay: bool = False
+) -> DataFrame:
+    """events.parquet as one microbatch. With ``replay=True`` the table
+    is delivered TWICE, in two microbatches, so the source delivers every
+    event at-least-once — the delivery model a dedup operator must
+    collapse back to exactly-once."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(events_file)
+    return _events(spark, [t, t] if replay else [t])
 
 
 def _sentinel_event_stream(spark: SparkSession, events_file: str) -> DataFrame:
     """The events table delivered COMPLETE in one microbatch, followed by
-    one ``__flush__`` sentinel batch 30 days past max(ts).
+    the ``__flush__`` sentinel batch (_flush_row).
 
     This is the delivery model for operators whose output is only
     complete once the watermark passes every event (outer stream-stream
@@ -80,47 +146,10 @@ def _sentinel_event_stream(spark: SparkSession, events_file: str) -> DataFrame:
     oracle is therefore the PLAIN batch join — no watermark boundary to
     model (contrast _split_event_stream, which exists to test the
     late-drop boundary itself)."""
-    import atexit
-    import datetime
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    stream_dir = tempfile.mkdtemp(prefix="pot_spark_stream_flush_")
-    atexit.register(shutil.rmtree, stream_dir, ignore_errors=True)
     t = pq.read_table(events_file)
-    batches = [t]
-    max_ts = pc.max(t.column("ts")).as_py()
-    if max_ts is not None:  # zero-row source: nothing to flush
-        flush_row = {
-            "event_id": [pc.max(t.column("event_id")).as_py() + 1],
-            "ts": [max_ts + datetime.timedelta(days=30)],
-            "user_id": [0],
-            "event_type": ["__flush__"],
-            "value": [0.0],
-            "props": [None],
-        }
-        batches.append(
-            pa.Table.from_pydict(
-                {f.name: flush_row[f.name] for f in t.schema}, schema=t.schema
-            )
-        )
-    now = _time.time()  # mtimes in the past: see _split_event_stream
-    for i, part in enumerate(batches):
-        path = os.path.join(stream_dir, f"{i:02d}-batch.parquet")
-        pq.write_table(part, path)
-        os.utime(path, (now - 120 + i * 20, now - 120 + i * 20))
-    raw = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stream_dir)
-    )
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return _events(spark, [t, *_flush_row(t)])
 
 
 def _split_event_stream(spark: SparkSession, events_file: str) -> DataFrame:
@@ -138,64 +167,17 @@ def _split_event_stream(spark: SparkSession, events_file: str) -> DataFrame:
       threshold for the lagging batch;
     - microbatch 3: odd event_ids (a lagging partition replay — most of
       it arrives long after the watermark passed its event times);
-    - microbatch 4: one ``__flush__`` sentinel 30 days past max(ts),
-      advancing the watermark beyond every real window's end so append
-      mode emits all surviving windows before the stream stops (without
-      it, windows newer than final-watermark stay in state forever).
-
-    File order is pinned by both name and mtime (the file source sorts
-    its listing by modification time)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
-    import pyarrow as pa
+    - microbatch 4: the ``__flush__`` sentinel (_flush_row), advancing
+      the watermark beyond every real window's end so append mode emits
+      all surviving windows before the stream stops (without it,
+      windows newer than final-watermark stay in state forever)."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    stream_dir = tempfile.mkdtemp(prefix="pot_spark_stream_late_")
-    atexit.register(shutil.rmtree, stream_dir, ignore_errors=True)
     t = pq.read_table(events_file)
-    odd_mask = pc.equal(
-        pc.bit_wise_and(t.column("event_id"), pa.scalar(1, pa.int64())),
-        pa.scalar(1, pa.int64()),
-    )
-    batches = [t.filter(pc.invert(odd_mask)), t.schema.empty_table(), t.filter(odd_mask)]
-    max_ts = pc.max(t.column("ts")).as_py()
-    import datetime
-
-    # a zero-row source has no windows to flush (pc.max is None): skip
-    # the sentinel and let the empty batches stream through
-    if max_ts is not None:
-        flush_row = {
-            "event_id": [pc.max(t.column("event_id")).as_py() + 1],
-            "ts": [max_ts + datetime.timedelta(days=30)],
-            "user_id": [0],
-            "event_type": ["__flush__"],
-            "value": [0.0],
-            "props": [None],
-        }
-        batches.append(
-            pa.Table.from_pydict(
-                {f.name: flush_row[f.name] for f in t.schema}, schema=t.schema
-            )
-        )
-    # all mtimes safely in the past: a file stamped "now" can race the
-    # source's first directory listing within the same clock second and
-    # never be delivered
-    now = _time.time()
-    for i, part in enumerate(batches):
-        path = os.path.join(stream_dir, f"{i:02d}-batch.parquet")
-        pq.write_table(part, path)
-        os.utime(path, (now - 120 + i * 20, now - 120 + i * 20))
-    raw = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stream_dir)
-    )
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    is_odd = pc.equal(pc.bit_wise_and(t.column("event_id"), 1), 1)
+    even, odd = t.filter(pc.invert(is_odd)), t.filter(is_odd)
+    return _events(spark, [even, t.schema.empty_table(), odd, *_flush_row(t)])
 
 
 def build_watermark_late(stream: DataFrame) -> DataFrame:
@@ -291,6 +273,34 @@ def build_session(stream: DataFrame) -> DataFrame:
     )
 
 
+def _decode_shard(state, schema: T.StructType, cols: list[str]):
+    """A shard's state row — one array per field of ``schema``, parallel
+    across the shard's keys — as one typed pandas frame: column
+    ``cols[i]`` holds field i, int64 for a LongType element and object
+    otherwise. An absent state decodes to the same columns, no rows."""
+    import pandas as pd
+
+    arrays = state.get if state.exists else [[]] * len(cols)
+    return pd.DataFrame(
+        {
+            c: pd.array(a, dtype=_shard_dtype(f))
+            for c, a, f in zip(cols, arrays, schema.fields)
+        }
+    )
+
+
+def _encode_shard(frame, schema: T.StructType, cols: list[str]) -> tuple:
+    """The state row for ``frame``: _decode_shard's inverse."""
+    return tuple(
+        frame[c].astype(_shard_dtype(f)).tolist()
+        for c, f in zip(cols, schema.fields)
+    )
+
+
+def _shard_dtype(field: T.StructField):
+    return "int64" if field.dataType.elementType == T.LongType() else object
+
+
 def build_stateful_dedup(
     stream: DataFrame, n_shards: int | None = None
 ) -> DataFrame:
@@ -334,21 +344,10 @@ def build_stateful_dedup(
                 T.StructField("bests", T.ArrayType(T.LongType())),
             ]
         )
+        state_cols = key_cols + ["best"]
 
         def sharded_fn(key, pdf_iter, state: GroupState):
-            if state.exists:
-                u, t, b = state.get
-                held = pd.DataFrame(
-                    {
-                        "user_id": pd.array(u, dtype="int64"),
-                        "event_type": pd.array(t, dtype=object),
-                        "best": pd.array(b, dtype="int64"),
-                    }
-                )
-            else:
-                held = pd.DataFrame(
-                    columns=["user_id", "event_type", "best"]
-                )
+            held = _decode_shard(state, shard_state_schema, state_cols)
             batch = pd.concat(list(pdf_iter), ignore_index=True)
             # per-key batch minimum WITH its row (stable sort: the same
             # row the per-key loop's strict < would have kept).
@@ -382,13 +381,7 @@ def build_stateful_dedup(
                     .groupby(key_cols, as_index=False)
                     .agg(best=("best", "min"))
                 )
-                state.update(
-                    (
-                        merged["user_id"].astype("int64").tolist(),
-                        merged["event_type"].tolist(),
-                        merged["best"].astype("int64").tolist(),
-                    )
-                )
+                state.update(_encode_shard(merged, shard_state_schema, state_cols))
 
         sharded = stream.withColumn(
             "shard",
@@ -486,22 +479,10 @@ def build_stateful_cdc(
                 T.StructField("event_ids", T.ArrayType(T.LongType())),
             ]
         )
+        state_cols = key_cols + ["h_ts", "h_eid"]
 
         def sharded_fn(key, pdf_iter, state: GroupState):
-            if state.exists:
-                u, t, ts, e = state.get
-                held = pd.DataFrame(
-                    {
-                        "user_id": pd.array(u, dtype="int64"),
-                        "event_type": pd.array(t, dtype=object),
-                        "h_ts": pd.array(ts, dtype="int64"),
-                        "h_eid": pd.array(e, dtype="int64"),
-                    }
-                )
-            else:
-                held = pd.DataFrame(
-                    columns=["user_id", "event_type", "h_ts", "h_eid"]
-                )
+            held = _decode_shard(state, shard_state_schema, state_cols)
             batch = pd.concat(list(pdf_iter), ignore_index=True)
             # drop_duplicates, NOT groupby().last(): last() skips NaN
             # PER COLUMN, so a null-valued newest row would silently
@@ -545,14 +526,7 @@ def build_stateful_cdc(
                     .groupby(key_cols, as_index=False)
                     .last()
                 )
-                state.update(
-                    (
-                        merged["user_id"].astype("int64").tolist(),
-                        merged["event_type"].tolist(),
-                        merged["h_ts"].astype("int64").tolist(),
-                        merged["h_eid"].astype("int64").tolist(),
-                    )
-                )
+                state.update(_encode_shard(merged, shard_state_schema, state_cols))
 
         sharded = stream.withColumn(
             "shard",
@@ -669,26 +643,13 @@ def build_stateful_daily_dedup(
             ]
         )
         key_cols = ["user_id", "event_type", "day_bucket"]
+        state_cols = key_cols + ["best", "n"]
 
         def sharded_fn(key, pdf_iter, state: GroupState):
             if state.hasTimedOut:
                 state.remove()  # watermark passed every held day
                 return
-            if state.exists:
-                u, t, d, b, n = state.get
-                held = pd.DataFrame(
-                    {
-                        "user_id": pd.array(u, dtype="int64"),
-                        "event_type": pd.array(t, dtype=object),
-                        "day_bucket": pd.array(d, dtype="int64"),
-                        "best": pd.array(b, dtype="int64"),
-                        "n": pd.array(n, dtype="int64"),
-                    }
-                )
-            else:
-                held = pd.DataFrame(
-                    columns=["user_id", "event_type", "day_bucket", "best", "n"]
-                )
+            held = _decode_shard(state, shard_state_schema, state_cols)
             batch = pd.concat(list(pdf_iter), ignore_index=True)
             g = batch.groupby(key_cols, as_index=False).agg(
                 best=("event_id", "min"), n=("event_id", "size")
@@ -719,15 +680,7 @@ def build_stateful_daily_dedup(
             if len(keep) == 0:
                 state.remove()
                 return
-            state.update(
-                (
-                    keep["user_id"].astype("int64").tolist(),
-                    keep["event_type"].tolist(),
-                    keep["day_bucket"].astype("int64").tolist(),
-                    keep["best"].astype("int64").tolist(),
-                    keep["n"].astype("int64").tolist(),
-                )
-            )
+            state.update(_encode_shard(keep, shard_state_schema, state_cols))
             # whole-shard backstop: fire once the watermark passes the
             # newest held day (must stay strictly above the watermark)
             ts = int((int(keep["day_bucket"].max()) + 1) * 86400000 + 3600000)
@@ -954,47 +907,30 @@ EMB_SCHEMA = T.StructType(
 )
 
 
+def _chunks(path: str, key: str, n_chunks: int, replay: bool) -> list:
+    """The table at ``path`` sorted by ``key`` and cut into ``n_chunks``
+    ordered slices; with ``replay`` the whole sequence is delivered a
+    second time after the first full pass (at-least-once)."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path).sort_by(key)
+    step = -(-max(1, t.num_rows) // n_chunks)
+    return [t.slice(i * step, step) for i in range(n_chunks)] * (2 if replay else 1)
+
+
 def _vec_stream(
     spark: SparkSession,
     emb_file: str,
     n_chunks: int = 3,
     replay: bool = False,
 ) -> DataFrame:
-    """embeddings.parquet as a file-source stream delivered across
-    ``n_chunks`` microbatches in vec_id order (name + mtime pinned, the
-    _doc_stream trick) — the arrival model of a continuously-embedding
-    ingest pipeline feeding an ANN index. With ``replay=True`` every
-    chunk is delivered a second time after the first full pass (the
+    """embeddings.parquet delivered across ``n_chunks`` microbatches in
+    vec_id order — the arrival model of a continuously-embedding ingest
+    pipeline feeding an ANN index. With ``replay=True`` every chunk is
+    delivered a second time after the first full pass (the
     at-least-once model the index's membership dedup must absorb)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    stream_dir = tempfile.mkdtemp(prefix="pot_spark_stream_vecs_")
-    atexit.register(shutil.rmtree, stream_dir, ignore_errors=True)
-    t = pq.read_table(emb_file)
-    t = t.take(pc.sort_indices(t, sort_keys=[("vec_id", "ascending")]))
-    n = max(1, t.num_rows)
-    step = (n + n_chunks - 1) // n_chunks
-    now = _time.time()
-    passes = 2 if replay else 1
-    for p in range(passes):
-        for i in range(n_chunks):
-            part = t.slice(i * step, step)
-            seq = p * n_chunks + i
-            path = os.path.join(stream_dir, f"{seq:02d}-vecs.parquet")
-            pq.write_table(part, path)
-            os.utime(path, (now - 240 + seq * 20, now - 240 + seq * 20))
-    return (
-        spark.readStream.schema(EMB_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stream_dir)
-    )
+    batches = _chunks(emb_file, "vec_id", n_chunks, replay)
+    return _file_stream(spark, EMB_SCHEMA, batches, "vecs")
 
 
 def build_sim_index(
@@ -1102,46 +1038,17 @@ def _doc_stream(
     n_chunks: int = 3,
     replay: bool = False,
 ) -> DataFrame:
-    """documents.parquet as a file-source stream delivered in doc_id
-    order across ``n_chunks`` microbatches (name + mtime pinned, the
-    _split_event_stream trick) — the arrival model of a continuous
-    crawl where doc_id is the ingest sequence number. The admission
-    gate's stream==batch contract needs ordered delivery: 'earlier' in
-    the batch oracle is a doc_id comparison, so the stream must not
-    deliver a later doc before an earlier one ACROSS batches (within a
-    batch the operator sorts). With ``replay=True`` every chunk is
-    delivered a second time after the first full pass — the
-    at-least-once delivery model the gate's verdicts must be idempotent
-    under."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    stream_dir = tempfile.mkdtemp(prefix="pot_spark_stream_docs_")
-    atexit.register(shutil.rmtree, stream_dir, ignore_errors=True)
-    t = pq.read_table(docs_file)
-    t = t.take(pc.sort_indices(t, sort_keys=[("doc_id", "ascending")]))
-    n = max(1, t.num_rows)
-    step = (n + n_chunks - 1) // n_chunks
-    now = _time.time()
-    passes = 2 if replay else 1
-    for p in range(passes):
-        for i in range(n_chunks):
-            part = t.slice(i * step, step)
-            seq = p * n_chunks + i
-            path = os.path.join(stream_dir, f"{seq:02d}-docs.parquet")
-            pq.write_table(part, path)
-            os.utime(path, (now - 240 + seq * 20, now - 240 + seq * 20))
-    return (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stream_dir)
-    )
+    """documents.parquet delivered in doc_id order across ``n_chunks``
+    microbatches — the arrival model of a continuous crawl where doc_id
+    is the ingest sequence number. The admission gate's stream==batch
+    contract needs ordered delivery: 'earlier' in the batch oracle is a
+    doc_id comparison, so the stream must not deliver a later doc before
+    an earlier one ACROSS batches (within a batch the operator sorts).
+    With ``replay=True`` every chunk is delivered a second time after
+    the first full pass — the at-least-once delivery model the gate's
+    verdicts must be idempotent under."""
+    batches = _chunks(docs_file, "doc_id", n_chunks, replay)
+    return _file_stream(spark, DOCS_SCHEMA, batches, "docs")
 
 
 def _gate_bands(stream: DataFrame) -> DataFrame:

@@ -785,3 +785,86 @@ def test_near_dedup_gate_to_pot_exactly_once(spark, sf_dir, tmp_path):
     gens = store.list_generations("gate/verdicts")
     assert len(gens) >= 1
     assert _epoch_done(store, "gate/verdicts", 0)
+
+
+@pytest.mark.parametrize(
+    "source,kwargs,table,expected",
+    [
+        ("_event_stream", {}, "events", [1000]),
+        ("_event_stream", {"replay": True}, "events", [1000, 1000]),
+        ("_sentinel_event_stream", {}, "events", [1000, 1]),
+        ("_split_event_stream", {}, "events", [500, 0, 500, 1]),
+        ("_doc_stream", {}, "documents", [167, 167, 166]),
+        ("_doc_stream", {"replay": True}, "documents", [167, 167, 166] * 2),
+        ("_vec_stream", {}, "embeddings", [167, 167, 166]),
+        ("_vec_stream", {"replay": True}, "embeddings", [167, 167, 166] * 2),
+    ],
+    ids=[
+        "event", "event-replay", "sentinel", "split",
+        "doc", "doc-replay", "vec", "vec-replay",
+    ],
+)
+def test_arrival_model_batch_boundaries(spark, sf_dir, source, kwargs, table, expected):
+    """Each runner source's arrival model, read off the engine's own
+    progress records through a pass-through sink: one microbatch per
+    arrival batch with the sf0.001 fixture's row counts — the whole
+    table once or twice (replay), the +1 flush sentinel, the split's
+    even / empty primer / odd / sentinel sequence, and the ordered
+    doc/vec chunks repeated once per pass."""
+    from pot_spark.streaming import runner
+
+    stream = getattr(runner, source)(spark, f"{sf_dir}/{table}.parquet", **kwargs)
+    sink = f"sink_arrival_{source}_{len(expected)}"
+    spark.catalog.dropTempView(sink)
+    q = stream.writeStream.format("memory").queryName(sink).start()
+    try:
+        q.processAllAvailable()
+        got = [p["numInputRows"] for p in q.recentProgress]
+    finally:
+        q.stop()
+        q.awaitTermination(60)
+    assert got == expected
+    assert spark.table(sink).count() == sum(expected)
+
+
+def test_near_dedup_stream_runs_where_workers_cannot_import_pot_spark(
+    sf_dir, tmp_path
+):
+    """The external driver's posture: a fresh process outside the repo,
+    the repo on the driver's sys.path only (no PYTHONPATH) and a vanilla
+    SparkSession, so Python workers cannot import pot_spark. Every
+    stateful handler must unpickle there; the sharded gate's handler
+    calls runner's module-level helpers, which must travel by value."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        import __spark_entry__ as mod
+        from pyspark.sql import SparkSession
+        spark = (SparkSession.builder.master("local[2]")
+                 .config("spark.sql.session.timeZone", "UTC")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        df = mod.queries()["s_dedup_near_stream"](spark, {sf_dir!r})
+        print("ROWS", df.count())
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    p = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    errors = [ln for ln in p.stderr.splitlines() if "Error" in ln]
+    assert p.returncode == 0, errors[:5] or p.stderr[-4000:]
+    rows = [ln for ln in p.stdout.splitlines() if ln.startswith("ROWS ")]
+    assert rows and int(rows[-1].split()[1]) > 0, p.stdout[-2000:]

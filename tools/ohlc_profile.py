@@ -12,7 +12,7 @@ streaming machinery (state store commit + complete-mode driver
 collection) is a measured number, not a guess. Findings land in
 SCALE.md ("s_ohlc_stream decomposition").
 
-Usage: python tools/ohlc_profile.py
+Usage: python tools/ohlc_profile.py [sf_dir ...]  (default: the two above)
 """
 
 from __future__ import annotations
@@ -29,6 +29,7 @@ def profile(spark, sf_dir: str) -> dict:
     from pot_spark import registry
     from pot_spark.streaming.runner import _event_stream, build_ohlc
 
+    registry.load_all_query_modules()
     t0 = time.perf_counter()
     registry.QUERIES["q_ohlc_bars"](spark, sf_dir).write.format("noop").mode(
         "overwrite"
@@ -85,7 +86,8 @@ def main() -> None:
 
     spark = get_spark("ohlc_profile")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    out = [profile(spark, d) for d in ("/root/testdata/sf0.1", "/tmp/sf1_true")]
+    sf_dirs = sys.argv[1:] or ["/root/testdata/sf0.1", "/tmp/sf1_true"]
+    out = [profile(spark, d) for d in sf_dirs]
     print(json.dumps(out, indent=1))
 
 
