@@ -9,15 +9,22 @@ tests/test_streaming.py asserts the streamed result equals the batch
 result — the contract that lets the engine claim the batch oracle
 verifies the streaming operator.
 
-Every source is one writer, _file_stream: it writes a list of arrival
-batches (pyarrow tables) as one parquet file each, name and mtime pinned
-to list order, and reads the directory back one file per trigger
-(maxFilesPerTrigger=1), so each list entry is exactly one microbatch.
-The five arrival models are lists over the fixture tables: the whole
-events table once (_event_stream) or twice (replay, at-least-once),
-events then a watermark-flush sentinel (_sentinel_event_stream), the
-interleaved late-data split (_split_event_stream), and ordered
-doc/embedding chunks, optionally replayed (_doc_stream, _vec_stream).
+Every source is one writer, _file_stream: it lays a list of arrival
+batches (pyarrow tables, or a fixture file copied as is) out as one
+parquet file each, name and mtime pinned to list order, and reads the
+directory back one file per trigger (maxFilesPerTrigger=1), so each list
+entry is exactly one microbatch. The five arrival models are lists over
+the fixture tables: the whole events file once (_event_stream) or twice
+(replay, at-least-once), the events file then a watermark-flush sentinel
+(_sentinel_event_stream), the interleaved late-data split
+(_split_event_stream), and ordered doc/embedding chunks, optionally
+replayed (_doc_stream, _vec_stream).
+
+Python workers unpickle each stateful handler, and the handlers call
+this module's functions (the shard-state codec, _prune_stale_bands),
+which cloudpickle ships by reference; streaming_plan therefore ships
+the package to the workers first (kv.datasource._ship_package), so a
+stream runs on a session whose workers cannot import pot_spark.
 
 Scale notes: at 100 TB the source becomes Kafka/cloud files with the
 same plan; watermark bounds state size; session windows use the built-in
@@ -28,19 +35,10 @@ session_window state merger; sinks become exactly-once via foreachBatch
 from __future__ import annotations
 
 import os
-import sys
 
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-# Python workers unpickle every stateful handler built here. cloudpickle
-# ships a module-level function it can import by reference, so a handler
-# calling this module's helpers (_prune_stale_bands, the shard-state
-# codec) would fail on a worker that cannot import pot_spark — a driver
-# that put the repo on its own sys.path only. Ship them by value.
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -55,15 +53,17 @@ EVENTS_SCHEMA = T.StructType(
 
 
 def _file_stream(
-    spark: SparkSession, schema: T.StructType, batches: list, tag: str
+    spark: SparkSession, schema: T.StructType, batches: list
 ) -> DataFrame:
-    """A file-source stream delivering each pyarrow table in ``batches``
-    as exactly one microbatch, in list order. Order is pinned by both
-    file name and mtime (the file source sorts its listing by
-    modification time). Every mtime lies safely in the past: a file
-    stamped "now" can race the source's first directory listing within
-    the same clock second and never be delivered. An empty table is
-    still a file, hence still a (zero-row) microbatch."""
+    """A file-source stream delivering each entry of ``batches`` as
+    exactly one microbatch, in list order. An entry is a pyarrow table,
+    written as one parquet file, or the path of a parquet file, copied
+    byte for byte (no decode, and the source's own row groups). Order is
+    pinned by both file name and mtime (the file source sorts its
+    listing by modification time). Every mtime lies safely in the past:
+    a file stamped "now" can race the source's first directory listing
+    within the same clock second and never be delivered. An empty table
+    is still a file, hence still a (zero-row) microbatch."""
     import atexit
     import shutil
     import tempfile
@@ -71,12 +71,15 @@ def _file_stream(
 
     import pyarrow.parquet as pq
 
-    stream_dir = tempfile.mkdtemp(prefix=f"pot_spark_stream_{tag}_")
+    stream_dir = tempfile.mkdtemp(prefix="pot_spark_stream_")
     atexit.register(shutil.rmtree, stream_dir, ignore_errors=True)
     first = time.time() - 20 * (len(batches) + 6)
     for i, part in enumerate(batches):
-        path = os.path.join(stream_dir, f"{i:02d}-{tag}.parquet")
-        pq.write_table(part, path)
+        path = os.path.join(stream_dir, f"{i:02d}.parquet")
+        if isinstance(part, str):
+            shutil.copyfile(part, path)
+        else:
+            pq.write_table(part, path)
         os.utime(path, (first + 20 * i, first + 20 * i))
     return (
         spark.readStream.schema(schema)
@@ -90,7 +93,7 @@ def _events(spark: SparkSession, batches: list) -> DataFrame:
     TimestampType exactly as pot_spark.tables._load_events does for the
     batch path (the fixture stores timestamp[us], read NTZ then cast
     under the UTC-pinned session)."""
-    stream = _file_stream(spark, EVENTS_SCHEMA, batches, "events")
+    stream = _file_stream(spark, EVENTS_SCHEMA, batches)
     return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
@@ -126,10 +129,7 @@ def _event_stream(
     is delivered TWICE, in two microbatches, so the source delivers every
     event at-least-once — the delivery model a dedup operator must
     collapse back to exactly-once."""
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(events_file)
-    return _events(spark, [t, t] if replay else [t])
+    return _events(spark, [events_file] * (2 if replay else 1))
 
 
 def _sentinel_event_stream(spark: SparkSession, events_file: str) -> DataFrame:
@@ -148,8 +148,7 @@ def _sentinel_event_stream(spark: SparkSession, events_file: str) -> DataFrame:
     late-drop boundary itself)."""
     import pyarrow.parquet as pq
 
-    t = pq.read_table(events_file)
-    return _events(spark, [t, *_flush_row(t)])
+    return _events(spark, [events_file, *_flush_row(pq.read_table(events_file))])
 
 
 def _split_event_stream(spark: SparkSession, events_file: str) -> DataFrame:
@@ -930,7 +929,7 @@ def _vec_stream(
     delivered a second time after the first full pass (the
     at-least-once model the index's membership dedup must absorb)."""
     batches = _chunks(emb_file, "vec_id", n_chunks, replay)
-    return _file_stream(spark, EMB_SCHEMA, batches, "vecs")
+    return _file_stream(spark, EMB_SCHEMA, batches)
 
 
 def build_sim_index(
@@ -1048,7 +1047,7 @@ def _doc_stream(
     the first full pass — the at-least-once delivery model the gate's
     verdicts must be idempotent under."""
     batches = _chunks(docs_file, "doc_id", n_chunks, replay)
-    return _file_stream(spark, DOCS_SCHEMA, batches, "docs")
+    return _file_stream(spark, DOCS_SCHEMA, batches)
 
 
 def _gate_bands(stream: DataFrame) -> DataFrame:
@@ -1638,6 +1637,9 @@ def streaming_plan(
       partition (FOUR for a join) and commit cost is superlinear in
       concurrent commits. Size-derived small value
       (_stream_shuffle_partitions): s_outer_join 30.1s -> 9.9s."""
+    from pot_spark.kv.datasource import _ship_package
+
+    _ship_package(spark)  # the handlers' module-level calls, see above
     events = f"{sf_dir}/events.parquet"
     if name in DOC_STATEFUL_BUILDERS:
         stream = _doc_stream(spark, f"{sf_dir}/documents.parquet")

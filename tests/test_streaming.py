@@ -834,7 +834,8 @@ def test_near_dedup_stream_runs_where_workers_cannot_import_pot_spark(
     the repo on the driver's sys.path only (no PYTHONPATH) and a vanilla
     SparkSession, so Python workers cannot import pot_spark. Every
     stateful handler must unpickle there; the sharded gate's handler
-    calls runner's module-level helpers, which must travel by value."""
+    calls runner's module-level helpers, which cloudpickle ships by
+    reference, so the stream must ship the package to its workers."""
     import os
     import subprocess
     import sys
